@@ -14,11 +14,17 @@ import org.apache.spark.sql.Row;
  * {@code /root/reference/java/src/main/java/.../Adhesive.java:36-42} and
  * {@code /root/reference/src/jvm.rs:221-238}):
  * <ul>
- *   <li><b>Positional argument access.</b> The engine packs the N declared
- *       arguments of a call {@code f(e1, ..., eN)} into a single struct row;
+ *   <li><b>Positional argument access.</b> The engine hands the N declared
+ *       arguments of a call {@code f(e1, ..., eN)} over as one row;
  *       implementors read them positionally — {@code row.getLong(0)},
  *       {@code row.getLong(1)}, ... — and should not access fields by
  *       name.</li>
+ *   <li><b>The argument row is valid only during the call.</b> The engine
+ *       reuses one row per task and refills it for the next input row, so
+ *       the row must not be kept after the call returns, in a field for
+ *       instance. The result is converted before the next call, so
+ *       returning the row or one of its values is safe.
+ *       {@code row.copy()} returns a row that keeps the values.</li>
  *   <li><b>Null results.</b> Returning Java {@code null} produces a null
  *       output slot for that input row (reference
  *       {@code Adhesive.java:94-99}). Registrations made with
@@ -54,7 +60,7 @@ public abstract class Adhesive implements java.io.Serializable {
      * Check {@code row.isNullAt(i)} before a primitive getter when the input
      * may be null.
      *
-     * @param row the packed argument struct
+     * @param row the arguments, valid only during this call
      * @return the result value (boxed), or {@code null} for a null slot
      */
     public abstract Object compute(Row row);

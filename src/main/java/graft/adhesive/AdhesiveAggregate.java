@@ -8,11 +8,14 @@ import org.apache.spark.sql.Row;
  * enum case, {@code /root/reference/src/fusion.rs:78}). A user supplies a
  * subclass via {@code CREATE AGGREGATE FUNCTION ... LANGUAGE JAVA AS
  * '<source>'} (or {@code LANGUAGE CLASS}/{@code SCALA}) and implements the
- * four classic distributed-aggregation callbacks; the engine runs them
- * through Spark's typed {@code Aggregator} machinery, which means
- * <b>map-side partial aggregation for free</b>: {@code reduce} runs locally
- * per partition and only the small per-partition states cross the shuffle,
- * where {@code merge} combines them — the shape that scales to 100 TB.
+ * four classic distributed-aggregation callbacks; the engine plans them as
+ * a map-side partial aggregation: {@code reduce} runs locally per partition
+ * and only the small per-partition states cross the shuffle, where
+ * {@code merge} combines them — the shape that scales to 100 TB. A
+ * {@code STATE} of BIGINT, INT, SMALLINT, TINYINT, FLOAT, DOUBLE or BOOLEAN
+ * lives in a fixed-width slot of a hash-aggregation buffer; any other
+ * {@code STATE} is held as an object by Spark's object hash aggregation,
+ * which turns sort-based past 128 groups per task.
  *
  * <p>Contract:
  * <ul>
@@ -21,7 +24,10 @@ import org.apache.spark.sql.Row;
  *       {@code RETURNS} type when omitted).</li>
  *   <li><b>{@code reduce(state, input)}</b> — fold one input row into the
  *       state and return the new state. Arguments are read positionally from
- *       {@code input}, exactly like {@link Adhesive#compute}.</li>
+ *       {@code input}, exactly like {@link Adhesive#compute}. The
+ *       {@code input} row is valid only during the call: it may be reused
+ *       for the next input row, so it must not become part of the state;
+ *       {@code input.copy()} returns a row that keeps the values.</li>
  *   <li><b>{@code merge(a, b)}</b> — combine two partial states (across
  *       partitions / shuffle). Must be commutative and associative, and
  *       treat {@code zero()} as the identity — Spark chooses the merge tree

@@ -14,8 +14,12 @@ import org.apache.spark.sql.Row;
  *
  * <p>Contract:
  * <ul>
- *   <li><b>Arguments</b> are read positionally from the packed row, exactly
- *       like {@link Adhesive#compute}.</li>
+ *   <li><b>Arguments</b> are read positionally from the argument row,
+ *       exactly like {@link Adhesive#compute}. The row is valid only during
+ *       the call; the rows returned are converted before the next call, so
+ *       returning the argument row itself is safe, but keeping it after the
+ *       call is not. {@code args.copy()} returns a row that keeps the
+ *       values.</li>
  *   <li><b>Each returned {@code Row}</b> must match the declared
  *       {@code RETURNS TABLE} schema positionally — build them with
  *       {@code org.apache.spark.sql.RowFactory.create(...)}. A {@code null}

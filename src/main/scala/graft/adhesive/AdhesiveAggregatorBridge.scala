@@ -9,12 +9,18 @@ import org.apache.spark.sql.{Encoder, Encoders, Row}
   * [[AdhesiveAggregate]] subclass, materialized lazily per executor JVM
   * from shipped bytecode exactly like the scalar [[AdhesiveUdf]].
   *
-  * Running through `Aggregator` (→ `ScalaAggregator` → `ObjectHashAggregate`
-  * / sort-based fallback) buys the distributed shape for free: `reduce` is
-  * the map-side partial fold, only STATE-typed partials cross the shuffle,
-  * `merge` combines them per group. At 100 TB the shuffle volume is
-  * #groups × sizeof(STATE), independent of input rows — the same contract
-  * as Spark's own sum/avg.
+  * Two plans call these callbacks, chosen by the STATE type:
+  *   - a boxed primitive STATE runs as [[AdhesiveImperativeAggregate]], a
+  *     fixed-width buffer slot under `HashAggregate`;
+  *   - any other STATE runs through this `Aggregator` as a
+  *     `ScalaAggregator` under `ObjectHashAggregate`. That operator turns
+  *     sort-based once a task holds more than
+  *     `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (128)
+  *     groups, and then sorts the task's remaining input.
+  * Either way `reduce` is the map-side partial fold, only STATE-typed
+  * partials cross the shuffle, and `merge` combines them per group. At
+  * 100 TB the shuffle volume is #groups × sizeof(STATE), independent of
+  * input rows — the same contract as Spark's own sum/avg.
   *
   * State and result are boxed values of the declared STATE / RETURNS types
   * (the same matrix as scalar returns: the six scalars plus DATE,

@@ -1,7 +1,7 @@
 package graft.adhesive
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Literal, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -10,8 +10,8 @@ import scala.util.control.NonFatal
 /** Driver-side constant folding for DETERMINISTIC adhesive calls.
   *
   * Spark's own `ConstantFolding` only folds expressions that report
-  * `foldable`, and `ScalaUDF` never does (an arbitrary UDF may close over
-  * mutable state), so `f(1, 2)` is re-evaluated for every row — per-row ×
+  * `foldable`, and [[AdhesiveCall]] never does (an arbitrary body may close
+  * over mutable state), so `f(1, 2)` is re-evaluated for every row — per-row ×
   * per-partition work for a value known at plan time, which at 100 TB is
   * pure waste. The `DETERMINISTIC` declaration in the adhesive DDL is an
   * explicit user contract (the reference's non-Volatile volatility,
@@ -19,8 +19,8 @@ import scala.util.control.NonFatal
   * driver sound. Functions not declared DETERMINISTIC keep Volatile parity:
   * never folded, never CSE'd.
   *
-  * The rule recognizes its own calls by the function closure's type
-  * ([[AdhesiveUdf]]) — other people's ScalaUDFs are left strictly alone. If
+  * The rule folds scalar calls only (an [[AdhesiveCall]] whose function is
+  * an [[AdhesiveUdf]]); table calls stay generators. If
   * the call throws on the constant input, the expression is left unfolded so
   * the error still surfaces at execution, matching unoptimized semantics.
   */
@@ -28,13 +28,13 @@ object AdhesiveConstantFolding extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      case udf: ScalaUDF
-          if udf.udfDeterministic && udf.function.isInstanceOf[AdhesiveUdf] &&
-            udf.children.forall(_.foldable) =>
+      case call: AdhesiveCall
+          if call.udfDeterministic && call.function.isInstanceOf[AdhesiveUdf] &&
+            call.children.forall(_.foldable) =>
         // eval returns the Catalyst-internal value (identity for the
         // BIGINT/INT/FLOAT/DOUBLE return matrix), so construct the Literal
         // directly — Literal.create would re-convert an external value.
-        try Literal(udf.eval(InternalRow.empty), udf.dataType)
-        catch { case NonFatal(_) => udf }
+        try Literal(call.eval(InternalRow.empty), call.dataType)
+        catch { case NonFatal(_) => call }
     }
 }

@@ -1,6 +1,6 @@
 package graft.adhesive
 
-import org.apache.spark.sql.catalyst.expressions.{CreateStruct, Expression, Inline, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Inline}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, OneRowRelation}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
@@ -20,9 +20,10 @@ import org.apache.spark.sql.{Row, SparkSession}
   *     `Signature::exact`, `src/fusion.rs:72`);
   *   - `Volatility::Volatile` ⇒ `.asNondeterministic()` — never
   *     constant-folded or CSE'd (`src/fusion.rs:72`);
-  *   - struct-packed positional arguments: a call `f(e1, …, eN)` packs its
-  *     arguments into one struct and the user reads them positionally from a
-  *     `Row` (`src/jvm.rs:221-238`);
+  *   - positional arguments: a call `f(e1, …, eN)` hands the user one
+  *     `Row` holding its arguments, read positionally
+  *     (`src/jvm.rs:221-238`); the row is reused from call to call
+  *     ([[AdhesiveArgRow]]);
   *   - return-type matrix {BIGINT, INT, FLOAT, DOUBLE} from the reference's
   *     Java bridge (`Adhesive.java:79-199`; anything else is a DDL-time
   *     error there, `src/fusion.rs:86`), extended here until the declared
@@ -39,10 +40,11 @@ object AdhesiveRegistry {
     * four numerics (`Adhesive.java:79-199`; Rust side wires only Int64,
     * `src/fusion.rs:83-91` — "type not supported (to be added)"); STRING,
     * BOOLEAN, DECIMAL(p,s) and ARRAY<T> are the extension beyond it.
-    * Results flow through Spark's CatalystTypeConverters on the ScalaUDF
-    * return path — String → UTF8String, java.math.BigDecimal → Decimal
-    * checked against the declared precision/scale, java.util.List /
-    * arrays → ArrayData — the same conversions any Scala UDF pays.
+    * A primitive result is unboxed; any other flows through Spark's
+    * CatalystTypeConverters ([[AdhesiveCall]]) — String → UTF8String,
+    * java.math.BigDecimal → Decimal checked against the declared
+    * precision/scale, java.util.List / arrays → ArrayData — the same
+    * conversions any Scala UDF pays.
     */
   private val ScalarReturnTypes: Set[DataType] =
     Set(LongType, IntegerType, ShortType, ByteType, FloatType, DoubleType,
@@ -189,7 +191,7 @@ object AdhesiveRegistry {
     // AdhesiveUdf is itself the serializable Row => Any closure (carries
     // only the (fqn, bytecode) pair — see its scaladoc); passing the
     // instance, not a wrapping lambda, lets AdhesiveConstantFolding
-    // recognize adhesive calls in the plan by instance type.
+    // tell scalar calls from table calls.
     val callFn: Row => Any = new AdhesiveUdf(name, fqn, bytecode, nonNullable, jarPath)
 
     val builder = (exprs: Seq[Expression]) => {
@@ -201,24 +203,15 @@ object AdhesiveRegistry {
       val checked = exprs.zip(argTypes).zipWithIndex.map {
         case ((e, dt), i) => StrictArg(e, dt, name, i)
       }
-      // Direct Catalyst ScalaUDF over the packed argument struct. With no
-      // input/output encoders, Spark's CatalystTypeConverters hand the user
-      // a GenericRowWithSchema (positional getters — the reference's row
-      // contract) and convert the boxed result back.
+      // The arguments go straight into a reused argument Row (positional
+      // getters — the reference's row contract).
       // udfDeterministic defaults to false — the reference's
       // Volatility::Volatile (src/fusion.rs:72); DDL can opt in to
       // DETERMINISTIC (needed to call the function directly inside an
       // aggregate, which Spark forbids for nondeterministic expressions).
       // nullable=false mirrors computeNonNull*.
-      ScalaUDF(
-        function = callFn,
-        dataType = returnType,
-        children = Seq(CreateStruct(checked.toList)),
-        inputEncoders = Seq(None),
-        outputEncoder = None,
-        udfName = Some(name),
-        nullable = !nonNullable,
-        udfDeterministic = deterministic)
+      AdhesiveCall(callFn, returnType, checked, name,
+        nullable = !nonNullable, udfDeterministic = deterministic)
     }
     spark.asInstanceOf[ClassicSparkSession]
       .sessionState.functionRegistry
@@ -228,9 +221,11 @@ object AdhesiveRegistry {
   // ---------------------------------------------------------------------
   // CREATE AGGREGATE FUNCTION — the variant the reference never closed
   // (`RegisterFunction::Scalar` is its only enum case, src/fusion.rs:78).
-  // Same compile/mangle/cache/ship pipeline; the data path is a typed
-  // Aggregator (AdhesiveAggregatorBridge) registered through
-  // functions.udaf, so Spark plans map-side partial aggregation.
+  // Same compile/mangle/cache/ship pipeline; the callbacks run through
+  // AdhesiveAggregatorBridge, and Spark plans map-side partial
+  // aggregation. A primitive STATE runs as AdhesiveImperativeAggregate
+  // (HashAggregate); any other as a ScalaAggregator (ObjectHashAggregate,
+  // which turns sort-based past 128 groups per task).
   // ---------------------------------------------------------------------
 
   /** State/return validation for aggregates (same type matrix as scalar
@@ -311,6 +306,7 @@ object AdhesiveRegistry {
       deterministic: Boolean = false): Unit = {
     val bridge = new AdhesiveAggregatorBridge(name, fqn, bytecode, stateType,
       returnType, jarPath)
+    val primitiveState = AdhesiveArgRow.isPrimitive(stateType)
     // The input encoder's N-field struct schema makes the registered
     // function N-ary: ScalaAggregator binds each call argument to one
     // field positionally, and reduce() receives them as the packed Row —
@@ -327,9 +323,9 @@ object AdhesiveRegistry {
     // build (udaf.scalaAggregator passes these encoders unresolved too;
     // the analyzer's ResolveEncodersInScalaAgg rule binds them) — only
     // the argument checking differs.
-    val inputEnc = ExpressionEncoder(inputSchema)
+    lazy val inputEnc = ExpressionEncoder(inputSchema)
     // bufferEncoder is always one of encoderFor's AgnosticEncoders
-    val bufferEnc = ExpressionEncoder(bridge.bufferEncoder
+    lazy val bufferEnc = ExpressionEncoder(bridge.bufferEncoder
       .asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[Any]])
     val builder = (exprs: Seq[Expression]) => {
       if (exprs.length != argTypes.length) {
@@ -350,9 +346,17 @@ object AdhesiveRegistry {
       // re-planned on the assumption of repeatable results; Spark plans
       // nondeterministic aggregate functions fine — only scalar
       // expressions are restricted). Declared DETERMINISTIC opts in.
-      ScalaAggregator[Row, Any, Any](checked.toList, bridge, inputEnc,
-        bufferEnc, nullable = true, isDeterministic = deterministic,
-        aggregatorName = Some(name)): Expression
+      if (primitiveState) {
+        AdhesiveImperativeAggregate(bridge, checked, deterministic): Expression
+      } else {
+        // The ScalaAggregator path exists only for STATE types that do not
+        // fit a fixed-width buffer slot: a variable-length state in an
+        // ImperativeAggregate buffer would force SortAggregate, whereas
+        // ScalaAggregator keeps it as an object in ObjectHashAggregate.
+        ScalaAggregator[Row, Any, Any](checked.toList, bridge, inputEnc,
+          bufferEnc, nullable = true, isDeterministic = deterministic,
+          aggregatorName = Some(name)): Expression
+      }
     }
     spark.asInstanceOf[ClassicSparkSession]
       .sessionState.functionRegistry
@@ -361,8 +365,8 @@ object AdhesiveRegistry {
 
   // ---------------------------------------------------------------------
   // CREATE TABLE FUNCTION — the third UDF variant on the same seam. The
-  // data path is a ScalaUDF returning ARRAY<STRUCT<outSchema>> wrapped in
-  // an Inline generator over OneRowRelation: the analyzer resolves the
+  // data path is an AdhesiveCall returning ARRAY<STRUCT<outSchema>> wrapped
+  // in an Inline generator over OneRowRelation: the analyzer resolves the
   // generator output to the declared TABLE columns, FROM-clause calls
   // evaluate over literals, and LATERAL calls correlate to the outer
   // query — all executing inside the stage like a built-in generator.
@@ -426,13 +430,8 @@ object AdhesiveRegistry {
       val checked = exprs.zip(argTypes).zipWithIndex.map {
         case ((e, dt), i) => StrictArg(e, dt, name, i)
       }
-      val udf = ScalaUDF(
-        function = callFn,
-        dataType = ArrayType(outSchema, containsNull = false),
-        children = Seq(CreateStruct(checked.toList)),
-        inputEncoders = Seq(None),
-        outputEncoder = None,
-        udfName = Some(name),
+      val udf = AdhesiveCall(callFn, ArrayType(outSchema, containsNull = false),
+        checked, name,
         nullable = true, // null/empty list ⇒ no rows (Generate, not outer)
         // table functions are deterministic BY CONTRACT (unlike the
         // scalar path's volatile-parity default): the analyzer rejects

@@ -4,8 +4,8 @@ import org.apache.spark.sql.Row
 
 /** Serializable data path for `CREATE TABLE FUNCTION` — the table twin of
   * [[AdhesiveUdf]]: carries only (fqn, bytecode), materializes the user
-  * [[AdhesiveTableFunction]] lazily per executor JVM, and is invoked as a
-  * `ScalaUDF` returning `ARRAY<STRUCT<...>>` that an `Inline` generator
+  * [[AdhesiveTableFunction]] lazily per executor JVM, and is invoked by an
+  * [[AdhesiveCall]] returning `ARRAY<STRUCT<...>>` that an `Inline` generator
   * fans out into rows — so the function executes inside the stage like
   * any built-in generator, no shuffle of its own.
   */

@@ -16,7 +16,8 @@ import org.apache.spark.sql.api.java.UDF1
   *
   * Invocation granularity matches the reference's effective semantics: one
   * `compute(Row)` call per input row (`Adhesive.java:68-70`), here from
-  * within Spark's whole-stage-generated code with no FFI hop.
+  * within Spark's whole-stage-generated code with no FFI hop
+  * ([[AdhesiveCall]]).
   */
 class AdhesiveUdf(
     val functionName: String,
@@ -26,8 +27,8 @@ class AdhesiveUdf(
     val jarPath: Option[String] = None)
     extends UDF1[Row, Any] with (Row => Any) with Serializable {
 
-  // Function1 view, passed directly as ScalaUDF.function so the optimizer
-  // can recognize adhesive calls by instance type (AdhesiveConstantFolding)
+  // Function1 view, passed directly as AdhesiveCall.function so the
+  // optimizer can tell scalar calls by instance type (AdhesiveConstantFolding)
   override def apply(row: Row): Any = call(row)
 
   @transient private lazy val inst: Adhesive =

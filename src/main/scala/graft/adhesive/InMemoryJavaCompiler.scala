@@ -4,8 +4,9 @@ import java.io.ByteArrayOutputStream
 import java.net.URI
 import javax.tools.JavaFileObject.Kind
 import javax.tools.{
-  DiagnosticCollector, FileObject, ForwardingJavaFileManager, JavaFileManager,
-  JavaFileObject, SimpleJavaFileObject, ToolProvider
+  DiagnosticCollector, FileObject, ForwardingJavaFileManager, JavaCompiler,
+  JavaFileManager, JavaFileObject, SimpleJavaFileObject, StandardJavaFileManager,
+  StandardLocation, ToolProvider
 }
 
 import scala.collection.mutable
@@ -20,6 +21,28 @@ import scala.jdk.CollectionConverters._
   * problem the reference never faced, SURVEY §7.4 H1).
   */
 object InMemoryJavaCompiler {
+
+  private val lock = new Object
+  private var shared: StandardJavaFileManager = _
+
+  /** One standard file manager per JVM, guarded by `lock`. Opening it
+    * indexes every classpath jar (about 290 with the Spark jars), which
+    * costs several times a small compile, so it is opened once and never
+    * closed. The forked JVM's java.class.path carries the Spark jars and
+    * this library's classes, so user source can extend
+    * graft.adhesive.Adhesive and import org.apache.spark.sql.Row.
+    */
+  private def fileManager(compiler: JavaCompiler): StandardJavaFileManager = {
+    if (shared == null) {
+      val fm = compiler.getStandardFileManager(null, null, null)
+      val classPath = System.getProperty("java.class.path")
+        .split(java.io.File.pathSeparator).filter(_.nonEmpty)
+        .map(new java.io.File(_)).toList
+      fm.setLocation(StandardLocation.CLASS_PATH, classPath.asJava)
+      shared = fm
+    }
+    shared
+  }
 
   /** Compile `source` (which must declare class `fqn`). Returns a map of
     * binary class name → bytecode for every emitted class (the declared
@@ -37,42 +60,30 @@ object InMemoryJavaCompiler {
         "Can't compile function: no system Java compiler (JRE instead of JDK?)")
     }
     val diagnostics = new DiagnosticCollector[JavaFileObject]
-    val stdFm = compiler.getStandardFileManager(diagnostics, null, null)
     val out = mutable.Map.empty[String, ByteArrayOutputStream]
-
-    val fm = new ForwardingJavaFileManager[JavaFileManager](stdFm) {
-      override def getJavaFileForOutput(
-          location: JavaFileManager.Location, className: String,
-          kind: Kind, sibling: FileObject): JavaFileObject = {
-        val buf = new ByteArrayOutputStream()
-        out(className) = buf
-        new SimpleJavaFileObject(
-            URI.create(s"mem:///${className.replace('.', '/')}.class"), kind) {
-          override def openOutputStream() = buf
-        }
-      }
-    }
-
     val src = new SimpleJavaFileObject(
         URI.create(s"string:///${fqn.replace('.', '/')}.java"), Kind.SOURCE) {
       override def getCharContent(ignoreEncodingErrors: Boolean): CharSequence =
         source
     }
-
-    // The forked JVM's java.class.path carries the Spark jars and this
-    // library's classes, so user source can extend graft.adhesive.Adhesive
-    // and import org.apache.spark.sql.Row.
-    val options = List("-classpath", System.getProperty("java.class.path"))
-    // try/finally: a throwing getTask/call must still close both managers
-    // (the standard one holds classpath file handles) — repeated failing
-    // DDL on a long-lived driver would otherwise leak them
-    val ok =
-      try compiler.getTask(null, fm, diagnostics, options.asJava, null,
-        List(src).asJava).call()
-      finally {
-        fm.close()
-        stdFm.close()
+    // The standard manager is not thread-safe, so compiles take turns.
+    val ok = lock.synchronized {
+      val fm = new ForwardingJavaFileManager[JavaFileManager](fileManager(compiler)) {
+        override def getJavaFileForOutput(
+            location: JavaFileManager.Location, className: String,
+            kind: Kind, sibling: FileObject): JavaFileObject = {
+          val buf = new ByteArrayOutputStream()
+          out(className) = buf
+          new SimpleJavaFileObject(
+              URI.create(s"mem:///${className.replace('.', '/')}.class"), kind) {
+            override def openOutputStream() = buf
+          }
+        }
+        // the shared manager outlives this compile
+        override def close(): Unit = ()
       }
+      compiler.getTask(null, fm, diagnostics, null, null, List(src).asJava).call()
+    }
 
     if (!ok) {
       val msgs = diagnostics.getDiagnostics.asScala.map(_.toString).mkString("\n")

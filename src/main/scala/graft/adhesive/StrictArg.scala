@@ -29,6 +29,9 @@ case class StrictArg(
   // pass-through: a literal argument stays visibly foldable, so
   // AdhesiveConstantFolding can fold deterministic calls over constants
   override def foldable: Boolean = child.foldable
+  // invisible in plan strings and generated column names: `f(a, b)`
+  override def toString: String = child.toString
+  override def sql: String = child.sql
 
   // Exact on the type lattice, insensitive to containsNull: nullability is
   // a property of the DATA, not the signature — the scalar types in this

@@ -60,11 +60,17 @@ object CorpusCuration {
     * exceptAll folds, so the halved evaluation count is the win).
     */
   private def sameMultiset(a: DataFrame, b: DataFrame): Boolean = {
-    val cols = a.columns.map(col).toSeq
-    a.withColumn("_sign", lit(1L))
-      .unionAll(b.withColumn("_sign", lit(-1L)))
-      .groupBy(cols: _*).agg(sum(col("_sign")).as("_d"))
-      .filter(col("_d") =!= 0L)
+    require(a.columns.toSet == b.columns.toSet,
+      s"sameMultiset: column sets differ: ${a.columns.sorted.mkString(", ")} " +
+        s"vs ${b.columns.sorted.mkString(", ")}")
+    // helper columns named apart from every input column
+    def fresh(base: String): String =
+      Iterator.iterate(base)("_" + _).find(n => !a.columns.contains(n)).get
+    val (sign, d) = (fresh("_sign"), fresh("_d"))
+    a.withColumn(sign, lit(1L))
+      .unionByName(b.withColumn(sign, lit(-1L)))
+      .groupBy(a.columns.map(col).toSeq: _*).agg(sum(col(sign)).as(d))
+      .filter(col(d) =!= 0L)
       .isEmpty
   }
 
@@ -1882,7 +1888,7 @@ object CorpusCuration {
       // two concurrent driver threads so one poller's driver-side
       // planning overlaps the other's executor work (guide §2.6
       // "overlap independent jobs"; profiled r21: 75 sequential jobs,
-      // 7.2 s driver gap). Exceptions propagate through Await.
+      // 7.2 s driver gap). Exceptions propagate once both are done.
       def sync(): Unit = {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
@@ -1894,8 +1900,12 @@ object CorpusCuration {
           graft.streaming.VersionedCdcMirror.syncCountSum(s, src, agg,
             "user_id", "event_id")
         }
-        Await.result(fMirror, Duration.Inf)
-        Await.result(fAgg, Duration.Inf)
+        // both finish before either failure is rethrown, so no write is
+        // left in flight when the entry unwinds
+        Await.ready(fMirror, Duration.Inf)
+        Await.ready(fAgg, Duration.Inf)
+        fMirror.value.get.get
+        fAgg.value.get.get
         ()
       }
       graft.pipeline.VersionedTable.append(ev, src,

@@ -482,8 +482,8 @@ object AdhesiveParityQueries {
       |'""".stripMargin
 
   /** ARRAY<T> RETURN type (round-12 matrix extension): per-document token
-    * lengths — a list out of a scalar UDF, converted List→ArrayData on the
-    * standard ScalaUDF return path.
+    * lengths — a list out of a scalar UDF, converted List→ArrayData by
+    * CatalystTypeConverters on the AdhesiveCall return path.
     */
   val wordLensJava: Q = Q(
     "aq_array_ret_java",

@@ -90,6 +90,28 @@ class CompilerSpec extends AnyFunSuite {
     assert(e.getMessage.contains("NothingThatExists"))
   }
 
+  test("the shared file manager survives a failed compile") {
+    // every compile reuses one javac file manager; a compile that fails
+    // must leave it usable, and its diagnostics must not leak into the
+    // next compile's report
+    val (badSrc, badFqn) = SourceRewriter.rewrite(
+      "public class Broken2 extends AlsoNothingThatExists {}")
+    val e = intercept[AdhesiveCompileException] {
+      InMemoryJavaCompiler.compile(badFqn, badSrc)
+    }
+    assert(e.getMessage.contains("AlsoNothingThatExists"))
+    val (src, fqn) = SourceRewriter.rewrite(validSource)
+    val bytecode = InMemoryJavaCompiler.compile(fqn, src)
+    assert(AdhesiveInstances.instance(fqn, bytecode).compute(Row(5L)) == 10L)
+    val (badSrc2, badFqn2) = SourceRewriter.rewrite(
+      "public class Broken3 extends YetAnotherMissing {}")
+    val e2 = intercept[AdhesiveCompileException] {
+      InMemoryJavaCompiler.compile(badFqn2, badSrc2)
+    }
+    assert(e2.getMessage.contains("YetAnotherMissing"))
+    assert(!e2.getMessage.contains("AlsoNothingThatExists"))
+  }
+
   test("source without a class declaration is rejected") {
     val e = intercept[AdhesiveCompileException] {
       SourceRewriter.rewrite("int x = 1;")

@@ -1,7 +1,6 @@
 package graft.adhesive
 
 import graft.TestSpark
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[AdhesiveConstantFolding]]: DETERMINISTIC calls over literal arguments
@@ -15,7 +14,7 @@ class ConstantFoldingSpec extends AnyFunSuite {
 
   private def hasUdf(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.optimizedPlan.expressions.exists(
-      _.exists(_.isInstanceOf[ScalaUDF]))
+      _.exists(_.isInstanceOf[AdhesiveCall]))
 
   private def define(name: String, deterministic: Boolean): Unit = {
     val det = if (deterministic) "DETERMINISTIC " else ""
