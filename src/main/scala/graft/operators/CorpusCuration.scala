@@ -1398,6 +1398,9 @@ object CorpusCuration {
       // the replay fold and the final aggregate reference the manifest-
       // diff feed ~9 times; uncached, each reference re-runs its
       // exceptAll resolution (guide §5 caching — reused and expensive)
+      // localCheckpoint keeps its blocks on executors only: losing an
+      // executor (or dynamic allocation releasing one) fails this
+      // evaluation instead of recomputing the feed
       val cdc = graft.pipeline.VersionedTable
         .readChangesCdc(s, root, 0L, latest).localCheckpoint()
       // replay the feed from empty — the mirror IS the consumer's view
@@ -1411,7 +1414,9 @@ object CorpusCuration {
             .select(data: _*)
           Some(acc.fold(ins)(m => m.exceptAll(del).unionAll(ins)))
       }.get.localCheckpoint() // materialized once (AQE-coalesced); the
-      // guard and the output union read the checkpointed blocks
+      // guard and the output union read the checkpointed blocks, which
+      // live on executors only — an executor loss fails the entry
+      // rather than replaying the fold
       // the CDC contract, proven before anything is emitted:
       // mirror == read, as multisets
       val table = graft.pipeline.VersionedTable.read(s, root)
@@ -2238,7 +2243,9 @@ object CorpusCuration {
       // cached WITHIN this one evaluation: the fold's per-version
       // filters and the final aggregate reference the feed ~9 times,
       // and each uncached reference pays the memory-sink row
-      // conversion again (guide §5 caching — reused and expensive)
+      // conversion again (guide §5 caching — reused and expensive).
+      // localCheckpoint keeps its blocks on executors only: losing an
+      // executor fails this evaluation instead of recomputing the feed
       val feed = s.createDataFrame(sunk.rdd, sunk.schema).localCheckpoint()
       // replay the streamed feed from empty; the mirror must equal
       // read() as multisets BEFORE anything is emitted
@@ -2253,7 +2260,9 @@ object CorpusCuration {
             .select(data: _*)
           Some(acc.fold(ins)(m => m.exceptAll(del).unionAll(ins)))
       }.get.localCheckpoint() // materialized once (AQE-coalesced); the
-      // guard and the output union read the checkpointed blocks
+      // guard and the output union read the checkpointed blocks, which
+      // live on executors only — an executor loss fails the entry
+      // rather than replaying the fold
       val table = graft.pipeline.VersionedTable.read(s, root)
         .select(data: _*)
       require(sameMultiset(mirror, table),

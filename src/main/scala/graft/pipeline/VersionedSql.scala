@@ -676,8 +676,7 @@ case class VersionedUpdateCommand(name: String,
     // conflicts and the WHOLE statement recomputes from a fresh read.
     // Retrying only the commit would re-publish SET values computed
     // from the stale row: the classic lost update.
-    var restarts = 0
-    while (restarts < VersionedTable.MaxDmlRestarts) {
+    val (v, n) = VersionedTable.withRestarts(s"UPDATE $name", reg.root) {
       VersionedTable.materializeDeletes(spark, reg.root)
       val v0 = VersionedTable.latestVersion(spark, reg.root).getOrElse(
         sys.error(s"UPDATE $name: no versions at ${reg.root}"))
@@ -691,22 +690,12 @@ case class VersionedUpdateCommand(name: String,
         d.withColumn(c, d.schema.fields.find(_.name.equalsIgnoreCase(c))
           .map(f => e.cast(f.dataType)).getOrElse(e))
       }
-      val res =
-        if (updated.isEmpty) Some((v0, 0L))
-        else VersionedTable.upsertByKeyPinned(spark, reg.root, updated,
-          reg.keyCols, v0)
-      res match {
-        case Some((v, n)) =>
-          VersionedSql.refreshView(spark, name)
-          return Seq(Row(v, n))
-        case None =>
-          restarts += 1
-          VersionedTable.backoff(restarts)
-      }
+      if (updated.isEmpty) Some((v0, 0L))
+      else VersionedTable.upsertByKeyPinned(spark, reg.root, updated,
+        reg.keyCols, v0)
     }
-    throw new java.util.ConcurrentModificationException(
-      s"UPDATE $name: ${VersionedTable.MaxDmlRestarts} consecutive " +
-        "conflicting commits; giving up — retry when ingest quiesces")
+    VersionedSql.refreshView(spark, name)
+    Seq(Row(v, n))
   }
 }
 
@@ -851,6 +840,17 @@ case class VersionedMergeCommand(name: String,
         }
       case _ => ()
     }
+    val row = VersionedTable.withRestarts(s"MERGE INTO $name", reg.root)(
+      mergeOnce(spark))
+    VersionedSql.refreshView(spark, name)
+    Seq(row)
+  }
+
+  /** One whole statement attempt: read the target at a fresh base
+    * version, compute the claims, commit anchored to that base. None
+    * when a concurrent commit could hold one of the keys.
+    */
+  private def mergeOnce(spark: SparkSession): Option[Row] = {
     val tA = targetAlias.getOrElse(name)
     val sA = sourceAlias.getOrElse("__merge_src")
     // presence markers survive the outer join where every REAL column
@@ -859,253 +859,237 @@ case class VersionedMergeCommand(name: String,
     val tMark = "__merge_t_present__"
     val sMark = "__merge_s_present__"
     val claimCol = "__merge_claim__"
-    var restarts = 0
-    while (restarts < VersionedTable.MaxDmlRestarts) {
-      VersionedTable.materializeDeletes(spark, reg.root)
-      val v0 = VersionedTable.latestVersion(spark, reg.root).getOrElse(
-        sys.error(s"MERGE INTO $name: no versions at ${reg.root}"))
-      val target = VersionedTable.sqlRead(spark, reg.root, Some(v0))
-      val tgt = target.withColumn(tMark, lit(true)).alias(tA)
-      // the catalog's MERGE rewrite hands the already-analyzed source
-      // PLAN (its USING clause is arbitrary SQL Spark parsed, not a
-      // string this grammar saw); the regex front-end hands SQL text
-      val source0 = sourcePlan
-        .map(org.apache.spark.sql.graftbridge.DatasetBridge
-          .ofRows(spark, _))
-        .getOrElse(spark.sql(sourceSql))
-      val srcCols = source0.columns.toSeq
-      // a per-source-ROW id distinguishes "one source row claiming two
-      // raced target copies of a key" (legal — SQL deletes/updates each
-      // target row) from "two source rows claiming one target key"
-      // (the cardinality violation); assigned BEFORE the join and
-      // pinned by the checkpoint below
-      val sid = "__merge_sid__"
-      val source = source0.withColumn(sMark, lit(true))
-        .withColumn(sid, monotonically_increasing_id()).alias(sA)
-      val tgtFields = target.schema.fields.toSeq
-      def fieldType(c: String) =
-        tgtFields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
-          .getOrElse(throw new IllegalArgumentException(
-            s"MERGE INTO $name: unknown target column '$c'"))
-      // ——— ONE join computes every match class; the type is the
-      // narrowest that preserves the classes the clause list actually
-      // uses (an insert-free MERGE never pays for unmatched source
-      // rows, a sync-free one never for unmatched target rows)
-      val hasInsert = clauses.exists(_.kind == NotMatchedByTarget)
-      val hasBySource = clauses.exists(_.kind == NotMatchedBySource)
-      val joinType = (hasInsert, hasBySource) match {
-        case (false, false) => "inner"
-        case (true, false) => "right_outer"
-        case (false, true) => "left_outer"
-        case (true, true) => "full_outer"
+    VersionedTable.materializeDeletes(spark, reg.root)
+    val v0 = VersionedTable.latestVersion(spark, reg.root).getOrElse(
+      sys.error(s"MERGE INTO $name: no versions at ${reg.root}"))
+    val target = VersionedTable.sqlRead(spark, reg.root, Some(v0))
+    val tgt = target.withColumn(tMark, lit(true)).alias(tA)
+    // the catalog's MERGE rewrite hands the already-analyzed source
+    // PLAN (its USING clause is arbitrary SQL Spark parsed, not a
+    // string this grammar saw); the regex front-end hands SQL text
+    val source0 = sourcePlan
+      .map(org.apache.spark.sql.graftbridge.DatasetBridge
+        .ofRows(spark, _))
+      .getOrElse(spark.sql(sourceSql))
+    val srcCols = source0.columns.toSeq
+    // a per-source-ROW id distinguishes "one source row claiming two
+    // raced target copies of a key" (legal — SQL deletes/updates each
+    // target row) from "two source rows claiming one target key"
+    // (the cardinality violation); assigned BEFORE the join and
+    // pinned by the checkpoint below
+    val sid = "__merge_sid__"
+    val source = source0.withColumn(sMark, lit(true))
+      .withColumn(sid, monotonically_increasing_id()).alias(sA)
+    val tgtFields = target.schema.fields.toSeq
+    def fieldType(c: String) =
+      tgtFields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
+        .getOrElse(throw new IllegalArgumentException(
+          s"MERGE INTO $name: unknown target column '$c'"))
+    // ——— ONE join computes every match class; the type is the
+    // narrowest that preserves the classes the clause list actually
+    // uses (an insert-free MERGE never pays for unmatched source
+    // rows, a sync-free one never for unmatched target rows)
+    val hasInsert = clauses.exists(_.kind == NotMatchedByTarget)
+    val hasBySource = clauses.exists(_.kind == NotMatchedBySource)
+    val joinType = (hasInsert, hasBySource) match {
+      case (false, false) => "inner"
+      case (true, false) => "right_outer"
+      case (false, true) => "left_outer"
+      case (true, true) => "full_outer"
+    }
+    val joined = tgt.join(source, expr(onCond), joinType)
+    val isMatched = col(tMark).isNotNull && col(sMark).isNotNull
+    def classCol(k: MergeMatchKind): org.apache.spark.sql.Column =
+      k match {
+        case Matched => isMatched
+        case NotMatchedByTarget => col(tMark).isNull
+        case NotMatchedBySource => col(sMark).isNull
       }
-      val joined = tgt.join(source, expr(onCond), joinType)
-      val isMatched = col(tMark).isNotNull && col(sMark).isNotNull
-      def classCol(k: MergeMatchKind): org.apache.spark.sql.Column =
-        k match {
-          case Matched => isMatched
-          case NotMatchedByTarget => col(tMark).isNull
-          case NotMatchedBySource => col(sMark).isNull
-        }
-      // first-match-wins WITHIN each class falls out of one global
-      // when-cascade in statement order because the classes are
-      // disjoint; a clause condition that evaluates NULL claims
-      // nothing (coalesce false), matching SQL MERGE
-      val claim = clauses.zipWithIndex.foldRight(
-          lit(null).cast("int"): org.apache.spark.sql.Column) {
-        case ((cl, i), els) =>
-          val c = cl.cond.map(x => coalesce(expr(x), lit(false)))
-            .getOrElse(lit(true))
-          when(classCol(cl.kind) && c, lit(i)).otherwise(els)
-      }
-      // the CLAIMED key of every row, uniformly: the target key for
-      // matched / by-source claims, the clause's own insert key
-      // expression for by-target claims — one column set feeds the
-      // counts, the NULL-key guard, the cardinality guard AND the
-      // delete-key frame, so what is checked IS what is committed
-      def keyExprFor(cl: MergeClause,
-          k: String): org.apache.spark.sql.Column = cl.kind match {
-        case Matched | NotMatchedBySource => col(s"$tA.$k")
-        case NotMatchedByTarget => cl.action match {
-          case MergeInsertStar =>
-            srcCols.find(_.equalsIgnoreCase(k))
-              .map(sc => col(s"$sA.$sc")).getOrElse(lit(null))
-          case MergeInsertValues(cols, exprs) =>
-            cols.zip(exprs).collectFirst {
-              case (cn, e) if cn.equalsIgnoreCase(k) => expr(e)
-            }.getOrElse(lit(null))
-          case _ => lit(null)
-        }
-      }
-      def mk(j: Int) = s"__merge_k${j}__"
-      val withKeys = keyCols.zipWithIndex.foldLeft(
-          joined.withColumn(claimCol, claim)
-            .filter(col(claimCol).isNotNull)) { case (d, (k, j)) =>
-        d.withColumn(mk(j),
-          clauses.zipWithIndex.foldRight(
-              lit(null).cast(fieldType(k)): org.apache.spark.sql.Column) {
-            case ((cl, i), els) => when(col(claimCol) === i,
-              keyExprFor(cl, k).cast(fieldType(k))).otherwise(els)
-          })
-      }
-      // ONE eager materialization pins the claims (and through them
-      // the source snapshot): the guards below, the reported counts
-      // and the committed frames all read the SAME rows — a
-      // nondeterministic or concurrently-changing USING source cannot
-      // pass the guard on one evaluation and commit another, and a
-      // 3-clause MERGE costs one join, not one per clause count.
-      // localCheckpoint (not persist): eviction must FAIL the
-      // statement, not silently re-run the source.
-      val claims = withKeys.localCheckpoint(true)
-      // ——— every guard and every count from ONE aggregation pass
-      def isUpdate(a: MergeAction) = a match {
-        case MergeUpdateStar | MergeUpdateSet(_) => true
-        case _ => false
-      }
-      def isInsert(a: MergeAction) = a match {
-        case MergeInsertStar | MergeInsertValues(_, _) => true
-        case _ => false
-      }
-      val upsIdxs = clauses.zipWithIndex.collect {
-        case (cl, i) if isUpdate(cl.action) || isInsert(cl.action) => i
-      }
-      val keyStruct = struct(keyCols.indices.map(j => col(mk(j))): _*)
-      val upsClaim =
-        if (upsIdxs.isEmpty) lit(false)
-        else col(claimCol).isin(upsIdxs: _*)
-      val perClause = clauses.indices.flatMap { i =>
-        sum(when(col(claimCol) === i, 1L).otherwise(0L)).as(s"n$i") +:
-          keyCols.indices.map(j => sum(when(col(claimCol) === i &&
-            col(mk(j)).isNull, 1L).otherwise(0L)).as(s"nn${i}_$j"))
-      }
-      val aggs = count(lit(1)).as("total") +:
-        countDistinct(when(isMatched,
-          struct(keyStruct, col(sid)))).as("m_pairs") +:
-        countDistinct(when(isMatched, keyStruct)).as("m_keys") +:
-        countDistinct(when(upsClaim, keyStruct)).as("ups_keys") +:
-        perClause
-      val stats = claims.agg(aggs.head, aggs.tail: _*).head
-      val total = stats.getLong(0)
-      if (total == 0L) {
-        VersionedSql.refreshView(spark, name)
-        return Seq(Row(v0, 0L, 0L, 0L))
-      }
-      def nOf(i: Int): Long =
-        stats.getLong(4 + i * (1 + keyCols.size))
-      def nnOf(i: Int, j: Int): Long =
-        stats.getLong(4 + i * (1 + keyCols.size) + 1 + j)
-      // NULL checks FIRST: countDistinct excludes NULL tuples, so a
-      // NULL key would otherwise masquerade as a duplicate. This
-      // covers DELETE claims too — a NULL-key target row claimed by
-      // NOT MATCHED BY SOURCE THEN DELETE cannot be key-deleted, and
-      // silently surviving while being counted would be corruption.
-      clauses.zipWithIndex.foreach { case (cl, i) =>
-        val (kindSql, side) = cl.kind match {
-          case Matched => ("MATCHED", "source")
-          case NotMatchedByTarget => ("NOT MATCHED", "source")
-          case NotMatchedBySource => ("NOT MATCHED BY SOURCE", "target")
-        }
-        val actSql = cl.action match {
-          case MergeDelete => "DELETE"
-          case MergeUpdateStar | MergeUpdateSet(_) => "UPDATE"
-          case MergeInsertStar | MergeInsertValues(_, _) => "INSERT"
-        }
-        keyCols.zipWithIndex.foreach { case (k, j) =>
-          require(nnOf(i, j) == 0L,
-            s"MERGE INTO $name: NULL $side key '$k' — ${nnOf(i, j)} " +
-              s"rows claimed by WHEN $kindSql THEN $actSql carry a " +
-              "NULL key a keyed merge cannot address")
-        }
-      }
-      // cardinality, over updates, DELETES and inserts alike: a
-      // target KEY claimed by two distinct source rows is a violation
-      // whichever action claims it (SQL MERGE semantics) — while ONE
-      // source row legitimately claims every raced duplicate of its
-      // target key (distinct (key, source-row) pairs vs distinct keys
-      // tells the two apart)
-      require(stats.getLong(1) == stats.getLong(2),
-        s"MERGE INTO $name: ${stats.getLong(1) - stats.getLong(2)} " +
-          "extra source rows match an already-claimed target key — " +
-          "SQL MERGE cardinality violation (a target row matched by " +
-          "multiple source rows)")
-      val updatedN = clauses.zipWithIndex
-        .collect { case (cl, i) if isUpdate(cl.action) => nOf(i) }.sum
-      val deletedN = clauses.zipWithIndex
-        .collect { case (cl, i) if cl.action == MergeDelete => nOf(i) }
-        .sum
-      val insertedN = clauses.zipWithIndex
-        .collect { case (cl, i) if isInsert(cl.action) => nOf(i) }.sum
-      // the keyed commit lands exactly one row per upserted key:
-      // duplicate inserts of a key, or updates claiming raced
-      // duplicate copies of one, cannot be represented and reject
-      require(updatedN + insertedN == stats.getLong(3),
-        s"MERGE INTO $name: " +
-          s"${updatedN + insertedN - stats.getLong(3)} duplicate-key " +
-          "rows among the claimed updates/inserts — SQL MERGE " +
-          "cardinality violation")
-      // ——— per-clause output frames, all narrow reads of the pinned
-      // claims — zero join replays from here on
-      def updateProjection(sets: Seq[(String, String)],
-          claimed: org.apache.spark.sql.DataFrame) =
-        claimed.select(tgtFields.map { f =>
-          sets.find(_._1.equalsIgnoreCase(f.name)) match {
-            case Some((_, e)) => expr(e).cast(f.dataType).as(f.name)
-            case None => col(s"$tA.${f.name}").as(f.name)
-          }
-        }: _*)
-      val updates = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-      val inserts = Seq.newBuilder[org.apache.spark.sql.DataFrame]
-      val deleteIdx = Seq.newBuilder[Int]
-      clauses.zipWithIndex.foreach { case (cl, i) =>
-        if (nOf(i) > 0L) {
-          val claimed = claims.filter(col(claimCol) === i)
-          (cl.kind, cl.action) match {
-            case (_, MergeUpdateStar) =>
-              updates += claimed.select(tgtFields.map(f =>
-                col(s"$sA.${f.name}").as(f.name)): _*)
-            case (_, MergeUpdateSet(sets)) =>
-              updates += updateProjection(sets, claimed)
-            case (_, MergeDelete) => deleteIdx += i
-            case (_, MergeInsertStar) =>
-              inserts += claimed.select(tgtFields.flatMap(f =>
-                srcCols.find(_.equalsIgnoreCase(f.name))
-                  .map(sc => col(s"$sA.$sc").as(f.name))): _*)
-            case (_, MergeInsertValues(cols, exprs)) =>
-              inserts += claimed.select(cols.zip(exprs).map {
-                case (cn, e) => expr(e).cast(fieldType(cn)).as(cn)
-              }: _*)
-          }
-        }
-      }
-      def unionAllByName(fs: Seq[org.apache.spark.sql.DataFrame]) =
-        fs.reduceOption((a, b) =>
-          a.unionByName(b, allowMissingColumns = true))
-      val upserts = unionAllByName(updates.result() ++ inserts.result())
-      val delIdxs = deleteIdx.result()
-      val delKeys =
-        if (delIdxs.isEmpty) target.select(keyCols.map(col): _*).limit(0)
-        else claims.filter(col(claimCol).isin(delIdxs: _*))
-          .select(keyCols.zipWithIndex.map { case (k, j) =>
-            col(mk(j)).as(k) }: _*)
-      val res = upserts match {
-        case Some(up) =>
-          VersionedTable.applyKeyedChangesPinned(spark, reg.root, up,
-            delKeys, keyCols, v0)
-        case None => // pure-delete MERGE
-          VersionedTable.applyKeyedChangesPinned(spark, reg.root,
-            target.limit(0), delKeys, keyCols, v0)
-      }
-      res match {
-        case Some(v) =>
-          VersionedSql.refreshView(spark, name)
-          return Seq(Row(v, updatedN, deletedN, insertedN))
-        case None =>
-          restarts += 1
-          VersionedTable.backoff(restarts)
+    // first-match-wins WITHIN each class falls out of one global
+    // when-cascade in statement order because the classes are
+    // disjoint; a clause condition that evaluates NULL claims
+    // nothing (coalesce false), matching SQL MERGE
+    val claim = clauses.zipWithIndex.foldRight(
+        lit(null).cast("int"): org.apache.spark.sql.Column) {
+      case ((cl, i), els) =>
+        val c = cl.cond.map(x => coalesce(expr(x), lit(false)))
+          .getOrElse(lit(true))
+        when(classCol(cl.kind) && c, lit(i)).otherwise(els)
+    }
+    // the CLAIMED key of every row, uniformly: the target key for
+    // matched / by-source claims, the clause's own insert key
+    // expression for by-target claims — one column set feeds the
+    // counts, the NULL-key guard, the cardinality guard AND the
+    // delete-key frame, so what is checked IS what is committed
+    def keyExprFor(cl: MergeClause,
+        k: String): org.apache.spark.sql.Column = cl.kind match {
+      case Matched | NotMatchedBySource => col(s"$tA.$k")
+      case NotMatchedByTarget => cl.action match {
+        case MergeInsertStar =>
+          srcCols.find(_.equalsIgnoreCase(k))
+            .map(sc => col(s"$sA.$sc")).getOrElse(lit(null))
+        case MergeInsertValues(cols, exprs) =>
+          cols.zip(exprs).collectFirst {
+            case (cn, e) if cn.equalsIgnoreCase(k) => expr(e)
+          }.getOrElse(lit(null))
+        case _ => lit(null)
       }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"MERGE INTO $name: ${VersionedTable.MaxDmlRestarts} consecutive " +
-        "conflicting commits; giving up — retry when ingest quiesces")
+    def mk(j: Int) = s"__merge_k${j}__"
+    val withKeys = keyCols.zipWithIndex.foldLeft(
+        joined.withColumn(claimCol, claim)
+          .filter(col(claimCol).isNotNull)) { case (d, (k, j)) =>
+      d.withColumn(mk(j),
+        clauses.zipWithIndex.foldRight(
+            lit(null).cast(fieldType(k)): org.apache.spark.sql.Column) {
+          case ((cl, i), els) => when(col(claimCol) === i,
+            keyExprFor(cl, k).cast(fieldType(k))).otherwise(els)
+        })
+    }
+    // ONE eager materialization pins the claims (and through them
+    // the source snapshot): the guards below, the reported counts
+    // and the committed frames all read the SAME rows — a
+    // nondeterministic or concurrently-changing USING source cannot
+    // pass the guard on one evaluation and commit another, and a
+    // 3-clause MERGE costs one join, not one per clause count.
+    // localCheckpoint (not persist): eviction must FAIL the
+    // statement, not silently re-run the source.
+    val claims = withKeys.localCheckpoint(true)
+    // ——— every guard and every count from ONE aggregation pass
+    def isUpdate(a: MergeAction) = a match {
+      case MergeUpdateStar | MergeUpdateSet(_) => true
+      case _ => false
+    }
+    def isInsert(a: MergeAction) = a match {
+      case MergeInsertStar | MergeInsertValues(_, _) => true
+      case _ => false
+    }
+    val upsIdxs = clauses.zipWithIndex.collect {
+      case (cl, i) if isUpdate(cl.action) || isInsert(cl.action) => i
+    }
+    val keyStruct = struct(keyCols.indices.map(j => col(mk(j))): _*)
+    val upsClaim =
+      if (upsIdxs.isEmpty) lit(false)
+      else col(claimCol).isin(upsIdxs: _*)
+    val perClause = clauses.indices.flatMap { i =>
+      sum(when(col(claimCol) === i, 1L).otherwise(0L)).as(s"n$i") +:
+        keyCols.indices.map(j => sum(when(col(claimCol) === i &&
+          col(mk(j)).isNull, 1L).otherwise(0L)).as(s"nn${i}_$j"))
+    }
+    val aggs = count(lit(1)).as("total") +:
+      countDistinct(when(isMatched,
+        struct(keyStruct, col(sid)))).as("m_pairs") +:
+      countDistinct(when(isMatched, keyStruct)).as("m_keys") +:
+      countDistinct(when(upsClaim, keyStruct)).as("ups_keys") +:
+      perClause
+    val stats = claims.agg(aggs.head, aggs.tail: _*).head
+    val total = stats.getLong(0)
+    if (total == 0L) return Some(Row(v0, 0L, 0L, 0L))
+    def nOf(i: Int): Long =
+      stats.getLong(4 + i * (1 + keyCols.size))
+    def nnOf(i: Int, j: Int): Long =
+      stats.getLong(4 + i * (1 + keyCols.size) + 1 + j)
+    // NULL checks FIRST: countDistinct excludes NULL tuples, so a
+    // NULL key would otherwise masquerade as a duplicate. This
+    // covers DELETE claims too — a NULL-key target row claimed by
+    // NOT MATCHED BY SOURCE THEN DELETE cannot be key-deleted, and
+    // silently surviving while being counted would be corruption.
+    clauses.zipWithIndex.foreach { case (cl, i) =>
+      val (kindSql, side) = cl.kind match {
+        case Matched => ("MATCHED", "source")
+        case NotMatchedByTarget => ("NOT MATCHED", "source")
+        case NotMatchedBySource => ("NOT MATCHED BY SOURCE", "target")
+      }
+      val actSql = cl.action match {
+        case MergeDelete => "DELETE"
+        case MergeUpdateStar | MergeUpdateSet(_) => "UPDATE"
+        case MergeInsertStar | MergeInsertValues(_, _) => "INSERT"
+      }
+      keyCols.zipWithIndex.foreach { case (k, j) =>
+        require(nnOf(i, j) == 0L,
+          s"MERGE INTO $name: NULL $side key '$k' — ${nnOf(i, j)} " +
+            s"rows claimed by WHEN $kindSql THEN $actSql carry a " +
+            "NULL key a keyed merge cannot address")
+      }
+    }
+    // cardinality, over updates, DELETES and inserts alike: a
+    // target KEY claimed by two distinct source rows is a violation
+    // whichever action claims it (SQL MERGE semantics) — while ONE
+    // source row legitimately claims every raced duplicate of its
+    // target key (distinct (key, source-row) pairs vs distinct keys
+    // tells the two apart)
+    require(stats.getLong(1) == stats.getLong(2),
+      s"MERGE INTO $name: ${stats.getLong(1) - stats.getLong(2)} " +
+        "extra source rows match an already-claimed target key — " +
+        "SQL MERGE cardinality violation (a target row matched by " +
+        "multiple source rows)")
+    val updatedN = clauses.zipWithIndex
+      .collect { case (cl, i) if isUpdate(cl.action) => nOf(i) }.sum
+    val deletedN = clauses.zipWithIndex
+      .collect { case (cl, i) if cl.action == MergeDelete => nOf(i) }
+      .sum
+    val insertedN = clauses.zipWithIndex
+      .collect { case (cl, i) if isInsert(cl.action) => nOf(i) }.sum
+    // the keyed commit lands exactly one row per upserted key:
+    // duplicate inserts of a key, or updates claiming raced
+    // duplicate copies of one, cannot be represented and reject
+    require(updatedN + insertedN == stats.getLong(3),
+      s"MERGE INTO $name: " +
+        s"${updatedN + insertedN - stats.getLong(3)} duplicate-key " +
+        "rows among the claimed updates/inserts — SQL MERGE " +
+        "cardinality violation")
+    // ——— per-clause output frames, all narrow reads of the pinned
+    // claims — zero join replays from here on
+    def updateProjection(sets: Seq[(String, String)],
+        claimed: org.apache.spark.sql.DataFrame) =
+      claimed.select(tgtFields.map { f =>
+        sets.find(_._1.equalsIgnoreCase(f.name)) match {
+          case Some((_, e)) => expr(e).cast(f.dataType).as(f.name)
+          case None => col(s"$tA.${f.name}").as(f.name)
+        }
+      }: _*)
+    val updates = Seq.newBuilder[org.apache.spark.sql.DataFrame]
+    val inserts = Seq.newBuilder[org.apache.spark.sql.DataFrame]
+    val deleteIdx = Seq.newBuilder[Int]
+    clauses.zipWithIndex.foreach { case (cl, i) =>
+      if (nOf(i) > 0L) {
+        val claimed = claims.filter(col(claimCol) === i)
+        (cl.kind, cl.action) match {
+          case (_, MergeUpdateStar) =>
+            updates += claimed.select(tgtFields.map(f =>
+              col(s"$sA.${f.name}").as(f.name)): _*)
+          case (_, MergeUpdateSet(sets)) =>
+            updates += updateProjection(sets, claimed)
+          case (_, MergeDelete) => deleteIdx += i
+          case (_, MergeInsertStar) =>
+            inserts += claimed.select(tgtFields.flatMap(f =>
+              srcCols.find(_.equalsIgnoreCase(f.name))
+                .map(sc => col(s"$sA.$sc").as(f.name))): _*)
+          case (_, MergeInsertValues(cols, exprs)) =>
+            inserts += claimed.select(cols.zip(exprs).map {
+              case (cn, e) => expr(e).cast(fieldType(cn)).as(cn)
+            }: _*)
+        }
+      }
+    }
+    def unionAllByName(fs: Seq[org.apache.spark.sql.DataFrame]) =
+      fs.reduceOption((a, b) =>
+        a.unionByName(b, allowMissingColumns = true))
+    val upserts = unionAllByName(updates.result() ++ inserts.result())
+    val delIdxs = deleteIdx.result()
+    val delKeys =
+      if (delIdxs.isEmpty) target.select(keyCols.map(col): _*).limit(0)
+      else claims.filter(col(claimCol).isin(delIdxs: _*))
+        .select(keyCols.zipWithIndex.map { case (k, j) =>
+          col(mk(j)).as(k) }: _*)
+    val res = upserts match {
+      case Some(up) =>
+        VersionedTable.applyKeyedChangesPinned(spark, reg.root, up,
+          delKeys, keyCols, v0)
+      case None => // pure-delete MERGE
+        VersionedTable.applyKeyedChangesPinned(spark, reg.root,
+          target.limit(0), delKeys, keyCols, v0)
+    }
+    res.map(v => Row(v, updatedN, deletedN, insertedN))
   }
 }

@@ -99,10 +99,14 @@ object VersionedTable {
     */
   val DefaultVacuumGraceMs: Long = 24L * 60 * 60 * 1000
 
-  /** Bounded restarts for delete/upsert under true conflicts (a
-    * concurrent commit that rewrote this writer's input shards or
-    * added rows inside its box). Appends and rebases never count
-    * against it.
+  /** Bounded restarts under true conflicts (a concurrent commit that
+    * rewrote this writer's input shards, added rows inside its box or
+    * key bounds, or changed the marker list), shared by every op that
+    * restarts through [[withRestarts]]: [[compactSmallFiles]],
+    * [[deleteRangeMor]], [[deleteKeysMor]], [[materializeDeletes]],
+    * [[deleteRange]], [[deleteWhere]], [[upsertByKey]],
+    * [[applyCdcBatch]], and SQL UPDATE and MERGE. Appends and rebases
+    * never count against it.
     */
   val MaxDmlRestarts: Int = 8
 
@@ -801,8 +805,90 @@ object VersionedTable {
     }
   }
 
-  private[pipeline] def backoff(attempt: Int): Unit =
+  private def backoff(attempt: Int): Unit =
     if (attempt > 0) Thread.sleep(math.min(40L, 5L * attempt))
+
+  /** The one BOUNDED-RESTART loop: run `once` (one whole optimistic
+    * attempt from a fresh base; None = it hit a true conflict and
+    * published nothing) until it yields, backing off between attempts,
+    * and give up after [[MaxDmlRestarts]] consecutive conflicts.
+    */
+  private[pipeline] def withRestarts[T](op: String, root: String)(
+      once: => Option[T]): T = {
+    @annotation.tailrec
+    def go(attempt: Int): T = once match {
+      case Some(r) => r
+      case None if attempt >= MaxDmlRestarts =>
+        throw new java.util.ConcurrentModificationException(
+          s"$op at $root: $attempt consecutive conflicting commits; " +
+            "giving up — retry when ingest quiesces")
+      case None =>
+        backoff(attempt)
+        go(attempt + 1)
+    }
+    go(1)
+  }
+
+  /** The one CAS-PUBLISH loop: hand `step` the newest (version,
+    * manifest) — None while the table has no version — and repeat,
+    * with backoff, while it returns None, which a step does only when
+    * its [[tryPublish]] lost the CAS. Every other outcome (a win, a
+    * replay, a true conflict) is the step's Some.
+    */
+  @annotation.tailrec
+  private def casPublish[T](spark: SparkSession, root: String,
+      attempt: Int = 0)(step: Option[(Long, Manifest)] => Option[T]): T =
+    step(latestManifest(spark, root)) match {
+      case Some(r) => r
+      case None =>
+        backoff(attempt + 1)
+        casPublish(spark, root, attempt + 1)(step)
+    }
+
+  /** The commit of every REWRITE writer (compaction, bin-pack,
+    * materialization, COW delete, the keyed-changes engine): the
+    * writer computed `written` data files and `shards` (its new and
+    * replacement shards) against base `m0`, replacing the candidate
+    * shards `candNames`; publish them as `kind` over the newest
+    * manifest, rebased by [[rebaseCarry]] with the writer's
+    * `newEntryConflict`. A TRUE conflict — on a legacy flat base any
+    * concurrent commit, otherwise a changed marker list (the rewrite
+    * applied exactly `m0`'s markers) or a failed rebase — discards the
+    * writer's files and returns None. With a `frontier`, a newest
+    * manifest already at or past it is a replay: files discarded,
+    * Some((newest version, false)). Otherwise Some((published, true)).
+    * Every rewrite publishes marker-free: its reads applied `m0`'s
+    * markers, and the marker check guarantees no other exists.
+    */
+  private def rebasePublish(spark: SparkSession, root: String, v0: Long,
+      m0: Manifest, candNames: Set[String], newEntryConflict: Entry => Boolean,
+      written: Seq[Entry], shards: Seq[ShardRef], kind: String,
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      newFiles: Seq[String] = Seq.empty,
+      frontier: Option[Long] = None): Option[(Long, Boolean)] =
+    casPublish(spark, root) { newest =>
+      val (lv, lm) = newest.get
+      if (frontier.exists(lm.ingestBatch >= _)) {
+        discard(spark, root, written, shards)
+        Some(Some((lv, false)))
+      } else {
+        val carriedOpt =
+          if (m0.legacy) { if (lv != v0) None else Some(Seq.empty[ShardRef]) }
+          else if (lm.morDeletes != m0.morDeletes) None
+          else rebaseCarry(spark, root, m0, lm, candNames, newEntryConflict)
+        carriedOpt match {
+          case None =>
+            discard(spark, root, written, shards)
+            Some(None)
+          case Some(carried) =>
+            Option.when(tryPublish(spark, root, lv + 1, m0.statCols,
+              carried ++ shards, frontier.getOrElse(lm.ingestBatch), kind,
+              publishSchema(spark, root, lm, schema), newFiles,
+              typedCols = m0.typedCols, clusterSpec = m0.clusterSpec))(
+              Some((lv + 1, true)))
+        }
+      }
+    }
 
   /** The latest manifest's shard list with any legacy inline entries
     * MIGRATED into a real shard file — what every publish must carry
@@ -1076,9 +1162,7 @@ object VersionedTable {
     var written: Seq[Entry] = null
     var writtenShard: Option[ShardRef] = None
     var merged: Option[(Set[String], ShardRef)] = None
-    var attempt = 0
-    while (true) {
-      val base = latestManifest(spark, root)
+    casPublish(spark, root) { base =>
       base.foreach { case (_, m) =>
         require(m.statCols == statCols,
           s"stat columns are fixed at table creation: ${m.statCols} != $statCols")
@@ -1113,60 +1197,58 @@ object VersionedTable {
         // twin), change nothing; any files this loop already wrote are
         // unreferenced and will be vacuumed
         if (written != null) discard(spark, root, written, writtenShard.toSeq)
-        return (base.get._1, false)
-      }
-      // SCHEMA EVOLUTION: the table schema is the union of every
-      // append's fields (add-column only; a column present in both
-      // must keep its exact type). It is stored IN the manifest, so
-      // reads never depend on footer merging, older files null-fill
-      // the added columns, and time travel serves each version under
-      // the schema it had THEN.
-      val merged0 = mergedSchema(
-        tableSchema(spark, root, base.map(_._2)), df.schema)
-      if (written == null) {
-        written = writeFiles(df, root, statCols, typed,
-          shape = clusterShape(spec))
-        writtenShard = writeShard(spark, root, statCols, written, typed)
-      }
-      val baseShards = base.map { case (_, m) =>
-        materializedShards(spark, root, m) }.getOrElse(Seq.empty)
-      // opportunistic shard merging, first attempt only (a retry after
-      // a lost CAS publishes unmerged — rebase must stay trivial).
-      // BOUNDED: fold only the FanIn smallest runts, so one append's
-      // metadata write stays O(FanIn × MaxFiles) entries however big
-      // the table is — amortized, a steady append stream folds runts
-      // as fast as it creates them
-      if (attempt == 0 && merged.isEmpty) {
-        val runts = baseShards.filter(_.files <= ShardMergeMaxFiles)
-          .sortBy(_.files).take(ShardMergeFanIn)
-        if (runts.size >= ShardMergeFanIn) {
-          val m = base.get._2
-          val folded = writeShard(spark, root, statCols,
-            runts.flatMap(m.entriesOf), typed)
-          merged = folded.map(s => (runts.map(_.name).toSet, s))
+        Some((base.get._1, false))
+      } else {
+        // SCHEMA EVOLUTION: the table schema is the union of every
+        // append's fields (add-column only; a column present in both
+        // must keep its exact type). It is stored IN the manifest, so
+        // reads never depend on footer merging, older files null-fill
+        // the added columns, and time travel serves each version under
+        // the schema it had THEN.
+        val merged0 = mergedSchema(
+          tableSchema(spark, root, base.map(_._2)), df.schema)
+        val firstAttempt = written == null
+        if (firstAttempt) {
+          written = writeFiles(df, root, statCols, typed,
+            shape = clusterShape(spec))
+          writtenShard = writeShard(spark, root, statCols, written, typed)
         }
-      }
-      val publishShards = merged match {
-        case Some((srcNames, foldedShard))
-            if srcNames.subsetOf(baseShards.map(_.name).toSet) =>
-          baseShards.filterNot(r => srcNames(r.name)) :+ foldedShard
-        case _ => baseShards
-      }
-      val v = base.map(_._1).getOrElse(0L) + 1
-      // mor-delete markers carry through appends untouched: they are
-      // scoped to THEIR files, so the appended rows — even ones inside
-      // a marker's box — are never affected by them
-      if (tryPublish(spark, root, v, statCols,
+        val baseShards = base.map { case (_, m) =>
+          materializedShards(spark, root, m) }.getOrElse(Seq.empty)
+        // opportunistic shard merging, first attempt only (a retry
+        // after a lost CAS publishes unmerged — rebase must stay
+        // trivial). BOUNDED: fold only the FanIn smallest runts, so one
+        // append's metadata write stays O(FanIn × MaxFiles) entries
+        // however big the table is — amortized, a steady append stream
+        // folds runts as fast as it creates them
+        if (firstAttempt) {
+          val runts = baseShards.filter(_.files <= ShardMergeMaxFiles)
+            .sortBy(_.files).take(ShardMergeFanIn)
+          if (runts.size >= ShardMergeFanIn) {
+            val m = base.get._2
+            val folded = writeShard(spark, root, statCols,
+              runts.flatMap(m.entriesOf), typed)
+            merged = folded.map(s => (runts.map(_.name).toSet, s))
+          }
+        }
+        val publishShards = merged match {
+          case Some((srcNames, foldedShard))
+              if srcNames.subsetOf(baseShards.map(_.name).toSet) =>
+            baseShards.filterNot(r => srcNames(r.name)) :+ foldedShard
+          case _ => baseShards
+        }
+        val v = base.map(_._1).getOrElse(0L) + 1
+        // mor-delete markers carry through appends untouched: they are
+        // scoped to THEIR files, so the appended rows — even ones
+        // inside a marker's box — are never affected by them
+        Option.when(tryPublish(spark, root, v, statCols,
           publishShards ++ writtenShard.toSeq,
           math.max(frontier, ingestBatch), kind = "append",
           Some(merged0.json),
           morDeletes = base.map(_._2.morDeletes).getOrElse(Seq.empty),
-          typedCols = typed, clusterSpec = spec))
-        return (v, true)
-      attempt += 1
-      backoff(attempt)
+          typedCols = typed, clusterSpec = spec))((v, true))
+      }
     }
-    sys.error("unreachable")
   }
 
   /** The base manifest's effective schema — the stored one, or, for a
@@ -1259,9 +1341,8 @@ object VersionedTable {
   def addColumns(spark: SparkSession, root: String,
       newCols: org.apache.spark.sql.types.StructType): Long = {
     require(newCols.fields.nonEmpty, "addColumns: no columns given")
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).getOrElse(
+    casPublish(spark, root) { newest =>
+      val (lv, lm) = newest.getOrElse(
         sys.error(s"addColumns: no versions at $root"))
       val base = tableSchema(spark, root, Some(lm)).getOrElse(
         sys.error(s"addColumns: no schema resolvable at $root"))
@@ -1271,16 +1352,12 @@ object VersionedTable {
           "already exist — evolution is add-only")
       val merged = org.apache.spark.sql.types.StructType(
         base.fields ++ newCols.fields.map(_.copy(nullable = true)))
-      if (tryPublish(spark, root, lv + 1, lm.statCols,
-          materializedShards(spark, root, lm), lm.ingestBatch,
-          kind = "evolve", Some(merged.json),
-          morDeletes = lm.morDeletes, typedCols = lm.typedCols,
-          clusterSpec = lm.clusterSpec))
-        return lv + 1
-      attempt += 1
-      backoff(attempt)
+      Option.when(tryPublish(spark, root, lv + 1, lm.statCols,
+        materializedShards(spark, root, lm), lm.ingestBatch,
+        kind = "evolve", Some(merged.json),
+        morDeletes = lm.morDeletes, typedCols = lm.typedCols,
+        clusterSpec = lm.clusterSpec))(lv + 1)
     }
-    sys.error("unreachable")
   }
 
   /** Rewrite the base snapshot z-ordered by the table's first two
@@ -1349,40 +1426,16 @@ object VersionedTable {
     val entries = writeFiles(df, root, m0.statCols, m0.typedCols, shape)
     val compactShard = writeShard(spark, root, m0.statCols, entries,
       m0.typedCols)
-    val baseShardNames = m0.shardNames
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).get
-      // the layout read applied exactly m0's markers; a marker added
-      // (or materialized away) since would make the rewrite stale.
-      // Shard-identity conflicts resolve at the FILE level through
-      // rebaseCarry: a concurrent runt-shard fold (same files, new
-      // shard names) commutes; a rewrite of any input FILE aborts —
-      // compaction is rerunnable maintenance and must never trump a
-      // data-changing commit.
-      val carriedOpt =
-        if (m0.legacy) { if (lv != v0) None else Some(Seq.empty[ShardRef]) }
-        else if (lm.morDeletes != m0.morDeletes) None
-        else rebaseCarry(spark, root, m0, lm, baseShardNames, _ => false)
-      carriedOpt match {
-        case None =>
-          discard(spark, root, entries, compactShard.toSeq)
-          throw new java.util.ConcurrentModificationException(
-            s"compaction at $root: a concurrent commit rewrote this " +
-              "compaction's input files (delete/upsert/compaction); the " +
-              "stale layout was discarded — re-run the compaction")
-        case Some(carried) =>
-          if (tryPublish(spark, root, lv + 1, m0.statCols,
-              compactShard.toSeq ++ carried,
-              lm.ingestBatch, kind = "compact",
-              publishSchema(spark, root, lm, None),
-              typedCols = m0.typedCols, clusterSpec = m0.clusterSpec))
-            return lv + 1
-      }
-      attempt += 1
-      backoff(attempt)
-    }
-    sys.error("unreachable")
+    // a concurrent runt-shard fold (same files, new shard names)
+    // commutes; a rewrite of any input FILE or a marker change aborts —
+    // compaction is rerunnable maintenance and must never trump a
+    // data-changing commit
+    rebasePublish(spark, root, v0, m0, m0.shardNames, _ => false, entries,
+      compactShard.toSeq, "compact").map(_._1).getOrElse(
+      throw new java.util.ConcurrentModificationException(
+        s"compaction at $root: a concurrent commit rewrote this " +
+          "compaction's input files (delete/upsert/compaction); the " +
+          "stale layout was discarded — re-run the compaction"))
   }
 
   /** BIN-PACK small-file compaction — Iceberg's `optimize` binpack:
@@ -1409,21 +1462,10 @@ object VersionedTable {
       targetRows: Long): (Long, Int) = {
     require(minRows >= 1 && targetRows >= minRows,
       "compactSmallFiles needs 1 <= minRows <= targetRows")
-    var restarts = 0
-    while (true) {
+    withRestarts("compactSmallFiles", root) {
       materializeDeletes(spark, root)
-      packOnce(spark, root, minRows, targetRows) match {
-        case Some(r) => return r
-        case None =>
-          restarts += 1
-          if (restarts >= MaxDmlRestarts)
-            throw new java.util.ConcurrentModificationException(
-              s"compactSmallFiles at $root: $restarts consecutive " +
-                "conflicting commits; giving up")
-          backoff(restarts)
-      }
+      packOnce(spark, root, minRows, targetRows)
     }
-    sys.error("unreachable")
   }
 
   private def packOnce(spark: SparkSession, root: String, minRows: Long,
@@ -1464,31 +1506,10 @@ object VersionedTable {
       writeShard(spark, root, m0.statCols,
         m0.entriesOf(r).filterNot(e => touchedNames(e.name)), m0.typedCols)
     }
-    val candNames = candShards.map(_.name).toSet
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).get
-      val carriedOpt =
-        if (m0.legacy) { if (lv != v0) None else Some(Seq.empty[ShardRef]) }
-        else if (lm.morDeletes.nonEmpty) None
-        else rebaseCarry(spark, root, m0, lm, candNames, _ => false)
-      carriedOpt match {
-        case None =>
-          discard(spark, root, entries, replacements ++ packedShard.toSeq)
-          return None
-        case Some(carried) =>
-          // kind=compact: a pure rewrite — change reads and CDC skip it
-          if (tryPublish(spark, root, lv + 1, m0.statCols,
-              carried ++ replacements ++ packedShard.toSeq,
-              lm.ingestBatch, kind = "compact",
-              publishSchema(spark, root, lm, None),
-              typedCols = m0.typedCols, clusterSpec = m0.clusterSpec))
-            return Some((lv + 1, touched.size - entries.size))
-      }
-      attempt += 1
-      backoff(attempt)
-    }
-    sys.error("unreachable")
+    // kind=compact: a pure rewrite — change reads and CDC skip it
+    rebasePublish(spark, root, v0, m0, candShards.map(_.name).toSet,
+      _ => false, entries, replacements ++ packedShard.toSeq, "compact")
+      .map { case (v, _) => (v, touched.size - entries.size) }
   }
 
   private def readEntries(spark: SparkSession, root: String,
@@ -2190,20 +2211,7 @@ object VersionedTable {
   def deleteRangeMor(spark: SparkSession, root: String,
       probes: Seq[(String, Long, Long)]): (Long, Long) = {
     require(probes.nonEmpty, "deleteRangeMor needs at least one probe")
-    var restarts = 0
-    while (true) {
-      morDeleteOnce(spark, root, probes) match {
-        case Some(r) => return r
-        case None =>
-          restarts += 1
-          if (restarts >= MaxDmlRestarts)
-            throw new java.util.ConcurrentModificationException(
-              s"deleteRangeMor at $root: $restarts consecutive " +
-                "conflicting commits; giving up — retry when ingest quiesces")
-          backoff(restarts)
-      }
-    }
-    sys.error("unreachable")
+    withRestarts("deleteRangeMor", root)(morDeleteOnce(spark, root, probes))
   }
 
   private def morDeleteOnce(spark: SparkSession, root: String,
@@ -2227,32 +2235,35 @@ object VersionedTable {
     val matched = readVisible(spark, root, m0, touched.map(_.name))
       .filter(coalesce(boxPredicate(probes), lit(false))).count()
     if (matched == 0L) return Some((v0, 0L))
-    val candNames = candShards.map(_.name).toSet
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).get
+    publishMarker(spark, root, v0, m0, candShards.map(_.name).toSet,
+      MorDelete(probes, matched, files)).map(v => (v, matched))
+  }
+
+  /** The commit of both mor-delete writers: publish `marker` over the
+    * newest manifest's shards, untouched. A TRUE conflict (None) is a
+    * rewritten count basis — FILE-level, so a concurrent fold that
+    * merely re-sharded the candidate entries commutes — or a changed
+    * marker list; on a legacy flat base, any concurrent commit.
+    */
+  private def publishMarker(spark: SparkSession, root: String, v0: Long,
+      m0: Manifest, candNames: Set[String], marker: Marker): Option[Long] =
+    casPublish(spark, root) { newest =>
+      val (lv, lm) = newest.get
       val conflict =
         if (m0.legacy) lv != v0
-        else
-          // count basis rewritten — FILE-level: a concurrent fold that
-          // merely re-sharded the candidate entries commutes
-          !filesStillPresent(m0, lm, candNames) ||
-            lm.morDeletes != m0.morDeletes      // marker list changed
-      if (conflict) return None
+        else !filesStillPresent(m0, lm, candNames) ||
+          lm.morDeletes != m0.morDeletes
       // materializedShards migrates a legacy base's inline entries into
       // a real shard file — the list format stores references only
-      if (tryPublish(spark, root, lv + 1, m0.statCols,
-          materializedShards(spark, root, lm),
-          lm.ingestBatch, kind = "mordelete",
-          publishSchema(spark, root, lm, None),
-          morDeletes = lm.morDeletes :+ MorDelete(probes, matched, files),
-          typedCols = m0.typedCols, clusterSpec = m0.clusterSpec))
-        return Some((lv + 1, matched))
-      attempt += 1
-      backoff(attempt)
+      if (conflict) Some(None)
+      else Option.when(tryPublish(spark, root, lv + 1, m0.statCols,
+        materializedShards(spark, root, lm),
+        lm.ingestBatch, kind = "mordelete",
+        publishSchema(spark, root, lm, None),
+        morDeletes = lm.morDeletes :+ marker,
+        typedCols = m0.typedCols, clusterSpec = m0.clusterSpec))(
+        Some(lv + 1))
     }
-    sys.error("unreachable")
-  }
 
   /** Inline key sets up to this many keys ride in the manifest line
     * itself; larger sets spill to a parquet sidecar.
@@ -2333,23 +2344,9 @@ object VersionedTable {
     val kf = keys.na.drop()
       .select(col(keys.columns.head).as("k")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var restarts = 0
-      while (true) {
-        morKeyDeleteOnce(spark, root, keyCol, kf) match {
-          case Some(r) => return r
-          case None =>
-            restarts += 1
-            if (restarts >= MaxDmlRestarts)
-              throw new java.util.ConcurrentModificationException(
-                s"deleteKeysMor at $root: $restarts consecutive " +
-                  "conflicting commits; giving up — retry when ingest " +
-                  "quiesces")
-            backoff(restarts)
-        }
-      }
-      sys.error("unreachable")
-    } finally {
+    try withRestarts("deleteKeysMor", root)(
+      morKeyDeleteOnce(spark, root, keyCol, kf))
+    finally {
       kf.unpersist()
       ()
     }
@@ -2376,17 +2373,13 @@ object VersionedTable {
         s"deleteKeysMor: '$keyCol' is a string typed column but the " +
           s"key frame is $ft")
     }
-    // ONE job: count + dense bounds together (guide §1 — a separate
-    // count() is a full extra pass over the key frame)
-    val kst = kf.agg(count(lit(1)), min(col("k")), max(col("k"))).head
-    val n = kst.getLong(0)
+    val (n, bounds, _) = countAndBounds(kf, Seq("k"), "deleteKeysMor")
     if (n == 0L) return Some((v0, 0L))
     // sparse-key refinement, as in upsertByKey: few keys test files
     // against the actual values, not one global box; string keys test
     // against the typed truncated bounds
     val hit = keyedCandidateTest(m0, Seq(keyCol),
-      kf.select(col("k").as(keyCol)), n, "deleteKeysMor",
-      Some(Seq((kst.get(1), kst.get(2)))))
+      kf.select(col("k").as(keyCol)), n, "deleteKeysMor", bounds)
     val candShards = m0.shards.filter(r =>
       r.name.isEmpty || hit(r.boxes, r.tboxes))
     val touched = candShards.flatMap(r => m0.entriesOf(r))
@@ -2422,36 +2415,15 @@ object VersionedTable {
       case _ => ""
     }
     val kind = ki match { case Left(_) => 'L'; case Right(_) => 's' }
-    val candNames = candShards.map(_.name).toSet
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).get
-      val conflict =
-        if (m0.legacy) lv != v0
-        else
-          !filesStillPresent(m0, lm, candNames) ||
-            lm.morDeletes != m0.morDeletes
-      if (conflict) {
-        sidecar.foreach { f =>
-          try fsFor(spark, root).delete(
-            new Path(manifestsDir(root), f), false)
-          catch { case _: Exception => () }
-        }
-        return None
-      }
-      if (tryPublish(spark, root, lv + 1, m0.statCols,
-          materializedShards(spark, root, lm),
-          lm.ingestBatch, kind = "mordelete",
-          publishSchema(spark, root, lm, None),
-          morDeletes = lm.morDeletes :+
-            MorKeyDelete(keyCol, inline, sidecar, bloom, matched, files,
-              kind, inlineTyped),
-          typedCols = m0.typedCols, clusterSpec = m0.clusterSpec))
-        return Some((lv + 1, matched))
-      attempt += 1
-      backoff(attempt)
+    val published = publishMarker(spark, root, v0, m0,
+      candShards.map(_.name).toSet,
+      MorKeyDelete(keyCol, inline, sidecar, bloom, matched, files, kind,
+        inlineTyped))
+    if (published.isEmpty) sidecar.foreach { f =>
+      try fsFor(spark, root).delete(new Path(manifestsDir(root), f), false)
+      catch { case _: Exception => () }
     }
-    sys.error("unreachable")
+    published.map(v => (v, matched))
   }
 
   /** One immutable parquet key sidecar under `manifests/` — written
@@ -2482,22 +2454,8 @@ object VersionedTable {
     * rows are unchanged — CDC treats it like a compaction. Returns the
     * published version (or the current one when no markers exist).
     */
-  def materializeDeletes(spark: SparkSession, root: String): Long = {
-    var restarts = 0
-    while (true) {
-      materializeOnce(spark, root) match {
-        case Some(v) => return v
-        case None =>
-          restarts += 1
-          if (restarts >= MaxDmlRestarts)
-            throw new java.util.ConcurrentModificationException(
-              s"materializeDeletes at $root: $restarts consecutive " +
-                "conflicting commits; giving up")
-          backoff(restarts)
-      }
-    }
-    sys.error("unreachable")
-  }
+  def materializeDeletes(spark: SparkSession, root: String): Long =
+    withRestarts("materializeDeletes", root)(materializeOnce(spark, root))
 
   private def materializeOnce(spark: SparkSession,
       root: String): Option[Long] = {
@@ -2519,30 +2477,9 @@ object VersionedTable {
       writeShard(spark, root, m0.statCols,
         m0.entriesOf(r).filterNot(e => touchedNames(e.name)), m0.typedCols)
     }
-    val candNames = candShards.map(_.name).toSet
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).get
-      val carriedOpt =
-        if (m0.legacy) { if (lv != v0) None else Some(Seq.empty[ShardRef]) }
-        else if (lm.morDeletes != m0.morDeletes) None
-        else rebaseCarry(spark, root, m0, lm, candNames, _ => false)
-      carriedOpt match {
-        case None =>
-          discard(spark, root, entries, replacements ++ survivorShard.toSeq)
-          return None
-        case Some(carried) =>
-          if (tryPublish(spark, root, lv + 1, m0.statCols,
-              carried ++ replacements ++ survivorShard.toSeq,
-              lm.ingestBatch, kind = "materialize",
-              publishSchema(spark, root, lm, None),
-              typedCols = m0.typedCols, clusterSpec = m0.clusterSpec))
-            return Some(lv + 1)
-      }
-      attempt += 1
-      backoff(attempt)
-    }
-    sys.error("unreachable")
+    rebasePublish(spark, root, v0, m0, candShards.map(_.name).toSet,
+      _ => false, entries, replacements ++ survivorShard.toSeq,
+      "materialize").map(_._1)
   }
 
   /** STATS-PRUNED copy-on-write DELETE: remove every row inside the
@@ -2577,25 +2514,13 @@ object VersionedTable {
   def deleteRange(spark: SparkSession, root: String,
       probes: Seq[(String, Long, Long)]): (Long, Long) = {
     require(probes.nonEmpty, "deleteRange needs at least one probe")
-    var restarts = 0
-    while (true) {
+    withRestarts("deleteRange", root) {
       // COW DML computes against raw files — fold any mor-delete
       // markers into the data first so its rewrites cannot resurrect
       // logically deleted rows
       materializeDeletes(spark, root)
-      deleteOnce(spark, root, probes) match {
-        case Some(r) => return r
-        case None =>
-          restarts += 1
-          if (restarts >= MaxDmlRestarts)
-            throw new java.util.ConcurrentModificationException(
-              s"deleteRange at $root: $restarts consecutive conflicting " +
-                "commits (appends into the box or rewrites of the " +
-                "candidate shards); giving up — retry when ingest quiesces")
-          backoff(restarts)
-      }
+      deleteOnce(spark, root, probes)
     }
-    sys.error("unreachable")
   }
 
   /** One optimistic delete attempt: Some(result) on publish or no-op,
@@ -2657,37 +2582,14 @@ object VersionedTable {
       writeShard(spark, root, m0.statCols,
         m0.entriesOf(r).filterNot(e => touchedNames(e.name)), m0.typedCols)
     }
-    val candNames = candShards.map(_.name).toSet
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).get
-      // conflicts at the FILE level (rebaseCarry): a concurrent fold of
-      // the candidate shards commutes; an entry that actually LEFT the
-      // table, or a since-base entry whose box intersects the delete
-      // box (rows this delete's rewrite never saw), restarts
-      val carriedOpt =
-        if (m0.legacy) { if (lv != v0) None else Some(Seq.empty[ShardRef]) }
-        else if (lm.morDeletes.nonEmpty) None // a racing mor-delete landed
-        else rebaseCarry(spark, root, m0, lm, candNames,
-          e => hit(e.boxes, e.tboxes, e.nullsAt, e.rows))
-      carriedOpt match {
-        case None =>
-          discard(spark, root, entries, replacements ++ survivorShard.toSeq)
-          return None
-        case Some(carried) =>
-          // kind=delete: like compaction, the survivor files REWRITE
-          // existing rows — readChanges must not report them as new
-          if (tryPublish(spark, root, lv + 1, m0.statCols,
-              carried ++ replacements ++ survivorShard.toSeq,
-              lm.ingestBatch, kind = "delete",
-              publishSchema(spark, root, lm, None),
-              typedCols = m0.typedCols, clusterSpec = m0.clusterSpec))
-            return Some((lv + 1, deleted))
-      }
-      attempt += 1
-      backoff(attempt)
-    }
-    sys.error("unreachable")
+    // a since-base entry whose bounds `hit` (rows this delete's rewrite
+    // never saw) restarts. kind=delete: like compaction, the survivor
+    // files REWRITE existing rows — readChanges must not report them
+    // as new
+    rebasePublish(spark, root, v0, m0, candShards.map(_.name).toSet,
+      e => hit(e.boxes, e.tboxes, e.nullsAt, e.rows), entries,
+      replacements ++ survivorShard.toSeq, "delete")
+      .map { case (v, _) => (v, deleted) }
   }
 
   /** COW DELETE by a conjunctive SQL predicate over stat columns —
@@ -2711,23 +2613,11 @@ object VersionedTable {
     * append that may hold matching rows restarts the delete.
     */
   def deleteWhere(spark: SparkSession, root: String,
-      predicateSql: String): (Long, Long) = {
-    var restarts = 0
-    while (true) {
+      predicateSql: String): (Long, Long) =
+    withRestarts("deleteWhere", root) {
       materializeDeletes(spark, root)
-      deleteWhereOnce(spark, root, predicateSql) match {
-        case Some(r) => return r
-        case None =>
-          restarts += 1
-          if (restarts >= MaxDmlRestarts)
-            throw new java.util.ConcurrentModificationException(
-              s"deleteWhere at $root: $restarts consecutive conflicting " +
-                "commits; giving up — retry when ingest quiesces")
-          backoff(restarts)
-      }
+      deleteWhereOnce(spark, root, predicateSql)
     }
-    sys.error("unreachable")
-  }
 
   private def deleteWhereOnce(spark: SparkSession, root: String,
       predicateSql: String): Option[(Long, Long)] = {
@@ -2948,7 +2838,8 @@ object VersionedTable {
     * MIXED long and string key columns. Sparse key sets (≤
     * [[SparseKeyProbeLimit]]) test the actual values — two keys at the
     * extremes of the key space touch two files, not the global-box
-    * span; larger sets fall back to one bounds aggregate per column.
+    * span; larger sets fall back to `bounds`, each key column's
+    * [min, max] from the caller's [[countAndBounds]] job.
     * String tests run against the manifest's TRUNCATED bounds (prefix
     * min ≤ every value, increment-truncated max ≥), so candidacy can
     * only widen, never miss; an absent bound side never prunes.
@@ -2957,7 +2848,7 @@ object VersionedTable {
     */
   private def keyedCandidateTest(m: Manifest, keyCols: Seq[String],
       keyFrame: DataFrame, total: Long, what: String,
-      precomputedBounds: Option[Seq[(Any, Any)]] = None)
+      bounds: Seq[(Any, Any)])
       : (Seq[(Long, Long)], Seq[TBound]) => Boolean = {
     val idx = keyCols.map(c => keyIndex(m, c, what))
     val keyTuples: Option[Seq[Seq[Any]]] =
@@ -2968,25 +2859,12 @@ object VersionedTable {
             case (Right(_), p) => encodeStrKey(row.getString(p))
           }))
       else None
-    // dense bounds: taken from the caller when its counting aggregate
-    // already carried min/max (one fused job instead of count + bounds),
-    // otherwise computed ONLY when the sparse set is too large
-    lazy val dense: Seq[(Any, Any)] = precomputedBounds match {
-      case Some(bs) => idx.zip(bs).map {
-        case (Left(_), (lo, hi)) => (lo, hi)
-        case (Right(_), (lo, hi)) =>
-          (encodeStrKey(lo.asInstanceOf[String]),
-            encodeStrKey(hi.asInstanceOf[String]))
-      }
-      case None =>
-        val aggs = keyCols.flatMap(c => Seq(min(col(c)), max(col(c))))
-        val st = keyFrame.agg(aggs.head, aggs.tail: _*).head
-        idx.zipWithIndex.map {
-          case (Left(_), p) => (st.getLong(2 * p), st.getLong(2 * p + 1))
-          case (Right(_), p) =>
-            (encodeStrKey(st.getString(2 * p)),
-              encodeStrKey(st.getString(2 * p + 1)))
-        }
+    // dense bounds, encoded only when the sparse set is too large
+    lazy val dense: Seq[(Any, Any)] = idx.zip(bounds).map {
+      case (Left(_), lohi) => lohi
+      case (Right(_), (lo, hi)) =>
+        (encodeStrKey(lo.asInstanceOf[String]),
+          encodeStrKey(hi.asInstanceOf[String]))
     }
     // may [lo, hi] (encoded) intersect typed bound ti? Absent bounds
     // (legacy pseudo-shard, unprovable side) never prune.
@@ -3012,6 +2890,61 @@ object VersionedTable {
           strHit(tb, ti, lo.asInstanceOf[String], hi.asInstanceOf[String])
       }
     }
+  }
+
+  /** ONE job over `frame`: its row count and each of `cols`' [min, max]
+    * (the dense bounds of [[keyedCandidateTest]]), with the caller's
+    * `extra` aggregates riding the same pass — their values start at
+    * index 1 + 2 × cols.size of the returned row. A non-empty frame
+    * must bound every column: the dense test compares the bounds as
+    * Longs, where a NULL would silently unbox to 0.
+    */
+  private def countAndBounds(frame: DataFrame, cols: Seq[String],
+      what: String, extra: Seq[Column] = Seq.empty)
+      : (Long, Seq[(Any, Any)], org.apache.spark.sql.Row) = {
+    val aggs = count(lit(1)) +:
+      (cols.flatMap(c => Seq(min(col(c)), max(col(c)))) ++ extra)
+    val r = frame.agg(aggs.head, aggs.tail: _*).head
+    val total = r.getLong(0)
+    val bounds = cols.indices.map(p => (r.get(1 + 2 * p), r.get(2 + 2 * p)))
+    cols.zip(bounds).foreach { case (c, (lo, hi)) =>
+      require(total == 0L || (lo != null && hi != null),
+        s"$what: every one of $total rows carries a NULL key '$c' — " +
+          "a NULL key can neither match nor be matched")
+    }
+    (total, bounds, r)
+  }
+
+  /** The upsert's validation, fused into the [[countAndBounds]] job
+    * that also yields the engine's key count and dense bounds (keys
+    * are unique per update row once validated, so the updates' bounds
+    * ARE the key frame's). count(col) vs count(*) proves NO NULL keys:
+    * NULL = NULL never joins, so a NULL-key update row would neither
+    * replace nor be replaceable — it would duplicate on every repeated
+    * upsert. countDistinct over the key tuple proves KEY-UNIQUENESS:
+    * two update rows with one key would both land.
+    */
+  private def validatedUpsertKeys(updates: DataFrame,
+      keyCols: Seq[String]): (Long, Seq[(Any, Any)]) = {
+    val (total, bounds, r) = countAndBounds(updates, keyCols, "upsertByKey",
+      countDistinct(col(keyCols.head), keyCols.tail.map(col): _*) +:
+        keyCols.map(c => count(col(c))))
+    val at = 1 + 2 * keyCols.size
+    require(total > 0, "upsertByKey: empty updates")
+    keyCols.zipWithIndex.foreach { case (c, i) =>
+      val nonNull = r.getLong(at + 1 + i)
+      require(nonNull == total,
+        s"upsertByKey: ${total - nonNull} update rows " +
+          s"carry a NULL key '$c' — NULL keys can neither replace " +
+          "nor be replaced and would duplicate on every upsert")
+    }
+    val distinctKeys = r.getLong(at)
+    require(distinctKeys == total,
+      s"upsertByKey: ${total - distinctKeys} duplicate-key update rows " +
+        s"over ${keyCols.mkString("(", ", ", ")")} — both copies would " +
+        "land as an atomically committed corruption; de-duplicate the " +
+        "updates first")
+    (total, bounds)
   }
 
   /** Keyed UPSERT (the MERGE INTO shape) as ONE atomic version: rows
@@ -3041,30 +2974,22 @@ object VersionedTable {
   def upsertByKey(spark: SparkSession, root: String, updates: DataFrame,
       keyCols: Seq[String]): (Long, Long) = {
     require(keyCols.nonEmpty, "upsertByKey needs at least one key column")
-    // updates is consumed by several actions (bounds agg, key-frame
-    // broadcast, the aligned write; all of it again per restart) — a
+    // updates is consumed by several actions (the validation agg, then
+    // per attempt the key-frame broadcast and the aligned write) — a
     // derived MERGE source would re-execute its whole lineage each
     // time unpinned
     val pinned = updates.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      var restarts = 0
-      while (true) {
+      val keyStats = validatedUpsertKeys(pinned, keyCols)
+      val keyFrame = pinned.select(keyCols.map(col): _*).distinct()
+      withRestarts("upsertByKey", root) {
         // same rule as deleteRange: COW rewrites must not resurrect
         // rows a mor-delete marker logically removed
         materializeDeletes(spark, root)
-        upsertOnce(spark, root, pinned, keyCols) match {
-          case Some(r) => return r
-          case None =>
-            restarts += 1
-            if (restarts >= MaxDmlRestarts)
-              throw new java.util.ConcurrentModificationException(
-                s"upsertByKey at $root: $restarts consecutive conflicting " +
-                  "commits; giving up — retry when ingest quiesces")
-            backoff(restarts)
-        }
+        keyedChangesOnce(spark, root, pinned, keyFrame, keyCols, None, None,
+          "upsertByKey", Some(keyStats)).map { case (v, _, n) => (v, n) }
       }
-      sys.error("unreachable")
     } finally {
       pinned.unpersist()
       ()
@@ -3091,127 +3016,16 @@ object VersionedTable {
       baseV: Long): Option[(Long, Long)] = {
     val pinned = updates.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try upsertOnce(spark, root, pinned, keyCols, Some(baseV))
-    finally {
+    try {
+      val keyStats = validatedUpsertKeys(pinned, keyCols)
+      keyedChangesOnce(spark, root, pinned,
+        pinned.select(keyCols.map(col): _*).distinct(), keyCols, None,
+        Some(baseV), "upsertByKey", Some(keyStats))
+        .map { case (v, _, n) => (v, n) }
+    } finally {
       pinned.unpersist()
       ()
     }
-  }
-
-  private def upsertOnce(spark: SparkSession, root: String,
-      pinned: DataFrame, keyCols: Seq[String],
-      baseV: Option[Long] = None): Option[(Long, Long)] = {
-    val (v0, m) = baseV match {
-      case Some(b) => (b, readManifest(spark, root, b))
-      case None => latestManifest(spark, root).getOrElse(
-        sys.error(s"nothing to upsert into at $root"))
-    }
-    if (m.morDeletes.nonEmpty) return None // wrapper materializes first
-    val merged = mergedSchema(tableSchema(spark, root, Some(m)),
-      pinned.schema)
-    // count(col) vs count(*) proves NO NULL keys: NULL = NULL never
-    // joins, so a NULL-key update row would neither replace nor be
-    // replaceable — it would duplicate on every repeated upsert.
-    // countDistinct over the key tuple proves KEY-UNIQUENESS: two
-    // update rows with one key would both land.
-    // min/max per key ride in the SAME validation job: the dense
-    // candidate bounds below come for free instead of a second pass
-    // (keys are unique per update row, so the updates' bounds ARE the
-    // distinct key frame's bounds)
-    val aggs = (count(lit(1)) +:
-      countDistinct(col(keyCols.head), keyCols.tail.map(col): _*) +:
-      keyCols.map(c => count(col(c)))) ++
-      keyCols.flatMap(c => Seq(min(col(c)), max(col(c))))
-    val r = pinned.agg(aggs.head, aggs.tail: _*).head
-    val total = r.getLong(0)
-    val distinctKeys = r.getLong(1)
-    val boundsBase = 2 + keyCols.size
-    val keyBounds: Seq[(Any, Any)] = keyCols.indices.map(p =>
-      (r.get(boundsBase + 2 * p), r.get(boundsBase + 2 * p + 1)))
-    require(total > 0, "upsertByKey: empty updates")
-    keyCols.zipWithIndex.foreach { case (c, i) =>
-      require(r.getLong(2 + i) == total,
-        s"upsertByKey: ${total - r.getLong(2 + i)} update rows " +
-          s"carry a NULL key '$c' — NULL keys can neither replace " +
-          "nor be replaced and would duplicate on every upsert")
-    }
-    require(distinctKeys == total,
-      s"upsertByKey: ${total - distinctKeys} duplicate-key update rows " +
-        s"over ${keyCols.mkString("(", ", ", ")")} — both copies would " +
-        "land as an atomically committed corruption; de-duplicate the " +
-        "updates first")
-    val keyFrame = pinned.select(keyCols.map(col): _*).distinct()
-    // SPARSE-KEY refinement (inside keyedCandidateTest): with few
-    // keys, test files against the actual key tuples instead of one
-    // global box — updates touching keys at both extremes of the key
-    // space otherwise make the box cover everything and degrade to a
-    // full-table rewrite. Long keys probe the boxes, string keys the
-    // typed truncated bounds.
-    val mayHoldKeys = keyedCandidateTest(m, keyCols, keyFrame, total,
-      "upsertByKey", Some(keyBounds))
-    val candShards = m.shards.filter(r =>
-      r.name.isEmpty || mayHoldKeys(r.boxes, r.tboxes))
-    val touched = candShards.flatMap(r => m.entriesOf(r))
-      .filter(e => mayHoldKeys(e.boxes, e.tboxes))
-    val touchedNames = touched.map(_.name).toSet
-    val rewritten =
-      if (touched.isEmpty) Seq.empty
-      else {
-        val survivors = readNamed(spark, root, m, touched.map(_.name))
-          .join(broadcast(keyFrame), keyCols, "left_anti")
-        writeFiles(survivors, root, m.statCols, m.typedCols)
-      }
-    val replaced = touched.map(_.rows).sum - rewritten.map(_.rows).sum
-    // align the updates to the evolved schema (older columns they
-    // lack null-fill; readNamed serves everything under `merged`)
-    val alignedUpdates = merged.fields.foldLeft(pinned: DataFrame) {
-      (d, f) =>
-        if (d.columns.contains(f.name)) d
-        else d.withColumn(f.name, lit(null).cast(f.dataType))
-    }.select(merged.fieldNames.map(col): _*)
-    // update rows land under the declared cluster shape too — every
-    // write path honors the spec, exactly like Iceberg partitioning
-    val newEntries = writeFiles(alignedUpdates, root, m.statCols,
-      m.typedCols, shape = clusterShape(m.clusterSpec))
-    // replacement shards: candidate shards lose their touched files,
-    // keep everything else by name; the rewritten survivors and the
-    // update rows land as new shards
-    val rewrittenShard = writeShard(spark, root, m.statCols, rewritten,
-      m.typedCols)
-    val newShard = writeShard(spark, root, m.statCols, newEntries,
-      m.typedCols)
-    val replacements = candShards.flatMap { r =>
-      writeShard(spark, root, m.statCols,
-        m.entriesOf(r).filterNot(e => touchedNames(e.name)), m.typedCols)
-    }
-    val candNames = candShards.map(_.name).toSet
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).get
-      val carriedOpt =
-        if (m.legacy) { if (lv != v0) None else Some(Seq.empty[ShardRef]) }
-        else if (lm.morDeletes.nonEmpty) None // a racing mor-delete landed
-        else rebaseCarry(spark, root, m, lm, candNames,
-          e => mayHoldKeys(e.boxes, e.tboxes))
-      carriedOpt match {
-        case None =>
-          discard(spark, root, rewritten ++ newEntries,
-            replacements ++ rewrittenShard.toSeq ++ newShard.toSeq)
-          return None
-        case Some(carried) =>
-          if (tryPublish(spark, root, lv + 1, m.statCols,
-              carried ++ replacements ++ rewrittenShard.toSeq ++
-                newShard.toSeq,
-              lm.ingestBatch,
-              kind = "upsert", publishSchema(spark, root, lm, Some(merged)),
-              newFiles = newEntries.map(_.name),
-              typedCols = m.typedCols, clusterSpec = m.clusterSpec))
-            return Some((lv + 1, replaced))
-      }
-      attempt += 1
-      backoff(attempt)
-    }
-    sys.error("unreachable")
   }
 
   /** Apply ONE CDC batch to this table ATOMICALLY and EXACTLY-ONCE —
@@ -3266,23 +3080,11 @@ object VersionedTable {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pinnedUpserts = upserts.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var restarts = 0
-      while (true) {
-        materializeDeletes(spark, root)
-        applyCdcOnce(spark, root, pinnedUpserts, keyFrame, keyCols,
-          Some(sourceVersion), None) match {
-          case Some(r) => return r
-          case None =>
-            restarts += 1
-            if (restarts >= MaxDmlRestarts)
-              throw new java.util.ConcurrentModificationException(
-                s"applyCdcBatch at $root: $restarts consecutive " +
-                  "conflicting commits; giving up")
-            backoff(restarts)
-        }
-      }
-      sys.error("unreachable")
+    try withRestarts("applyCdcBatch", root) {
+      materializeDeletes(spark, root)
+      keyedChangesOnce(spark, root, pinnedUpserts, keyFrame, keyCols,
+        Some(sourceVersion), None, "applyCdcBatch")
+        .map { case (v, applied, _) => (v, applied) }
     } finally {
       keyFrame.unpersist(); pinnedUpserts.unpersist()
       ()
@@ -3310,62 +3112,66 @@ object VersionedTable {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pinnedUpserts = upserts.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applyCdcOnce(spark, root, pinnedUpserts, keyFrame, keyCols,
-      None, Some(baseV)).map(_._1)
+    try keyedChangesOnce(spark, root, pinnedUpserts, keyFrame, keyCols,
+      None, Some(baseV), "applyCdcBatch").map(_._1)
     finally {
       keyFrame.unpersist(); pinnedUpserts.unpersist()
       ()
     }
   }
 
-  private def applyCdcOnce(spark: SparkSession, root: String,
+  /** The KEYED-CHANGES engine — one optimistic attempt of
+    * [[applyCdcBatch]], [[upsertByKey]] and SQL UPDATE/MERGE: `upserts`
+    * replace current rows with the same key (new keys append) and
+    * every other key of `keyFrame` (NULL-free and distinct: the upsert
+    * keys plus any delete keys) loses its rows, all in ONE version
+    * computed against `baseV` (default: the newest). With a
+    * `frontier`, a base at or past it is a replay that changes
+    * nothing, and a batch with neither keys nor upserts publishes only
+    * the frontier. `keyStats` is `keyFrame`'s (count, bounds) when the
+    * caller's own validation job already carried them; otherwise one
+    * [[countAndBounds]] job over the pinned key frame computes them.
+    * Returns Some((version, applied — false for a replay, rows
+    * replaced)); None on a true conflict or when mor-delete markers
+    * exist at the base (the caller materializes first).
+    */
+  private def keyedChangesOnce(spark: SparkSession, root: String,
       upserts: DataFrame, keyFrame: DataFrame, keyCols: Seq[String],
-      frontier: Option[Long], baseV: Option[Long])
-      : Option[(Long, Boolean)] = {
+      frontier: Option[Long], baseV: Option[Long], what: String,
+      keyStats: Option[(Long, Seq[(Any, Any)])] = None)
+      : Option[(Long, Boolean, Long)] = {
     val (v0, m) = baseV match {
       case Some(b) => (b, readManifest(spark, root, b))
-      case None => latestManifest(spark, root).get
+      case None => latestManifest(spark, root).getOrElse(
+        sys.error(s"$what: no versions at $root"))
     }
-    frontier.foreach { sv =>
-      if (m.ingestBatch >= sv) return Some((v0, false)) // replay
-    }
+    if (frontier.exists(m.ingestBatch >= _)) return Some((v0, false, 0L))
     if (m.morDeletes.nonEmpty) return None // wrapper materializes first
     val merged = mergedSchema(tableSchema(spark, root, Some(m)),
       upserts.schema)
-    // ONE job materializes the pinned key frame AND carries the dense
-    // candidate bounds (guide §1: the separate count() was a full extra
-    // pass over the key frame's CDC lineage per applied batch)
-    val keyAggs = count(lit(1)) +:
-      keyCols.flatMap(c => Seq(min(col(c)), max(col(c))))
-    val keyStats = keyFrame.agg(keyAggs.head, keyAggs.tail: _*).head
-    val total = keyStats.getLong(0)
-    val keyBounds: Option[Seq[(Any, Any)]] =
-      if (total == 0L) None
-      else Some(keyCols.indices.map(p =>
-        (keyStats.get(1 + 2 * p), keyStats.get(2 + 2 * p))))
-    if (total == 0L && upserts.isEmpty) {
-      val sv = frontier.getOrElse(
-        // no frontier, no changes: a MERGE that matched nothing —
-        // publish nothing
-        return Some((v0, true)))
+    val (total, bounds) = keyStats.getOrElse {
+      val (n, b, _) = countAndBounds(keyFrame, keyCols, what)
+      (n, b)
+    }
+    if (total == 0L && upserts.isEmpty) return frontier match {
+      // no frontier, no changes: a MERGE that matched nothing —
+      // publish nothing
+      case None => Some((v0, true, 0L))
       // a version with no row changes (compaction-only range): publish
       // ONLY the frontier so the replay contract still advances —
       // carried shards unchanged
-      var attempt = 0
-      while (true) {
-        val (lv, lm) = latestManifest(spark, root).get
-        if (lm.ingestBatch >= sv) return Some((lv, false))
-        if (tryPublish(spark, root, lv + 1, m.statCols,
-            materializedShards(spark, root, lm), sv,
-            kind = "append", publishSchema(spark, root, lm, None),
-            morDeletes = lm.morDeletes, typedCols = m.typedCols, clusterSpec = m.clusterSpec))
-          return Some((lv + 1, true))
-        attempt += 1
-        backoff(attempt)
-      }
+      case Some(sv) => Some(casPublish(spark, root) { newest =>
+        val (lv, lm) = newest.get
+        if (lm.ingestBatch >= sv) Some((lv, false, 0L))
+        else Option.when(tryPublish(spark, root, lv + 1, m.statCols,
+          materializedShards(spark, root, lm), sv,
+          kind = "append", publishSchema(spark, root, lm, None),
+          morDeletes = lm.morDeletes, typedCols = m.typedCols,
+          clusterSpec = m.clusterSpec))((lv + 1, true, 0L))
+      })
     }
     val mayHoldKeys = keyedCandidateTest(m, keyCols, keyFrame, total,
-      "applyCdcBatch", keyBounds)
+      what, bounds)
     val candShards = m.shards.filter(r =>
       r.name.isEmpty || mayHoldKeys(r.boxes, r.tboxes))
     val touched = candShards.flatMap(r => m.entriesOf(r))
@@ -3376,13 +3182,21 @@ object VersionedTable {
       else writeFiles(readNamed(spark, root, m, touched.map(_.name))
         .join(broadcast(keyFrame), keyCols, "left_anti"),
         root, m.statCols, m.typedCols)
+    val replaced = touched.map(_.rows).sum - rewritten.map(_.rows).sum
+    // align the upserts to the evolved schema (older columns they lack
+    // null-fill; readNamed serves everything under `merged`)
     val alignedUpserts = merged.fields.foldLeft(upserts: DataFrame) {
       (d, f) =>
         if (d.columns.contains(f.name)) d
         else d.withColumn(f.name, lit(null).cast(f.dataType))
     }.select(merged.fieldNames.map(col): _*)
+    // upsert rows land under the declared cluster shape too — every
+    // write path honors the spec, exactly like Iceberg partitioning
     val newEntries = writeFiles(alignedUpserts, root, m.statCols,
       m.typedCols, shape = clusterShape(m.clusterSpec))
+    // replacement shards: candidate shards lose their touched files,
+    // keep everything else by name; the rewritten survivors and the
+    // upsert rows land as new shards
     val rewrittenShard = writeShard(spark, root, m.statCols, rewritten,
       m.typedCols)
     val newShard = writeShard(spark, root, m.statCols, newEntries,
@@ -3391,40 +3205,11 @@ object VersionedTable {
       writeShard(spark, root, m.statCols,
         m.entriesOf(r).filterNot(e => touchedNames(e.name)), m.typedCols)
     }
-    val candNames = candShards.map(_.name).toSet
-    var attempt = 0
-    while (true) {
-      val (lv, lm) = latestManifest(spark, root).get
-      if (frontier.exists(lm.ingestBatch >= _)) {
-        // a racing twin applied this batch: ours is a replay
-        discard(spark, root, rewritten ++ newEntries,
-          replacements ++ rewrittenShard.toSeq ++ newShard.toSeq)
-        return Some((lv, false))
-      }
-      val carriedOpt =
-        if (m.legacy) { if (lv != v0) None else Some(Seq.empty[ShardRef]) }
-        else if (lm.morDeletes.nonEmpty) None
-        else rebaseCarry(spark, root, m, lm, candNames,
-          e => mayHoldKeys(e.boxes, e.tboxes))
-      carriedOpt match {
-        case None =>
-          discard(spark, root, rewritten ++ newEntries,
-            replacements ++ rewrittenShard.toSeq ++ newShard.toSeq)
-          return None
-        case Some(carried) =>
-          if (tryPublish(spark, root, lv + 1, m.statCols,
-              carried ++ replacements ++ rewrittenShard.toSeq ++
-                newShard.toSeq,
-              frontier.getOrElse(lm.ingestBatch), kind = "upsert",
-              publishSchema(spark, root, lm, Some(merged)),
-              newFiles = newEntries.map(_.name),
-              typedCols = m.typedCols, clusterSpec = m.clusterSpec))
-            return Some((lv + 1, true))
-      }
-      attempt += 1
-      backoff(attempt)
-    }
-    sys.error("unreachable")
+    rebasePublish(spark, root, v0, m, candShards.map(_.name).toSet,
+      e => mayHoldKeys(e.boxes, e.tboxes), rewritten ++ newEntries,
+      replacements ++ rewrittenShard.toSeq ++ newShard.toSeq, "upsert",
+      Some(merged), newEntries.map(_.name), frontier)
+      .map { case (v, applied) => (v, applied, replaced) }
   }
 
   /** POINT lookup (`col = value`) with THREE metadata-only pruning
