@@ -21,39 +21,14 @@ object Bench {
     "ann_bruteforce_topk", "ta_quality_score", "ev_sessionize")
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.adhesive.AdhesiveSparkExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // semi-join reduction for non-broadcastable selective joins; the
-      // default size gates keep it dormant at test scale (RuntimeFilterSpec)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: JVM/codegen/parquet-footer costs land here, not on
-    // whichever query happens to run first.
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count()
-      .write.format("noop").mode("overwrite").save()
-    // the north-star tables too — the alphabetically-first timed query is
-    // an ann_/dd_ one, and cold footer+page reads shouldn't bill to it
-    Seq("documents", "embeddings", "events").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.format("noop").mode("overwrite").save()
-    }
     // A renamed headline query must fail loudly, not silently shrink the
     // frozen metric.
     val missing = Headline.filterNot(SparkEntry.queries.contains)
     require(missing.isEmpty, s"headline queries not in SparkEntry: $missing")
     // dev mode: `runMain graft.Bench q_a q_b` times only those queries
-    val selected =
-      if (args.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.contains).toMap
+    val ordered = SparkEntry.select(args.toSeq)
+    val spark = GraftSession()
+    warmup(spark, sfDir)
     // Noise resistance: the whole suite is timed RUNS times (whole-suite
     // passes, so each pass sees the same GC/page-cache regime) and each
     // query records its best run. One slow pass from host noise — the
@@ -67,7 +42,6 @@ object Bench {
         s"SPARK_GRAFT_BENCH_RUNS must be an integer, got '$runsRaw'"))
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs " +
       "(0 passes would emit a plausible-looking all-failed JSON)")
-    val ordered = selected.toSeq.sortBy(_._1)
     def timePass(pass: String,
         qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
         : Seq[(String, Double)] =
@@ -151,5 +125,20 @@ object Bench {
     // stdout tail the driver parses
     println(s"""{"metric":"headline_total","value":${r3(total)},"unit":"sec","runs":$runs,"headline_runs":${runs + extraRuns},"failed":$failed,"queries":$headlineQs,"spread":$headlineSpread,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Untimed warmup: JVM/codegen/parquet-footer costs land here, not on
+    * whichever query happens to run first. The north-star tables are read
+    * too — the alphabetically-first timed query is an ann_/dd_ one, and
+    * cold footer+page reads shouldn't bill to it.
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
+    spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .groupBy("l_returnflag").count()
+      .write.format("noop").mode("overwrite").save()
+    Seq("documents", "embeddings", "events").foreach { t =>
+      spark.read.parquet(s"$sfDir/$t.parquet")
+        .write.format("noop").mode("overwrite").save()
+    }
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of one or more SparkEntry
   * queries — used to keep filters pushed down, small sides broadcast, and
-  * whole-stage codegen spans wide. Usage:
+  * whole-stage codegen spans wide. Same session as Bench. No names
+  * explains every entry. Usage:
   *
   *   sbt "runMain graft.Explain [sfDir] q3_shipping_priority q6_..."
   */
@@ -14,24 +13,12 @@ object Explain {
       case d :: rest if d.startsWith("/") => (d, rest)
       case rest                           => ("/root/testdata/sf0.01", rest)
     }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.adhesive.AdhesiveSparkExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // semi-join reduction for non-broadcastable selective joins; the
-      // default size gates keep it dormant at test scale (RuntimeFilterSpec)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .getOrCreate()
+    val targets = SparkEntry.select(names)
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
-    val targets =
-      if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names
-    targets.foreach { n =>
+    targets.foreach { case (n, fn) =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

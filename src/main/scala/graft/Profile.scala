@@ -1,18 +1,21 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
 /** Dev tool (guide §1 "measure first"): run one or more SparkEntry queries
   * through the noop sink with a listener attached and print where the time
   * actually goes — jobs, stages, task counts, executor run time vs GC vs
-  * shuffle read/write, bytes moved. Usage:
+  * shuffle read/write, bytes moved. Same session and warmup as Bench.
+  * Usage:
   *
   *   sbt "runMain graft.Profile [sfDir] [--runs N] q_distinct_agg dd_exact"
   *
-  * Timings here guide optimization; the graded numbers stay Bench's.
+  * No names profiles Bench's headline set. A tier × cores sweep is
+  * `MakeSfTier` followed by `SPARK_GRAFT_CPUS=c runMain graft.Profile
+  * <tierDir> q…`. Timings here guide optimization; the graded numbers stay
+  * Bench's.
   */
 object Profile {
 
@@ -24,7 +27,6 @@ object Profile {
     var shuffleReadB = 0L
     var shuffleWriteB = 0L
     var fetchWaitMs = 0L
-    var writeTimeMs = 0L
     var inputB = 0L
     var wallMs = 0L
     var maxTaskMs = 0L
@@ -39,24 +41,9 @@ object Profile {
       case "--runs" :: n :: r => (n.toInt, r)
       case r                  => (2, r)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffleP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.adhesive.AdhesiveSparkExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // dev A/B knob: force the SortShuffleWriter (2 files/map task)
-      // below the given reduce count instead of the bypass writer
-      // (R files/map task) — for measuring shuffle-file-op overhead
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "200"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val targets = SparkEntry.select(if (names.isEmpty) Bench.Headline else names)
+    val spark = GraftSession()
+    Bench.warmup(spark, sfDir)
 
     val stages = mutable.Map[Int, StageAgg]()
     val jobWall = mutable.ArrayBuffer[(Int, Long)]()
@@ -81,7 +68,6 @@ object Profile {
           agg.shuffleReadB += m.shuffleReadMetrics.totalBytesRead
           agg.fetchWaitMs += m.shuffleReadMetrics.fetchWaitTime
           agg.shuffleWriteB += m.shuffleWriteMetrics.bytesWritten
-          agg.writeTimeMs += m.shuffleWriteMetrics.writeTime / 1000000L
           agg.inputB += m.inputMetrics.bytesRead
         }
       }
@@ -91,60 +77,20 @@ object Profile {
         jobStart.remove(je.jobId).foreach(t0 => jobWall += je.jobId -> (je.time - t0))
     }
 
-    // warmup identical to Bench
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .groupBy("l_returnflag").count()
-      .write.format("noop").mode("overwrite").save()
-    Seq("documents", "embeddings", "events").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.format("noop").mode("overwrite").save()
-    }
-
-    // --stacks: sample executor-task threads during the last run and
-    // print the hottest frames (poor-man's profiler for lock hunts)
-    val sampled = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    @volatile var sampling = false
-    val sampler = new Thread(() => {
-      while (true) {
-        if (sampling) {
-          import scala.jdk.CollectionConverters._
-          Thread.getAllStackTraces.asScala.foreach { case (t, st) =>
-            if ((t.getName.startsWith("Executor task launch") ||
-                t.getName == "main") && st.nonEmpty) {
-              val tag = if (t.getName == "main") "[driver] " else ""
-              val key = tag + st.take(6).mkString(" <- ")
-              sampled.merge(key, 1, (a, b) => a + b)
-            }
-          }
-        }
-        Thread.sleep(20)
-      }
-    })
-    sampler.setDaemon(true)
-    sampler.start()
-
-    val targets = if (names.isEmpty) Bench.Headline else names
-    targets.foreach { n =>
-      val fn = SparkEntry.queries(n)
+    targets.foreach { case (n, fn) =>
       // untimed first run absorbs codegen compile; then `runs` timed runs,
       // listener attached only on the LAST so the table shows steady state
       (1 to runs).foreach { i =>
         spark.catalog.clearCache()
         System.gc()
         val attach = i == runs
-        if (attach) { stages.clear(); jobWall.clear(); sampled.clear(); sampling = true; spark.sparkContext.addSparkListener(listener) }
+        if (attach) {
+          stages.clear(); jobWall.clear()
+          spark.sparkContext.addSparkListener(listener)
+        }
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        if (attach) {
-          sampling = false
-          import scala.jdk.CollectionConverters._
-          val top = sampled.asScala.toSeq.sortBy(-_._2).take(12)
-          if (top.nonEmpty) {
-            println(s"--- hottest task-thread stacks ($n):")
-            top.foreach { case (k, c) => println(f"  $c%5d  $k") }
-          }
-        }
         if (attach) {
           Thread.sleep(400) // listener events drain asynchronously
           spark.sparkContext.removeSparkListener(listener)

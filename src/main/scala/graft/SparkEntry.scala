@@ -28,6 +28,20 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.build).toMap
 
+  /** The entries named in `names`, sorted by name; no names selects every
+    * entry. An unknown name throws: a typo must fail loudly, not time or
+    * dump nothing.
+    */
+  def select(names: Seq[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains).distinct.sorted
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}")
+    val kept = if (names.isEmpty) all else all.view.filterKeys(names.toSet)
+    kept.toSeq.sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */

@@ -1,34 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.adhesive.AdhesiveSparkExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // semi-join reduction for non-broadcastable selective joins; the
-      // default size gates keep it dormant at test scale (RuntimeFilterSpec)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir) = args.take(2)
+    // dev mode: `runMain graft.Verify <sf> <out> q_a q_b` dumps only those
+    val selected = SparkEntry.select(args.drop(2).toSeq)
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    // dev mode: `runMain graft.Verify <sf> <out> q_a q_b` dumps only those;
-    // a misspelled name must fail loudly, not exit 0 having dumped nothing
-    val unknown = only.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -236,7 +236,8 @@ case class LshBucket(child: Expression, planes: Int, dim: Int)
 
   // The p*j cross-term and a modulus larger than the plane count are both
   // load-bearing: any weight LINEAR in p under a modulus m < planes makes
-  // planes p and p+m identical hyperplanes (measured in LshOccupancyStudy:
+  // planes p and p+m identical hyperplanes (measured in SCALE.md
+  // §"Similarity search", LSH bucket occupancy:
   // the old ((7p+11j)%5)-2 collapsed 8 planes to 5 distinct ones → 30
   // occupied buckets instead of ~256, 8.5x the promised occupancy)
   @inline private def weight(p: Int, j: Int): Double =

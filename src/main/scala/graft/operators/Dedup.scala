@@ -441,9 +441,8 @@ object Dedup {
     * bounded bucket sizes); candidates are then verified with true Jaccard
     * >= 0.6 against the shingle sets.
     */
-  /** Banded LSH candidate generation — shared by [[minhashLsh]] and the
-    * MinhashProfile stage-timing driver so the profiled plan IS the
-    * shipped plan. One shuffle instead of four: explode each 8-slot
+  /** Banded LSH candidate generation — shared by [[minhashLsh]] and
+    * `dd_edit_verify`. One shuffle instead of four: explode each 8-slot
     * signature into its 4 (band, rowPair) keys and self-join ONCE on
     * (band, key) — the same shape [[simhashPairs]] uses. The per-band
     * join variant scans and shuffles `sig` 4× and unions before
@@ -1037,7 +1036,8 @@ object Dedup {
     * the recipe). `pos` is the 0-based token position; `ng` is the gram's
     * 64-BIT HASH — the n-gram text never crosses the shuffle (the
     * df-groupBy and the marking join both key on 8 bytes instead of the
-    * ~n-word string; measured in SubstrDedupStudyR13, the text-keyed form
+    * ~n-word string; measured in SCALE.md §"Round-13 substring-dedup
+    * tiers", the text-keyed form
     * shuffled 1.4× more at n=8 than n=4 purely from key width). A hash
     * collision would merge two gram identities and could falsely mark a
     * span: P ≈ G²/2^65 for G distinct grams — ~10⁻⁵ at 30M grams, and

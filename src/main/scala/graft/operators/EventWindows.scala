@@ -982,8 +982,8 @@ object EventWindows {
     * SEMANTICS-PRESERVING, so the strongest check is a hash match
     * against the unsalted join's declarative definition. Each (signup,
     * purchase) pair meets exactly once — in the purchase's salt lane —
-    * hence identical rows; JoinSkewStudyR15 quantifies the skew/state
-    * trade this form exists for.
+    * hence identical rows; SCALE.md §"Round-15 join skew" quantifies the
+    * skew/state trade this form exists for.
     */
   val streamJoinSalted: Q = Q(
     "ev_stream_join_salted",
@@ -1074,7 +1074,7 @@ object EventWindows {
     * k−1 spurious eviction rows per CONVERTED signup, which no local
     * lane filter can repair; this hash match (matches AND eviction
     * rows, salts = 4) is the proof the inversion closes that.
-    * JoinSkewStudyR16's outer tier quantifies the hot-share cut.
+    * SCALE.md §"Round-16 outer join skew" quantifies the hot-share cut.
     */
   val streamJoinOuterSalted: Q = Q(
     "ev_stream_join_outer_salted",

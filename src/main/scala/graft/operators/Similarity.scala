@@ -530,8 +530,8 @@ object Similarity {
 
   /** Skew-bounded variant of [[cosineNearDupLsh]]: over-occupancy buckets
     * are split by extension hyperplanes until every block is back under a
-    * capacity bound. Motivation is a round-10 measurement
-    * (`ScalingStudyR10`, SCALE.md): at 1M vectors the 8-plane bucket's
+    * capacity bound. Motivation is a round-10 measurement (SCALE.md
+    * §"Round-10 order-of-magnitude study"): at 1M vectors the 8-plane bucket's
     * MEAN occupancy tracks n/2^planes exactly, but the MAX runs 4–10×
     * the mean — and a within-bucket self-join pays occupancy
     * quadratically, so the heaviest bucket dominates the pair join
@@ -646,7 +646,8 @@ object Similarity {
     * full-corpus capacity-bounded equi-joins. Plan-pinned in
     * `PlanRegressionSpec` (no CartesianProduct; the only nested-loop
     * join is the broadcast sampled side). Occupancy scaling for the same
-    * bucket key is measured in `LshOccupancyStudy` (SCALE.md).
+    * bucket key is measured in SCALE.md §"Similarity search" (LSH bucket
+    * occupancy).
     */
   val embeddingRecall: Q = Q(
     "dd_embedding_recall",

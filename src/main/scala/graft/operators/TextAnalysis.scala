@@ -200,7 +200,7 @@ object TextAnalysis {
     */
   /** The model-train + scoring pipeline over an exploded (doc_id, bg)
     * bigram frame — the production shape, extracted so the planted-skew
-    * study (`SkewStudyR11`) measures the exact plan the query runs. The
+    * study measured the exact plan the query runs. The
     * `bg ⋈ model` join is Zipf-keyed (hot bigrams concentrate); with the
     * model too large to broadcast (the 100 TB case) the shuffle join's
     * hot partitions are what AQE's skew-join splitting exists for —

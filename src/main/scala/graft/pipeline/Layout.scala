@@ -140,7 +140,8 @@ object Layout {
     // evaluates its ordering expressions to route rows without appending
     // them, so the exchange carries only the data columns. A
     // withColumn("_z")/drop form ships 8 extra bytes per row — measured
-    // +34% shuffle on a 3-long-column table (LayoutWriteCostStudyR15);
+    // +34% shuffle on a 3-long-column table (SCALE.md §"Round-14 Z-order
+    // layout");
     // recomputing the codegen'd shift/mask ladder twice is free next to
     // that
     df.repartitionByRange(nFiles, z)

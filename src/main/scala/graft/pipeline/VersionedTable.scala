@@ -289,11 +289,6 @@ object VersionedTable {
       new java.util.concurrent.ConcurrentHashMap[String, Seq[Entry]]()
     def entriesOf(r: ShardRef): Seq[Entry] =
       cache.computeIfAbsent(r.name, _ => loader(r))
-    /** Shards actually OPENED so far — the planning-cost observable:
-      * a selective probe should resolve from the list plus a handful
-      * of shards, never the whole metadata tree.
-      */
-    def loadedShards: Int = cache.size
     lazy val entries: Seq[Entry] = shards.flatMap(entriesOf)
     lazy val names: Set[String] = entries.map(_.name).toSet
     def shardNames: Set[String] = shards.map(_.name).toSet
@@ -3646,23 +3641,6 @@ object VersionedTable {
       v: Long): Int =
     readManifest(spark, root, v).shards.count(_.name.nonEmpty)
 
-  /** (shards opened, total shards, files kept) for a box probe — the
-    * two-level planning-cost observable the shard study asserts on: a
-    * selective probe must resolve from the manifest list plus only the
-    * shards whose aggregate box it intersects.
-    */
-  private[pipeline] def boxProbeStats(spark: SparkSession, root: String,
-      probes: Seq[(String, Long, Long)]): (Int, Int, Int) = {
-    val v = latestVersion(spark, root).getOrElse(
-      sys.error(s"no versions at $root"))
-    val m = readManifest(spark, root, v)
-    val kept = partitionByBox(m, probes) match {
-      case Some((touched, _)) => touched.map(_.name)
-      case None => m.entries.map(_.name)
-    }
-    (m.loadedShards, m.shards.size, kept.size)
-  }
-
   /** Rewrite version v's metadata in the FLAT pre-shard format — SPEC
     * ONLY: inline entries under `# versioned v2`, shard files deleted.
     * The caller guarantees no OTHER version references v's shards
@@ -3700,43 +3678,6 @@ object VersionedTable {
     } finally out.close()
     m.shards.map(_.name).filter(_.nonEmpty).foreach { n =>
       fs.delete(new Path(dir, n), false)
-    }
-  }
-
-  /** Fabricate a version from synthetic entries — STUDY/SPEC ONLY: the
-    * metadata paths (publish cost, list parsing, shard pruning) are
-    * real, the named data files need not exist. `entriesPerShard`
-    * splits the entries into consecutive shards; 0 writes the LEGACY
-    * flat format instead (inline entries), for migration and
-    * format-comparison fixtures.
-    */
-  private[pipeline] def fabricateVersion(spark: SparkSession, root: String,
-      v: Long, statCols: Seq[String],
-      entries: Seq[(String, Long, Seq[(Long, Long)])],
-      entriesPerShard: Int,
-      schemaJson: Option[String]): Unit = {
-    val es = entries.map { case (n, rows, boxes) => Entry(n, rows, boxes) }
-    if (entriesPerShard > 0) {
-      val shards = es.grouped(entriesPerShard).toSeq
-        .flatMap(g => writeShard(spark, root, statCols, g))
-      require(tryPublish(spark, root, v, statCols, shards, -1L, "append",
-        schemaJson), s"fabricateVersion: v$v already exists")
-    } else {
-      // legacy flat format, verbatim what the pre-shard writer produced
-      val fs = fsFor(spark, root)
-      val dir = new Path(manifestsDir(root))
-      fs.mkdirs(dir)
-      val out = fs.create(new Path(dir, s"v$v"), false)
-      try {
-        out.write(s"# versioned v2\t${statCols.mkString("\t")}\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        out.write("#kind\tappend\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        schemaJson.foreach(j => out.write(s"#schema\t$j\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        es.sortBy(_.name).foreach(e => out.write((entryLine(e) + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      } finally out.close()
     }
   }
 }

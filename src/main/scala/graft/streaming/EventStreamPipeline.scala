@@ -234,8 +234,8 @@ object EventStreamPipeline {
     * (`xxhash64(event_id) mod salts`), signups are replicated across all
     * salt lanes, and each (signup, purchase) pair still meets exactly
     * once — in the purchase's lane — so the output is IDENTICAL to the
-    * unsalted join (asserted against the batch twin in
-    * JoinSkewStudyR15). The cost is explicit: signup-side state x salts;
+    * unsalted join (`ev_stream_join_salted` hash-matches the unsalted
+    * oracle; SCALE.md §"Round-15 join skew"). The cost is explicit: signup-side state x salts;
     * worth paying exactly when the hot key's share, not total volume, is
     * the bottleneck — the same trade [[graft.operators.SkewJoin]] makes
     * for the batch join. INNER-ONLY by construction: an outer form would

@@ -41,8 +41,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * discipline): reads always touch ≤ [[FoldEvery]] committed partitions,
   * at the amortized cost of one store rewrite per fold period; dirs below
   * the fold horizon are dead to every future read and replay, and are
-  * garbage-collected. Measured in StreamingDedupStudy (SCALE.md): flat
-  * per-batch latency as the store grows.
+  * garbage-collected. Measured in SCALE.md §"Streaming": flat per-batch
+  * latency as the store grows.
   *
   * Within-batch greedy is a bounded peeling loop over the batch's
   * near-dup subgraph (pairs, not docs): each round decides every doc

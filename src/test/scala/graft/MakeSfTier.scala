@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds a k× scale tier from an existing testdata dir by replicating
@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
   *
   *   sbt "Test/runMain graft.MakeSfTier /root/testdata/sf0.1 /tmp/sf0.5 5"
   *   SPARK_GRAFT_SF_DIR=/tmp/sf0.5 sbt "runMain graft.Bench dd_exact ..."
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.Profile /tmp/sf0.5 dd_exact ..."
   *
   * Replicas must scale the WORK honestly, not the pathology: document
   * text is token-tagged per replica (`r<k>` prefix on every word), so
@@ -28,14 +29,7 @@ object MakeSfTier {
 
   def main(args: Array[String]): Unit = {
     val (src, dst, k) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
 
     def replicate(table: String, offsetCols: Seq[String],

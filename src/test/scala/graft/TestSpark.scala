@@ -1,20 +1,13 @@
 package graft
 
-import graft.adhesive.AdhesiveSparkExtensions
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for all suites (first accessor builds it; extensions
-  * included so DDL-path tests can use plain `spark.sql`).
+/** One shared session for all suites (first accessor builds it): Bench's
+  * configuration on 4 cores, extensions included so DDL-path tests can use
+  * plain `spark.sql`.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("adhesivespark-test")
-    .withExtensions(new AdhesiveSparkExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(4)
 
   val sfDir = "/root/testdata/sf0.001"
 

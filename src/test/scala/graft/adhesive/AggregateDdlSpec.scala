@@ -151,7 +151,7 @@ class AggregateDdlSpec extends AnyFunSuite {
     // the embedding-pipeline shape: a dynamic UDAF folding vectors
     // element-wise; state and result are java.util.List, the same container
     // the argument side's row.getList hands out. Body shared with
-    // AggShuffleStudyR12 (TestAggregates) — one source of truth.
+    // SCALE.md's aggregate-state shuffle study (TestAggregates).
     spark.sql(TestAggregates.vectorSumDdl("vsum"))
     spark.range(0, 1000, 1, 16)
       .selectExpr("id % 4 AS k",

@@ -1,10 +1,9 @@
 package graft.adhesive
 
-/** Shared dynamic-aggregate DDL bodies used by both the correctness spec
-  * ([[AggregateDdlSpec]]) and the shuffle-volume studies
-  * ([[AggShuffleStudyR12]], [[AggShuffleStudyR13]]) — one source of truth
-  * for the fold, so a fix to its semantics (e.g. length-mismatch behavior
-  * of `add`) cannot silently diverge between correctness and measurement.
+/** Shared dynamic-aggregate DDL bodies of the correctness spec
+  * ([[AggregateDdlSpec]]), also the bodies whose shuffle volume SCALE.md
+  * records (§"Round-12 aggregate-state shuffle volume" and its round-13
+  * sequel) — one source of truth for the fold.
   */
 object TestAggregates {
 
@@ -46,7 +45,7 @@ object TestAggregates {
     * copy-on-write alternative is O(|vocab|) per input row — the
     * difference between a linear and a quadratic-ish fold. Correctness of
     * the mutating form is pinned by AggregateDdlSpec; its shuffle shape
-    * is measured by AggShuffleStudyR13.
+    * is recorded in SCALE.md §"Round-13 aggregate-state shuffle volume".
     */
   def tokenCountsDdl(name: String): String =
     s"""CREATE OR REPLACE AGGREGATE FUNCTION $name(STRING) RETURNS MAP<STRING, BIGINT> LANGUAGE JAVA AS '

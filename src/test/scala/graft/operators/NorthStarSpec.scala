@@ -180,7 +180,7 @@ class NorthStarSpec extends AnyFunSuite {
     // uniform random 64-dim embeddings are the adversarial case for
     // bucketed ANN (no cluster structure, top-3 cosines barely above
     // noise). With the honest 256-bucket key (occupancy n/256 ≈ 2 at
-    // n=500 — LshOccupancyStudy) single-probe LSH examines ~2 candidates
+    // n=500 — SCALE.md §"Similarity search") single-probe LSH examines ~2 candidates
     // per query, so its random-pick baseline is ~3·2/500 ≈ 0.012 and
     // multiprobe's (9 probes) ~0.05; IVF cells hold ~n/16. Measured on
     // this fixed corpus: lsh 0.033 (≈3x its baseline), mp 0.10 (≈2x),

@@ -102,7 +102,8 @@ class LayoutScaleSpec extends AnyFunSuite {
   }
 
   test("the z-order exchange ships only data columns — the key routes rows without crossing the wire") {
-    // regression pin for the LayoutWriteCostStudyR15 finding: a
+    // regression pin for the round-15 write-cost finding (SCALE.md
+    // §"Round-14 Z-order layout"): a
     // withColumn("_z")/drop form adds the 8-byte Morton key to every
     // shuffled row (+34% measured). The exchange's output schema must be
     // exactly the data schema — RangePartitioning evaluates its ordering
