@@ -1,8 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.catalyst.expressions.{
-  And, Attribute, AttributeReference, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+  And, Attribute, AttributeReference, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.parser.ParserInterface
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -25,15 +24,16 @@ import org.apache.spark.sql.{Row, SparkSession}
   * `VersionedTableConcurrencySpec`). Statements over names that are
   * NOT registered fall through to Spark's own parser untouched.
   *
-  * DELETE's WHERE takes the fast long-box path when it fits the box
-  * algebra and otherwise routes to [[VersionedTable.deleteWhere]]
-  * (typed columns — dates, strings — the retention shape), which
-  * demands at least one stats-checkable conjunct: a delete that
-  * cannot be stats-checked would silently rewrite the whole table, so
-  * it is rejected loudly (`boxProbes` mirrors the FileIndex extractor
-  * but ERRORS on unknown shapes instead of backing off — backing off
-  * on a read widens a scan; on a delete it would rewrite the wrong
-  * rows). UPDATE reads its matches through the pruning FileIndex and
+  * DELETE's WHERE takes the fast long-box path only when every
+  * conjunct is an exact comparison of a column with an integer literal
+  * (the box IS the delete's row predicate, so a relaxed translation
+  * must never reach it), and otherwise routes to
+  * [[VersionedTable.deleteWhere]] (typed columns — dates, strings —
+  * the retention shape), which demands at least one stats-checkable
+  * conjunct: a delete that cannot be stats-checked would silently
+  * rewrite the whole table, so it is rejected loudly. Both routes come
+  * from the table's one predicate walker, [[VersionedTable.probesOf]].
+  * UPDATE reads its matches through the pruning FileIndex and
   * accepts any predicate: its rewrite is keyed and bounded by the
   * match set, so a wide read is safe where a wide delete is not.
   */
@@ -164,19 +164,20 @@ object VersionedSql {
 
   /** The DELETE dispatch both SQL front-ends share (the regex
     * [[VersionedDeleteCommand]] and the DSv2 catalog's
-    * `SupportsDelete`): a long-box WHERE takes the fast
-    * [[VersionedTable.deleteRange]] path (MOR marker when the table
-    * is registered `MOR DELETES`), anything else the COW
-    * [[VersionedTable.deleteWhere]] path, which demands at least one
-    * stats-checkable conjunct and rejects loudly otherwise.
+    * `SupportsDelete`): a WHERE whose every conjunct is an exact
+    * comparison of a column with an integer literal — the walker's
+    * `exactBox`, decided on the syntax before any column is looked up —
+    * is the row predicate of the fast [[VersionedTable.deleteRange]]
+    * path (MOR marker when the table is registered `MOR DELETES`);
+    * anything else takes the COW [[VersionedTable.deleteWhere]] path,
+    * which demands at least one stats-checkable conjunct and rejects
+    * loudly otherwise.
     */
   private[pipeline] def runDelete(spark: SparkSession, name: String,
       root: String, morDeletes: Boolean, where: String): (Long, Long) = {
     val parsed = spark.sessionState.sqlParser.parseExpression(where)
-    val longProbes =
-      try Some(boxProbes(parsed, name))
-      catch { case _: IllegalArgumentException => None }
-    longProbes match {
+    VersionedTable.probesOf(Seq(parsed), Seq.empty, Seq.empty)
+      .exactBox match {
       case Some(probes) if morDeletes =>
         VersionedTable.deleteRangeMor(spark, root, probes)
       case Some(probes) =>
@@ -187,75 +188,6 @@ object VersionedSql {
             "only; this predicate needs the copy-on-write path — " +
             "re-register without MOR DELETES or use the API")
         VersionedTable.deleteWhere(spark, root, where)
-    }
-  }
-
-  /** WHERE → box probes, LOUD on anything the box algebra cannot
-    * express exactly (OR, functions, non-long literals, unknown
-    * shapes). BETWEEN arrives pre-lowered to >= AND <= by the parser.
-    */
-  private[pipeline] def boxProbes(e: Expression,
-      table: String): Seq[(String, Long, Long)] = {
-    val lo = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val hi = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def colOf(x: Expression): Option[String] = x match {
-      case u: UnresolvedAttribute if u.nameParts.size == 1 =>
-        Some(u.nameParts.head)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    // INTEGER literals only, by their SQL type: a DateType literal is
-    // also an Int internally, and treating it as a long probe would
-    // hijack typed predicates from the deleteWhere path
-    def litOf(x: Expression): Option[Long] = x match {
-      case Literal(v: Long, org.apache.spark.sql.types.LongType) => Some(v)
-      case Literal(v: Int, org.apache.spark.sql.types.IntegerType) =>
-        Some(v.toLong)
-      case _ => None
-    }
-    def bad(x: Expression): Nothing =
-      throw new IllegalArgumentException(
-        s"DELETE/UPDATE on versioned table '$table': WHERE must be a " +
-          "conjunction of <longStatCol> {=, <, <=, >, >=, BETWEEN} " +
-          s"<integer literal>; cannot express: $x")
-    def narrowLo(c: String, v: Long): Unit =
-      lo(c) = math.max(lo.getOrElse(c, Long.MinValue), v)
-    def narrowHi(c: String, v: Long): Unit =
-      hi(c) = math.min(hi.getOrElse(c, Long.MaxValue), v)
-    def cmp(a: Expression, b: Expression,
-        direct: (String, Long) => Unit,
-        flipped: (String, Long) => Unit, whole: Expression): Unit =
-      colOf(a).zip(litOf(b)).map { case (c, v) => direct(c, v) }
-        .orElse(colOf(b).zip(litOf(a)).map { case (c, v) => flipped(c, v) })
-        .getOrElse(bad(whole))
-    def walk(x: Expression): Unit = x match {
-      case And(l, r) => walk(l); walk(r)
-      // the parser leaves BETWEEN as an unresolved 'between' call —
-      // lower it here (analysis would rewrite it to >= AND <=)
-      case w: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if w.nameParts.map(_.toLowerCase(java.util.Locale.ROOT)) ==
-            Seq("between") && w.arguments.size == 3 =>
-        (colOf(w.arguments(0)), litOf(w.arguments(1)),
-          litOf(w.arguments(2))) match {
-          case (Some(c), Some(l), Some(h)) => narrowLo(c, l); narrowHi(c, h)
-          case _ => bad(w)
-        }
-      case w @ GreaterThanOrEqual(a, b) => cmp(a, b, narrowLo, narrowHi, w)
-      case w @ LessThanOrEqual(a, b) => cmp(a, b, narrowHi, narrowLo, w)
-      case w @ GreaterThan(a, b) => cmp(a, b,
-        (c, v) => narrowLo(c, math.addExact(v, 1L)),
-        (c, v) => narrowHi(c, math.subtractExact(v, 1L)), w)
-      case w @ LessThan(a, b) => cmp(a, b,
-        (c, v) => narrowHi(c, math.subtractExact(v, 1L)),
-        (c, v) => narrowLo(c, math.addExact(v, 1L)), w)
-      case w @ EqualTo(a, b) => cmp(a, b,
-        (c, v) => { narrowLo(c, v); narrowHi(c, v) },
-        (c, v) => { narrowLo(c, v); narrowHi(c, v) }, w)
-      case other => bad(other)
-    }
-    walk(e)
-    (lo.keySet ++ hi.keySet).toSeq.map { c =>
-      (c, lo.getOrElse(c, Long.MinValue), hi.getOrElse(c, Long.MaxValue))
     }
   }
 

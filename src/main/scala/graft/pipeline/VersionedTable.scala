@@ -161,8 +161,9 @@ object VersionedTable {
     * bounds, hex-encoded; 'l' long-backed: date epoch days, timestamp
     * micros, ints; 'd' decimal: unscaled long, `scale` recorded so
     * only scale-exact literals translate to probes). Fixed at table
-    * creation like the Long stat columns; used for READ pruning only
-    * (sqlRead / the FileIndex) — DML probes stay Long.
+    * creation like the Long stat columns; pruned on by [[sqlRead]],
+    * [[deleteWhere]] and string-keyed DML (the long-box APIs stay
+    * Long).
     */
   private[pipeline] case class TypedCol(name: String, kind: Char,
       scale: Int = 0)
@@ -181,24 +182,36 @@ object VersionedTable {
       case _ => java.lang.Long.compare(a.toLong, b.toLong)
     }
 
+  /** The stats a file or a shard carries — what [[Probes.mayHold]]
+    * reads: per-stat-column long [min, max] `boxes`, typed-column
+    * bounds `tboxes` (empty on tables without typed stat columns, and
+    * on the legacy pseudo-shard), per-column null counts over
+    * statCols ++ typedCols, and the row count.
+    */
+  private[pipeline] sealed trait Bounds {
+    def rows: Long
+    def boxes: Seq[(Long, Long)]
+    def tboxes: Seq[TBound]
+    def nulls: Seq[Long]
+    /** Null count of column i; -1 = unknown (pre-upgrade line, or the
+      * footer omitted it) — never prunes.
+      */
+    def nullsAt(i: Int): Long = if (i < nulls.length) nulls(i) else -1L
+    /** Typed bound i; None when absent — never prunes. */
+    def tLo(i: Int): Option[String] = if (tboxes.isEmpty) None else tboxes(i)._1
+    def tHi(i: Int): Option[String] = if (tboxes.isEmpty) None else tboxes(i)._2
+  }
+
   /** One data file's manifest record. `bytes` (file length, recorded
     * at write) lets the SQL path synthesize its FileStatus from
     * metadata alone — planning a scan then never lists `files/`, the
     * O(F)-RPC step a cloud object store bills per page; -1 marks
     * pre-upgrade entries, which fall back to one directory listing.
-    * `tboxes` are the typed-column bounds (empty on tables without
-    * typed stat columns).
     */
   private[pipeline] case class Entry(name: String, rows: Long,
       boxes: Seq[(Long, Long)], bytes: Long = -1L,
       tboxes: Seq[TBound] = Seq.empty,
-      nulls: Seq[Long] = Seq.empty) {
-    /** Null count of column i over statCols ++ typedCols; -1 =
-      * unknown (pre-upgrade entry, or the footer omitted it) — never
-      * prunes.
-      */
-    def nullsAt(i: Int): Long = if (i < nulls.length) nulls(i) else -1L
-  }
+      nulls: Seq[Long] = Seq.empty) extends Bounds
 
   /** One manifest-list line: an immutable shard file plus its entry
     * count, row sum and per-stat-column AGGREGATE [min,max] — the
@@ -216,12 +229,7 @@ object VersionedTable {
   private[pipeline] case class ShardRef(name: String, files: Long, rows: Long,
       boxes: Seq[(Long, Long)], minRows: Long = -1L,
       tboxes: Seq[TBound] = Seq.empty,
-      nulls: Seq[Long] = Seq.empty) {
-    /** Aggregate null count of column i over the shard's entries; -1
-      * = unknown somewhere — never prunes.
-      */
-    def nullsAt(i: Int): Long = if (i < nulls.length) nulls(i) else -1L
-  }
+      nulls: Seq[Long] = Seq.empty) extends Bounds
 
   /** A MERGE-ON-READ delete marker — Iceberg v2's delete-file idea:
     * instead of rewriting the files a delete touches, the manifest
@@ -991,7 +999,7 @@ object VersionedTable {
     * bounds ride in the manifest so [[sqlRead]] prunes files on the
     * columns real corpora filter by (language, source, date) — the
     * Iceberg typed-bounds idea. Fixed at table creation like the Long
-    * stat columns; read-pruning only (DML probes stay Long).
+    * stat columns.
     */
   def append(df: DataFrame, root: String, statCols: Seq[String],
       typedStatCols: Seq[String]): Long =
@@ -1680,9 +1688,10 @@ object VersionedTable {
     * So `spark.sql("... WHERE user_id BETWEEN a AND b")` over a temp
     * view of this frame plans a scan over ONLY the pruned files, with
     * the predicates still pushed into parquet row-group pruning below
-    * — no bespoke API in the query path at all. Filters the extractor
-    * does not understand (ORs, casts, unknown columns) simply disable
-    * pruning for their conjunct: pruning only ever narrows on proof.
+    * — no bespoke API in the query path at all. Filters the walker
+    * ([[probesOf]]) does not understand (ORs, casts, unknown columns)
+    * simply disable pruning for their conjunct: pruning only ever
+    * narrows on proof.
     *
     * A snapshot with MERGE-ON-READ markers is served as ONE pruned
     * relation PER marker-coverage group (each with its own `NOT box`
@@ -1746,17 +1755,13 @@ object VersionedTable {
     * behind [[sqlRead]]. File statuses come from ONE `files/` listing
     * at construction (immutable files — only a vacuum past retention
     * can invalidate them, the same reader contract as everywhere
-    * else); `listFiles` translates the pushed conjuncts into box
-    * probes and reuses the shard-then-file pruning the explicit
-    * [[boxRead]] path uses.
+    * else); `listFiles` walks the pushed conjuncts with [[probesOf]],
+    * runs the two-level [[prune]], then the footer-bloom stage.
     */
   private[pipeline] class VersionedFileIndex(spark: SparkSession,
       root: String, m: Manifest, subset: Option[Set[String]] = None)
       extends org.apache.spark.sql.execution.datasources.FileIndex {
-    import org.apache.spark.sql.catalyst.expressions.{
-      And, AttributeReference, EqualTo, Expression, GreaterThan,
-      GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan,
-      LessThanOrEqual, Literal}
+    import org.apache.spark.sql.catalyst.expressions.Expression
 
     /** File statuses SYNTHESIZED from the manifest's recorded byte
       * sizes — planning never lists `files/` (at 800k files on an
@@ -1805,19 +1810,14 @@ object VersionedTable {
     override def listFiles(
         partitionFilters: Seq[Expression], dataFilters: Seq[Expression])
         : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] = {
-      val ps = extractProbes(dataFilters)
+      val ps = probesOf(dataFilters, m.statCols, m.typedCols)
       val inUniverse: String => Boolean = subset match {
         case Some(s) => s
         case None => _ => true
       }
       val kept0: Seq[String] =
         if (ps.isEmpty) universe
-        else m.shards
-          .filter(r => r.name.isEmpty ||
-            boundsHit(r.boxes, r.tboxes, r.nullsAt, r.rows, ps))
-          .flatMap(r => m.entriesOf(r))
-          .filter(e => boundsHit(e.boxes, e.tboxes, e.nullsAt, e.rows, ps))
-          .map(_.name).filter(inUniverse)
+        else prune(m, ps.mayHold)._1.map(_.name).filter(inUniverse)
       // a pure equality (or small IN-list) probe on a LONG stat
       // column — or an equality on a STRING typed column (the doc-id
       // / language point lookup: blooms are written for typed columns
@@ -1850,231 +1850,267 @@ object VersionedTable {
         org.apache.spark.sql.catalyst.InternalRow.empty,
         kept.map(statusOf).toArray))
     }
-
-    /** The pushed conjuncts, translated: long-column [lo, hi]
-      * intersections and IN-lists (by stat-column index), typed-column
-      * encoded ranges and IN-lists (by typed-column index), the
-      * long equalities the bloom stage can use, and NULL checks
-      * (Left = stat index, Right = typed index; true = IS NULL).
-      * Unknown shapes contribute nothing: pruning narrows only on
-      * what it can prove.
-      */
-    private case class Probes(
-        boxes: Seq[(Int, Long, Long)],
-        ins: Seq[(Int, Seq[Long])],
-        tranges: Seq[(Int, Option[String], Option[String])],
-        tins: Seq[(Int, Seq[String])],
-        eqs: Seq[(String, Long)],
-        nullChecks: Seq[(Either[Int, Int], Boolean)],
-        teqs: Seq[(String, Array[Byte])]) {
-      def isEmpty: Boolean =
-        boxes.isEmpty && ins.isEmpty && tranges.isEmpty &&
-          tins.isEmpty && nullChecks.isEmpty
-    }
-
-    /** Can a file/shard with these bounds hold a row passing every
-      * probe? Typed bounds may be absent (legacy pseudo-shard, an
-      * unprovable side): absence never prunes; null counts likewise
-      * (-1 = unknown passes both null checks).
-      */
-    private def boundsHit(boxes: Seq[(Long, Long)], tb: Seq[TBound],
-        nullsAt: Int => Long, rows: Long, ps: Probes): Boolean = {
-      def tLo(i: Int): Option[String] =
-        if (tb.isEmpty) None else tb(i)._1
-      def tHi(i: Int): Option[String] =
-        if (tb.isEmpty) None else tb(i)._2
-      ps.boxes.forall { case (i, lo, hi) =>
-        val (mn, mx) = boxes(i); !(hi < mn || lo > mx)
-      } &&
-      ps.ins.forall { case (i, vs) =>
-        val (mn, mx) = boxes(i); vs.exists(v => v >= mn && v <= mx)
-      } &&
-      ps.tranges.forall { case (i, lo, hi) =>
-        val k = m.typedCols(i).kind
-        hi.zip(tLo(i)).forall { case (h, mn) => tCompare(k, h, mn) >= 0 } &&
-        lo.zip(tHi(i)).forall { case (l, mx) => tCompare(k, l, mx) <= 0 }
-      } &&
-      ps.tins.forall { case (i, vs) =>
-        val k = m.typedCols(i).kind
-        vs.exists(v =>
-          tLo(i).forall(mn => tCompare(k, v, mn) >= 0) &&
-          tHi(i).forall(mx => tCompare(k, v, mx) <= 0))
-      } &&
-      ps.nullChecks.forall { case (idx, isNull) =>
-        val i = idx match {
-          case Left(si) => si
-          case Right(ti) => m.statCols.size + ti
-        }
-        val n = nullsAt(i)
-        // -1 (unknown) passes both directions: n != 0 and n != rows
-        if (isNull) n != 0L else n != rows
-      }
-    }
-
-    private def extractProbes(filters: Seq[Expression]): Probes = {
-      val lo = scala.collection.mutable.Map.empty[Int, Long]
-      val hi = scala.collection.mutable.Map.empty[Int, Long]
-      val tlo = scala.collection.mutable.Map.empty[Int, String]
-      val thi = scala.collection.mutable.Map.empty[Int, String]
-      val eqs = Seq.newBuilder[(String, Long)]
-      val ins = Seq.newBuilder[(Int, Seq[Long])]
-      val tins = Seq.newBuilder[(Int, Seq[String])]
-      val nullChecks = Seq.newBuilder[(Either[Int, Int], Boolean)]
-      val teqs = Seq.newBuilder[(String, Array[Byte])]
-      def statIdx(e: Expression): Option[Int] = e match {
-        case a: AttributeReference if m.statCols.contains(a.name) =>
-          Some(m.statCols.indexOf(a.name))
-        case _ => None
-      }
-      def typedIdx(e: Expression): Option[Int] = e match {
-        case a: AttributeReference =>
-          val i = m.typedCols.indexWhere(_.name == a.name)
-          if (i >= 0) Some(i) else None
-        case _ => None
-      }
-      def longLit(e: Expression): Option[Long] = e match {
-        case Literal(v: Long, org.apache.spark.sql.types.LongType) => Some(v)
-        case Literal(v: Int, org.apache.spark.sql.types.IntegerType) =>
-          Some(v.toLong)
-        case _ => None
-      }
-      /** A literal of the exact type the typed column carries, encoded
-        * the way its bounds are; anything else (a cast, a collated
-        * string, a scale-mismatched decimal) yields no proof.
-        */
-      def typedLit(i: Int, e: Expression): Option[String] = {
-        val tc = m.typedCols(i)
-        (tc.kind, e) match {
-          case ('s', Literal(u: org.apache.spark.unsafe.types.UTF8String, t))
-              if t == org.apache.spark.sql.types.StringType =>
-            Some(Layout.hexEnc(u.getBytes))
-          case ('l', Literal(v: Int, org.apache.spark.sql.types.DateType)) =>
-            Some(v.toString)
-          case ('l', Literal(v: Int,
-              org.apache.spark.sql.types.IntegerType)) => Some(v.toString)
-          case ('l', Literal(v: Long,
-              org.apache.spark.sql.types.TimestampType)) => Some(v.toString)
-          case ('l', Literal(v: Long,
-              org.apache.spark.sql.types.TimestampNTZType)) =>
-            Some(v.toString)
-          case ('d', Literal(d: org.apache.spark.sql.types.Decimal,
-              dt: org.apache.spark.sql.types.DecimalType))
-              if dt.scale == tc.scale && dt.precision <= 18 =>
-            Some(d.toUnscaledLong.toString)
-          case _ => None
-        }
-      }
-      def narrowLo(i: Int, v: Long): Unit =
-        lo(i) = math.max(lo.getOrElse(i, Long.MinValue), v)
-      def narrowHi(i: Int, v: Long): Unit =
-        hi(i) = math.min(hi.getOrElse(i, Long.MaxValue), v)
-      def tNarrowLo(i: Int, v: String): Unit = {
-        val k = m.typedCols(i).kind
-        tlo(i) = tlo.get(i).filter(tCompare(k, _, v) >= 0).getOrElse(v)
-      }
-      def tNarrowHi(i: Int, v: String): Unit = {
-        val k = m.typedCols(i).kind
-        thi(i) = thi.get(i).filter(tCompare(k, _, v) <= 0).getOrElse(v)
-      }
-      // typed strict comparisons relax to inclusive (sound: the pruned
-      // set only grows); long ones stay exact via ±1
-      def cmp(a: Expression, b: Expression,
-          longA: (Int, Long) => Unit, longB: (Int, Long) => Unit,
-          typedA: (Int, String) => Unit,
-          typedB: (Int, String) => Unit): Unit = {
-        statIdx(a).zip(longLit(b)).foreach { case (i, v) => longA(i, v) }
-        statIdx(b).zip(longLit(a)).foreach { case (i, v) => longB(i, v) }
-        typedIdx(a).foreach(i => typedLit(i, b).foreach(v => typedA(i, v)))
-        typedIdx(b).foreach(i => typedLit(i, a).foreach(v => typedB(i, v)))
-      }
-      def inValues(a: Expression, vs: Seq[Any],
-          types: Seq[Expression]): Unit = {
-        if (vs.size > InProbeCap || vs.isEmpty) return
-        statIdx(a).foreach { i =>
-          val longs = types.flatMap(longLit)
-          if (longs.size == vs.size) ins += ((i, longs))
-        }
-        typedIdx(a).foreach { i =>
-          val typeds = types.flatMap(t => typedLit(i, t))
-          if (typeds.size == vs.size) tins += ((i, typeds))
-        }
-      }
-      def walk(e: Expression): Unit = e match {
-        case And(l, r) => walk(l); walk(r)
-        case GreaterThanOrEqual(a, b) =>
-          cmp(a, b, narrowLo, narrowHi, tNarrowLo, tNarrowHi)
-        case LessThanOrEqual(a, b) =>
-          cmp(a, b, narrowHi, narrowLo, tNarrowHi, tNarrowLo)
-        case GreaterThan(a, b) =>
-          cmp(a, b,
-            (i, v) => if (v < Long.MaxValue) narrowLo(i, v + 1),
-            (i, v) => if (v > Long.MinValue) narrowHi(i, v - 1),
-            tNarrowLo, tNarrowHi)
-        case LessThan(a, b) =>
-          cmp(a, b,
-            (i, v) => if (v > Long.MinValue) narrowHi(i, v - 1),
-            (i, v) => if (v < Long.MaxValue) narrowLo(i, v + 1),
-            tNarrowHi, tNarrowLo)
-        case EqualTo(a, b) =>
-          statIdx(a).zip(longLit(b)).foreach { case (i, v) =>
-            narrowLo(i, v); narrowHi(i, v); eqs += ((m.statCols(i), v)) }
-          statIdx(b).zip(longLit(a)).foreach { case (i, v) =>
-            narrowLo(i, v); narrowHi(i, v); eqs += ((m.statCols(i), v)) }
-          cmp(a, b, (_, _) => (), (_, _) => (),
-            (i, v) => { tNarrowLo(i, v); tNarrowHi(i, v) },
-            (i, v) => { tNarrowLo(i, v); tNarrowHi(i, v) })
-          // string-typed equality: keep the RAW bytes too — the
-          // footer-bloom stage hashes them as parquet Binary
-          def strBytes(x: Expression): Option[Array[Byte]] = x match {
-            case Literal(u: org.apache.spark.unsafe.types.UTF8String, t)
-                if t == org.apache.spark.sql.types.StringType =>
-              Some(u.getBytes.clone())
-            case _ => None
-          }
-          def addTeq(attr: Expression, value: Expression): Unit =
-            typedIdx(attr).filter(i => m.typedCols(i).kind == 's')
-              .foreach(i => strBytes(value).foreach(bs =>
-                teqs += ((m.typedCols(i).name, bs))))
-          addTeq(a, b); addTeq(b, a)
-        case In(a, list) =>
-          // WHERE id IN (…) — THE point-lookup batch shape: a union of
-          // point probes, capped at InProbeCap (falls back to no
-          // pruning above it, never to a wrong plan)
-          inValues(a, list, list)
-        case InSet(a, set) =>
-          // the optimizer's large-IN form: values are internal
-          // representations — re-wrap as literals of the child's type
-          // so the one decoding path serves both shapes
-          val lits = set.toSeq.map(v => Literal(v, a.dataType): Expression)
-          inValues(a, lits, lits)
-        case IsNull(a) =>
-          // `WHERE c IS NULL` keeps only files whose recorded null
-          // count is nonzero (or unknown) — Iceberg's
-          // null_value_counts pruning
-          statIdx(a).foreach(i => nullChecks += ((Left(i), true)))
-          typedIdx(a).foreach(i => nullChecks += ((Right(i), true)))
-        case IsNotNull(a) =>
-          // the conjunct Catalyst pushes for nearly every filter: an
-          // ALL-null file (nulls == rows) provably has no passing row
-          statIdx(a).foreach(i => nullChecks += ((Left(i), false)))
-          typedIdx(a).foreach(i => nullChecks += ((Right(i), false)))
-        case _ => () // OR / cast / udf / unknown: no proof, no pruning
-      }
-      filters.foreach(walk)
-      Probes(
-        (lo.keySet ++ hi.keySet).toSeq.sorted.map { i =>
-          (i, lo.getOrElse(i, Long.MinValue), hi.getOrElse(i, Long.MaxValue))
-        },
-        ins.result(),
-        (tlo.keySet ++ thi.keySet).toSeq.sorted.map { i =>
-          (i, tlo.get(i), thi.get(i))
-        },
-        tins.result(),
-        eqs.result(),
-        nullChecks.result(),
-        teqs.result())
-    }
   }
+
+  // ——— THE STATS-PRUNING ALGEBRA: one walker ([[probesOf]]: conjuncts
+  // → [[Probes]]), one bounds test ([[Probes.mayHold]]), one two-level
+  // prune ([[prune]]: shards, then their files). Every pruning path
+  // goes through them — the SQL FileIndex, deleteWhere,
+  // deleteRange/deleteRangeMor, boxRead, pointRead and the keyed-DML
+  // candidacy — so a fix to pruning semantics lands once.
+
+  /** A conjunction of stats probes: long ranges and IN-lists (by
+    * stat-column index), typed encoded ranges and IN-lists (by
+    * typed-column index, with the column's kind), and NULL checks (by
+    * index over statCols ++ typedCols; true = IS NULL). `eqs`/`teqs`
+    * are the long and string equalities the footer-bloom stage can
+    * use. `exactBox` is the whole predicate as a long box by column
+    * NAME, set only when every conjunct is an exact comparison of a
+    * column with an integer literal — SQL DELETE's long-box route,
+    * decided on the syntax before any column is looked up.
+    */
+  private[pipeline] case class Probes(
+      boxes: Seq[(Int, Long, Long)] = Seq.empty,
+      ins: Seq[(Int, Seq[Long])] = Seq.empty,
+      tranges: Seq[(Int, Char, Option[String], Option[String])] = Seq.empty,
+      tins: Seq[(Int, Char, Seq[String])] = Seq.empty,
+      nullChecks: Seq[(Int, Boolean)] = Seq.empty,
+      eqs: Seq[(String, Long)] = Seq.empty,
+      teqs: Seq[(String, Array[Byte])] = Seq.empty,
+      exactBox: Option[Seq[(String, Long, Long)]] = None) {
+    def isEmpty: Boolean = boxes.isEmpty && ins.isEmpty &&
+      tranges.isEmpty && tins.isEmpty && nullChecks.isEmpty
+
+    /** THE bounds test: can a file or shard with these stats hold a row
+      * passing every probe? A sound over-approximation: an absent typed
+      * bound or an unknown (-1) null count never prunes; an empty long
+      * range (`c > Long.MaxValue`) prunes everything.
+      */
+    def mayHold(b: Bounds): Boolean =
+      boxes.forall { case (i, lo, hi) =>
+        val (mn, mx) = b.boxes(i); lo <= hi && hi >= mn && lo <= mx
+      } &&
+      ins.forall { case (i, vs) =>
+        val (mn, mx) = b.boxes(i); vs.exists(v => v >= mn && v <= mx)
+      } &&
+      tranges.forall { case (i, k, lo, hi) =>
+        hi.zip(b.tLo(i)).forall { case (h, mn) => tCompare(k, h, mn) >= 0 } &&
+        lo.zip(b.tHi(i)).forall { case (l, mx) => tCompare(k, l, mx) <= 0 }
+      } &&
+      tins.forall { case (i, k, vs) =>
+        vs.exists(v => b.tLo(i).forall(tCompare(k, v, _) >= 0) &&
+          b.tHi(i).forall(tCompare(k, v, _) <= 0))
+      } &&
+      nullChecks.forall { case (i, isNull) =>
+        val n = b.nullsAt(i) // -1 (unknown) passes both directions
+        if (isNull) n != 0L else n != b.rows
+      }
+  }
+
+  /** THE predicate walker: conjuncts → [[Probes]] against the stat and
+    * typed columns. Columns are resolved `AttributeReference`s (the
+    * FileIndex's pushed filters) or the parser's single-part
+    * `UnresolvedAttribute`s (DML WHERE text, whose unresolved BETWEEN
+    * is lowered here). Understood: =, <, <=, >, >= between a column and
+    * a literal (either side), BETWEEN, IN/InSet of at most
+    * [[InProbeCap]] literals, IS [NOT] NULL. Long comparisons are exact
+    * (strict ones via ±1; past a Long extreme the range is empty);
+    * typed literals must carry the column's exact type, and typed
+    * strict comparisons relax to inclusive. Anything else (OR, casts,
+    * functions, unknown columns) contributes nothing: pruning narrows
+    * only on proof.
+    */
+  private[pipeline] def probesOf(
+      conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      statCols: Seq[String], typedCols: Seq[TypedCol]): Probes = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+      UnresolvedFunction}
+    import org.apache.spark.sql.catalyst.expressions.{And,
+      AttributeReference, EqualTo, Expression, GreaterThan,
+      GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan,
+      LessThanOrEqual, Literal}
+    import org.apache.spark.sql.types._
+    val lo = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val hi = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    val tlo = scala.collection.mutable.Map.empty[Int, String]
+    val thi = scala.collection.mutable.Map.empty[Int, String]
+    val ins = Seq.newBuilder[(Int, Seq[Long])]
+    val tins = Seq.newBuilder[(Int, Char, Seq[String])]
+    val nullChecks = Seq.newBuilder[(Int, Boolean)]
+    val eqs = Seq.newBuilder[(String, Long)]
+    val teqs = Seq.newBuilder[(String, Array[Byte])]
+    var exact = true
+    def nameOf(x: Expression): Option[String] = x match {
+      case a: AttributeReference => Some(a.name)
+      case u: UnresolvedAttribute if u.nameParts.size == 1 =>
+        Some(u.nameParts.head)
+      case _ => None
+    }
+    def statIdx(c: String) = Some(statCols.indexOf(c)).filter(_ >= 0)
+    def typedIdx(c: String) =
+      Some(typedCols.indexWhere(_.name == c)).filter(_ >= 0)
+    // INTEGER literals only, by their SQL type: a DateType literal is an
+    // Int internally too, and must not read as a long probe
+    def longLit(x: Expression): Option[Long] = x match {
+      case Literal(v: Long, LongType) => Some(v)
+      case Literal(v: Int, IntegerType) => Some(v.toLong)
+      case _ => None
+    }
+    // a literal of the exact type the typed column carries, encoded the
+    // way its bounds are; anything else (a cast, a collated string, a
+    // scale-mismatched decimal) yields no proof
+    def typedLit(tc: TypedCol, x: Expression): Option[String] =
+      (tc.kind, x) match {
+        case ('s', Literal(u: org.apache.spark.unsafe.types.UTF8String, t))
+            if t == StringType => Some(Layout.hexEnc(u.getBytes))
+        case ('l', Literal(v: Int, DateType | IntegerType)) =>
+          Some(v.toString)
+        case ('l', Literal(v: Long, TimestampType | TimestampNTZType)) =>
+          Some(v.toString)
+        case ('d', Literal(d: Decimal, dt: DecimalType))
+            if dt.scale == tc.scale && dt.precision <= 18 =>
+          Some(d.toUnscaledLong.toString)
+        case _ => None
+      }
+    def narrowLo(c: String, v: Long): Unit =
+      lo(c) = math.max(lo.getOrElse(c, Long.MinValue), v)
+    def narrowHi(c: String, v: Long): Unit =
+      hi(c) = math.min(hi.getOrElse(c, Long.MaxValue), v)
+    def empty(c: String): Unit = {
+      narrowLo(c, Long.MaxValue); narrowHi(c, Long.MinValue)
+    }
+    def tNarrow(i: Int, v: String, lower: Boolean): Unit = {
+      val (bound, keep) =
+        if (lower) (tlo, (r: Int) => r >= 0) else (thi, (r: Int) => r <= 0)
+      bound(i) = bound.get(i)
+        .filter(b => keep(tCompare(typedCols(i).kind, b, v))).getOrElse(v)
+    }
+    // `c op v`, op one of = < <= > >=
+    def compare(c: String, op: String, v: Expression): Unit = {
+      longLit(v) match {
+        case Some(x) => op match {
+          case "=" =>
+            narrowLo(c, x); narrowHi(c, x)
+            if (statIdx(c).nonEmpty) eqs += ((c, x))
+          case ">=" => narrowLo(c, x)
+          case "<=" => narrowHi(c, x)
+          case ">" => if (x == Long.MaxValue) empty(c) else narrowLo(c, x + 1)
+          case _ => if (x == Long.MinValue) empty(c) else narrowHi(c, x - 1)
+        }
+        case None => exact = false
+      }
+      typedIdx(c).foreach { i =>
+        typedLit(typedCols(i), v).foreach { t =>
+          if (op != "<" && op != "<=") tNarrow(i, t, lower = true)
+          if (op != ">" && op != ">=") tNarrow(i, t, lower = false)
+          // the footer-bloom stage hashes a string's RAW bytes
+          if (op == "=" && typedCols(i).kind == 's')
+            teqs += ((c, Layout.hexDec(t)))
+        }
+      }
+    }
+    // `v op c` is `c flipped(op) v`
+    val flipped = Map("=" -> "=", "<" -> ">", "<=" -> ">=", ">" -> "<",
+      ">=" -> "<=")
+    def cmp(a: Expression, op: String, b: Expression): Unit =
+      (nameOf(a), nameOf(b)) match {
+        case (Some(c), _) if b.isInstanceOf[Literal] => compare(c, op, b)
+        case (_, Some(c)) if a.isInstanceOf[Literal] =>
+          compare(c, flipped(op), a)
+        case _ => exact = false
+      }
+    // WHERE id IN (…) — the point-lookup batch shape: a union of point
+    // probes, capped at InProbeCap (no pruning above it, never a wrong
+    // plan)
+    def inList(a: Expression, vs: Seq[Expression]): Unit = {
+      exact = false
+      if (vs.nonEmpty && vs.size <= InProbeCap) nameOf(a).foreach { c =>
+        statIdx(c).foreach { i =>
+          val ls = vs.flatMap(longLit)
+          if (ls.size == vs.size) ins += ((i, ls))
+        }
+        typedIdx(c).foreach { i =>
+          val ts = vs.flatMap(typedLit(typedCols(i), _))
+          if (ts.size == vs.size) tins += ((i, typedCols(i).kind, ts))
+        }
+      }
+    }
+    // IS NULL keeps only files whose recorded null count is nonzero;
+    // IS NOT NULL (pushed for nearly every filter) drops all-null files
+    def nullCheck(a: Expression, isNull: Boolean): Unit = {
+      exact = false
+      nameOf(a).foreach { c =>
+        statIdx(c).foreach(i => nullChecks += ((i, isNull)))
+        typedIdx(c).foreach(i => nullChecks += ((statCols.size + i, isNull)))
+      }
+    }
+    def walk(e: Expression): Unit = e match {
+      case And(l, r) => walk(l); walk(r)
+      case f: UnresolvedFunction if f.arguments.size == 3 &&
+          f.nameParts.map(_.toLowerCase(java.util.Locale.ROOT)) ==
+            Seq("between") =>
+        walk(GreaterThanOrEqual(f.arguments(0), f.arguments(1)))
+        walk(LessThanOrEqual(f.arguments(0), f.arguments(2)))
+      case GreaterThanOrEqual(a, b) => cmp(a, ">=", b)
+      case GreaterThan(a, b) => cmp(a, ">", b)
+      case LessThanOrEqual(a, b) => cmp(a, "<=", b)
+      case LessThan(a, b) => cmp(a, "<", b)
+      case EqualTo(a, b) => cmp(a, "=", b)
+      case In(a, list) => inList(a, list)
+      // the optimizer's large-IN form holds internal values: re-wrap
+      // them as literals of the child's type
+      case InSet(a, set) =>
+        inList(a, set.toSeq.map(v => Literal(v, a.dataType)))
+      case IsNull(a) => nullCheck(a, isNull = true)
+      case IsNotNull(a) => nullCheck(a, isNull = false)
+      case _ => exact = false // OR / cast / udf / unknown: no proof
+    }
+    conjuncts.foreach(walk)
+    val box = (lo.keySet ++ hi.keySet).toSeq.map { c =>
+      (c, lo.getOrElse(c, Long.MinValue), hi.getOrElse(c, Long.MaxValue))
+    }
+    Probes(
+      boxes = box.flatMap { case (c, l, h) => statIdx(c).map((_, l, h)) },
+      ins = ins.result(),
+      tranges = (tlo.keySet ++ thi.keySet).toSeq.sorted.map { i =>
+        (i, typedCols(i).kind, tlo.get(i), thi.get(i))
+      },
+      tins = tins.result(), nullChecks = nullChecks.result(),
+      eqs = eqs.result(), teqs = teqs.result(),
+      exactBox = Option.when(exact && box.nonEmpty)(box))
+  }
+
+  /** THE two-level prune: the shards whose aggregate stats pass `hit`
+    * (an entry passes ⇒ its shard's aggregate passes, so a failing
+    * shard is never opened; the legacy inline pseudo-shard is always a
+    * candidate, DML migrates it), then the files of those shards that
+    * pass it. Returns (kept files, candidate shards).
+    */
+  private def prune(m: Manifest,
+      hit: Bounds => Boolean): (Seq[Entry], Seq[ShardRef]) = {
+    val shards = m.shards.filter(r => r.name.isEmpty || hit(r))
+    (shards.flatMap(m.entriesOf).filter(hit), shards)
+  }
+
+  /** A long box by column name as [[Probes]]; None when a column is not
+    * a manifested long stat column.
+    */
+  private def longBox(m: Manifest,
+      box: Seq[(String, Long, Long)]): Option[Probes] = {
+    val idx = box.map { case (c, _, _) => m.statCols.indexOf(c) }
+    Option.when(!idx.contains(-1))(Probes(boxes =
+      idx.zip(box).map { case (i, (_, l, h)) => (i, l, h) }))
+  }
+
+  /** [[longBox]] for DML, which must never guess: an unmanifested
+    * column is an error.
+    */
+  private def dmlBox(m: Manifest, box: Seq[(String, Long, Long)],
+      what: String): Probes =
+    longBox(m, box).getOrElse(throw new IllegalArgumentException(
+      s"$what probes must name manifested stat columns " +
+        s"${m.statCols.mkString("[", ", ", "]")}; " +
+        s"got ${box.map(_._1).mkString("[", ", ", "]")}"))
 
   /** IN-lists longer than this fall back to no pruning — a probe per
     * value is driver work, and a thousand-value IN belongs to a join,
@@ -2121,51 +2157,14 @@ object VersionedTable {
     (kept.size, m.totalFiles.toInt)
   }
 
-  /** Box-vs-footprint intersection, shared by every probing path. */
-  private def boxHit(boxes: Seq[(Long, Long)],
-      probes: Seq[(String, Long, Long)], idx: Seq[Int]): Boolean =
-    probes.zip(idx).forall { case ((_, lo, hi), i) =>
-      val (mn, mx) = boxes(i); !(hi < mn || lo > mx)
-    }
-
-  private def boxIntersects(e: Entry, probes: Seq[(String, Long, Long)],
-      idx: Seq[Int]): Boolean = boxHit(e.boxes, probes, idx)
-
-  /** The shards a box probe cannot rule out from the list alone — the
-    * legacy inline pseudo-shard is always a candidate (it has a real
-    * aggregate box, but DML paths also need it surfaced for
-    * migration). Entry-level pruning then runs inside only these.
-    */
-  private def shardCandidates(m: Manifest,
-      probes: Seq[(String, Long, Long)], idx: Seq[Int]): Seq[ShardRef] =
-    m.shards.filter(r => r.name.isEmpty || boxHit(r.boxes, probes, idx))
-
-  /** The ONE statement of two-level box pruning, shared by boxRead and
-    * deleteRange (a semantics fix must land in exactly one place):
-    * (touched entries, candidate shards), or None when any probe names
-    * an unmanifested column — the caller decides whether that disables
-    * pruning (boxRead) or is an error (DML must never guess).
-    */
-  private def partitionByBox(m: Manifest,
-      probes: Seq[(String, Long, Long)])
-      : Option[(Seq[Entry], Seq[ShardRef])] = {
-    val idx = probes.map { case (c, _, _) => m.statCols.indexOf(c) }
-    if (idx.contains(-1)) None
-    else {
-      val cands = shardCandidates(m, probes, idx)
-      Some((cands.flatMap(r => m.entriesOf(r))
-        .filter(e => boxIntersects(e, probes, idx)), cands))
-    }
-  }
-
   private def prunedEntries(spark: SparkSession, root: String,
       probes: Seq[(String, Long, Long)]): (Seq[String], Manifest) = {
     require(probes.nonEmpty, "boxRead needs at least one probe")
     val v = latestVersion(spark, root).getOrElse(
       sys.error(s"no versions at $root"))
     val m = readManifest(spark, root, v)
-    val kept = partitionByBox(m, probes) match {
-      case Some((touched, _)) => touched.map(_.name)
+    val kept = longBox(m, probes) match {
+      case Some(ps) => prune(m, ps.mayHold)._1.map(_.name)
       case None => m.entries.map(_.name) // unknown column: no pruning
     }
     (kept, m)
@@ -2217,11 +2216,8 @@ object VersionedTable {
       materializeDeletes(spark, root)
       return None // restart against the materialized base
     }
-    val (touched, candShards) = partitionByBox(m0, probes).getOrElse(
-      throw new IllegalArgumentException(
-        s"deleteRangeMor probes must name manifested stat columns " +
-          s"${m0.statCols.mkString("[", ", ", "]")}; " +
-          s"got ${probes.map(_._1).mkString("[", ", ", "]")}"))
+    val (touched, candShards) =
+      prune(m0, dmlBox(m0, probes, "deleteRangeMor").mayHold)
     if (touched.isEmpty) return Some((v0, 0L))
     val files = touched.map(_.name).toSet
     // the exact VISIBLE matched count — existing markers applied, so
@@ -2373,12 +2369,9 @@ object VersionedTable {
     // sparse-key refinement, as in upsertByKey: few keys test files
     // against the actual values, not one global box; string keys test
     // against the typed truncated bounds
-    val hit = keyedCandidateTest(m0, Seq(keyCol),
-      kf.select(col("k").as(keyCol)), n, "deleteKeysMor", bounds)
-    val candShards = m0.shards.filter(r =>
-      r.name.isEmpty || hit(r.boxes, r.tboxes))
-    val touched = candShards.flatMap(r => m0.entriesOf(r))
-      .filter(e => hit(e.boxes, e.tboxes))
+    val (touched, candShards) = prune(m0, keyedCandidateTest(m0,
+      Seq(keyCol), kf.select(col("k").as(keyCol)), n, "deleteKeysMor",
+      bounds))
     if (touched.isEmpty) return Some((v0, 0L))
     val files = touched.map(_.name).toSet
     // exact VISIBLE matched count (existing markers applied) — what
@@ -2526,32 +2519,21 @@ object VersionedTable {
     val (v0, m0) = latestManifest(spark, root).getOrElse(
       sys.error(s"no versions at $root"))
     if (m0.morDeletes.nonEmpty) return None // wrapper materializes first
-    val idx = probes.map { case (c, _, _) => m0.statCols.indexOf(c) }
-    require(!idx.contains(-1),
-      s"deleteRange probes must name manifested stat columns " +
-        s"${m0.statCols.mkString("[", ", ", "]")}; " +
-        s"got ${probes.map(_._1).mkString("[", ", ", "]")}")
-    deleteCore(spark, root, v0, m0,
-      hit = (boxes, _, _, _) => boxHit(boxes, probes, idx),
-      rowPred = boxPredicate(probes))
+    deleteCore(spark, root, v0, m0, dmlBox(m0, probes, "deleteRange").mayHold,
+      boxPredicate(probes))
   }
 
   /** The shared COW-delete body of [[deleteRange]] and [[deleteWhere]]:
-    * `hit` decides candidacy from a file's (long boxes, typed bounds) —
-    * it must be a sound over-approximation of "may hold a matching
-    * row"; `rowPred` is the EXACT row predicate (NULL-safe negation
-    * applied here). The same `hit` drives the rebase conflict test, so
-    * a since-base entry that may hold matching rows restarts the
-    * delete.
+    * `hit` is the probes' bounds test, a sound over-approximation of
+    * "may hold a matching row"; `rowPred` is the EXACT row predicate
+    * (NULL-safe negation applied here). The same `hit` drives the
+    * rebase conflict test, so a since-base entry that may hold
+    * matching rows restarts the delete.
     */
   private def deleteCore(spark: SparkSession, root: String,
-      v0: Long, m0: Manifest,
-      hit: (Seq[(Long, Long)], Seq[TBound], Int => Long, Long) => Boolean,
+      v0: Long, m0: Manifest, hit: Bounds => Boolean,
       rowPred: Column): Option[(Long, Long)] = {
-    val candShards = m0.shards.filter(r =>
-      r.name.isEmpty || hit(r.boxes, r.tboxes, r.nullsAt, r.rows))
-    val touched = candShards.flatMap(r => m0.entriesOf(r))
-      .filter(e => hit(e.boxes, e.tboxes, e.nullsAt, e.rows))
+    val (touched, candShards) = prune(m0, hit)
     if (touched.isEmpty) return Some((v0, 0L))
     val touchedNames = touched.map(_.name).toSet
     val touchedDf = readNamed(spark, root, m0, touched.map(_.name))
@@ -2582,8 +2564,7 @@ object VersionedTable {
     // files REWRITE existing rows — readChanges must not report them
     // as new
     rebasePublish(spark, root, v0, m0, candShards.map(_.name).toSet,
-      e => hit(e.boxes, e.tboxes, e.nullsAt, e.rows), entries,
-      replacements ++ survivorShard.toSeq, "delete")
+      hit, entries, replacements ++ survivorShard.toSeq, "delete")
       .map { case (v, _) => (v, deleted) }
   }
 
@@ -2594,9 +2575,9 @@ object VersionedTable {
     *   deleteWhere(spark, root, "day < DATE'2020-06-01'")
     *   deleteWhere(spark, root, "lang = 'old' AND doc_id >= 1000")
     * }}}
-    * The predicate is parsed by Spark's parser; its conjuncts
-    * translate to long boxes and typed ranges exactly as the SQL
-    * FileIndex translates pushed filters (strict typed comparisons
+    * The predicate is parsed by Spark's parser and walked by the same
+    * [[probesOf]] as the SQL FileIndex's pushed filters — long ranges,
+    * typed ranges, IN-lists, NULL checks (strict typed comparisons
     * relax to inclusive for PRUNING only — the row rewrite applies the
     * EXACT predicate, NULL-safe). Conjuncts the stats algebra cannot
     * express merely widen the candidate set provided at least ONE
@@ -2619,170 +2600,17 @@ object VersionedTable {
     val (v0, m0) = latestManifest(spark, root).getOrElse(
       sys.error(s"no versions at $root"))
     if (m0.morDeletes.nonEmpty) return None // wrapper materializes first
-    val parsed = spark.sessionState.sqlParser.parseExpression(predicateSql)
-    val (longs, typeds, nullcks) = translateConjuncts(parsed, m0)
-    require(longs.nonEmpty || typeds.nonEmpty || nullcks.nonEmpty,
+    val ps = probesOf(
+      Seq(spark.sessionState.sqlParser.parseExpression(predicateSql)),
+      m0.statCols, m0.typedCols)
+    require(!ps.isEmpty,
       s"deleteWhere at $root: no conjunct of '$predicateSql' is " +
         s"stats-checkable against long stat columns " +
         s"${m0.statCols.mkString("[", ", ", "]")} or typed columns " +
         s"${m0.typedCols.map(_.name).mkString("[", ", ", "]")} — a " +
         "delete that cannot be stats-checked would rewrite the whole " +
         "table; request that explicitly by compacting instead")
-    def hit(boxes: Seq[(Long, Long)], tb: Seq[TBound],
-        nullsAt: Int => Long, rows: Long): Boolean =
-      longs.forall { case (i, lo, hi) =>
-        val (mn, mx) = boxes(i); !(hi < mn || lo > mx)
-      } &&
-      typeds.forall { case (i, lo, hi) =>
-        val k = m0.typedCols(i).kind
-        // bounds resolved LAZILY like the FileIndex's boundsHit: an
-        // entry with no typed boxes at all (legacy pseudo-shard, a
-        // migrated manifest) must soundly NOT prune, not throw on
-        // tb(i)
-        def tLo: Option[String] = if (tb.isEmpty) None else tb(i)._1
-        def tHi: Option[String] = if (tb.isEmpty) None else tb(i)._2
-        hi.zip(tLo).forall { case (h, mn) =>
-          tCompare(k, h, mn) >= 0 } &&
-        lo.zip(tHi).forall { case (l, mx) =>
-          tCompare(k, l, mx) <= 0 }
-      } &&
-      nullcks.forall { case (idx, isNull) =>
-        val i = idx match {
-          case Left(si) => si
-          case Right(ti) => m0.statCols.size + ti
-        }
-        val n = nullsAt(i)
-        if (isNull) n != 0L else n != rows // -1 unknown passes both
-      }
-    deleteCore(spark, root, v0, m0, hit, expr(predicateSql))
-  }
-
-  /** The parsed predicate's conjuncts as (long boxes by stat-col
-    * index, typed ranges by typed-col index) — the DML twin of the
-    * FileIndex extractor, over the PARSER's unresolved output
-    * (UnresolvedAttribute names, typed literals). Untranslatable
-    * conjuncts contribute nothing (they only widen candidacy; the row
-    * rewrite applies the exact predicate).
-    */
-  private def translateConjuncts(e0: org.apache.spark.sql.catalyst
-      .expressions.Expression, m: Manifest)
-      : (Seq[(Int, Long, Long)], Seq[(Int, Option[String], Option[String])],
-        Seq[(Either[Int, Int], Boolean)]) = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions._
-    val lo = scala.collection.mutable.Map.empty[Int, Long]
-    val hi = scala.collection.mutable.Map.empty[Int, Long]
-    val tlo = scala.collection.mutable.Map.empty[Int, String]
-    val thi = scala.collection.mutable.Map.empty[Int, String]
-    val nullChecks = Seq.newBuilder[(Either[Int, Int], Boolean)]
-    def nameOf(x: Expression): Option[String] = x match {
-      case u: UnresolvedAttribute if u.nameParts.size == 1 =>
-        Some(u.nameParts.head)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def statIdx(x: Expression): Option[Int] =
-      nameOf(x).map(m.statCols.indexOf).filter(_ >= 0)
-    def typedIdx(x: Expression): Option[Int] =
-      nameOf(x).map(n => m.typedCols.indexWhere(_.name == n))
-        .filter(_ >= 0)
-    def longLit(x: Expression): Option[Long] = x match {
-      case Literal(v: Long, org.apache.spark.sql.types.LongType) => Some(v)
-      case Literal(v: Int, org.apache.spark.sql.types.IntegerType) =>
-        Some(v.toLong)
-      case _ => None
-    }
-    def typedLit(i: Int, x: Expression): Option[String] = {
-      val tc = m.typedCols(i)
-      (tc.kind, x) match {
-        case ('s', Literal(u: org.apache.spark.unsafe.types.UTF8String, t))
-            if t == org.apache.spark.sql.types.StringType =>
-          Some(Layout.hexEnc(u.getBytes))
-        case ('l', Literal(v: Int, org.apache.spark.sql.types.DateType)) =>
-          Some(v.toString)
-        case ('l', Literal(v: Int,
-            org.apache.spark.sql.types.IntegerType)) => Some(v.toString)
-        case ('l', Literal(v: Long,
-            org.apache.spark.sql.types.TimestampType)) => Some(v.toString)
-        case ('l', Literal(v: Long,
-            org.apache.spark.sql.types.TimestampNTZType)) =>
-          Some(v.toString)
-        case ('d', Literal(d: org.apache.spark.sql.types.Decimal,
-            dt: org.apache.spark.sql.types.DecimalType))
-            if dt.scale == tc.scale && dt.precision <= 18 =>
-          Some(d.toUnscaledLong.toString)
-        case _ => None
-      }
-    }
-    def narrowLo(i: Int, v: Long): Unit =
-      lo(i) = math.max(lo.getOrElse(i, Long.MinValue), v)
-    def narrowHi(i: Int, v: Long): Unit =
-      hi(i) = math.min(hi.getOrElse(i, Long.MaxValue), v)
-    def tNarrowLo(i: Int, v: String): Unit = {
-      val k = m.typedCols(i).kind
-      tlo(i) = tlo.get(i).filter(tCompare(k, _, v) >= 0).getOrElse(v)
-    }
-    def tNarrowHi(i: Int, v: String): Unit = {
-      val k = m.typedCols(i).kind
-      thi(i) = thi.get(i).filter(tCompare(k, _, v) <= 0).getOrElse(v)
-    }
-    def cmp(a: Expression, b: Expression,
-        longA: (Int, Long) => Unit, longB: (Int, Long) => Unit,
-        typedA: (Int, String) => Unit,
-        typedB: (Int, String) => Unit): Unit = {
-      statIdx(a).zip(longLit(b)).foreach { case (i, v) => longA(i, v) }
-      statIdx(b).zip(longLit(a)).foreach { case (i, v) => longB(i, v) }
-      typedIdx(a).foreach(i => typedLit(i, b).foreach(v => typedA(i, v)))
-      typedIdx(b).foreach(i => typedLit(i, a).foreach(v => typedB(i, v)))
-    }
-    def walk(x: Expression): Unit = x match {
-      case And(l, r) => walk(l); walk(r)
-      // the parser leaves BETWEEN unresolved — lower it here
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if f.nameParts.map(_.toLowerCase(java.util.Locale.ROOT)) ==
-            Seq("between") && f.arguments.size == 3 =>
-        walk(GreaterThanOrEqual(f.arguments(0), f.arguments(1)))
-        walk(LessThanOrEqual(f.arguments(0), f.arguments(2)))
-      case GreaterThanOrEqual(a, b) =>
-        cmp(a, b, narrowLo, narrowHi, tNarrowLo, tNarrowHi)
-      case LessThanOrEqual(a, b) =>
-        cmp(a, b, narrowHi, narrowLo, tNarrowHi, tNarrowLo)
-      case GreaterThan(a, b) =>
-        cmp(a, b,
-          (i, v) => if (v < Long.MaxValue) narrowLo(i, v + 1),
-          (i, v) => if (v > Long.MinValue) narrowHi(i, v - 1),
-          tNarrowLo, tNarrowHi) // typed stricts relax to inclusive
-      case LessThan(a, b) =>
-        cmp(a, b,
-          (i, v) => if (v > Long.MinValue) narrowHi(i, v - 1),
-          (i, v) => if (v < Long.MaxValue) narrowLo(i, v + 1),
-          tNarrowHi, tNarrowLo)
-      case EqualTo(a, b) =>
-        cmp(a, b,
-          (i, v) => { narrowLo(i, v); narrowHi(i, v) },
-          (i, v) => { narrowLo(i, v); narrowHi(i, v) },
-          (i, v) => { tNarrowLo(i, v); tNarrowHi(i, v) },
-          (i, v) => { tNarrowLo(i, v); tNarrowHi(i, v) })
-      case IsNull(a) =>
-        // `DELETE WHERE c IS NULL`: only files with recorded nulls
-        // (or unknown counts) are candidates. scala.Left/Right
-        // explicitly — the catalyst wildcard import shadows them with
-        // the string functions of the same name
-        statIdx(a).foreach(i => nullChecks += ((scala.Left(i), true)))
-        typedIdx(a).foreach(i => nullChecks += ((scala.Right(i), true)))
-      case IsNotNull(a) =>
-        statIdx(a).foreach(i => nullChecks += ((scala.Left(i), false)))
-        typedIdx(a).foreach(i => nullChecks += ((scala.Right(i), false)))
-      case _ => () // untranslated: widens candidacy only
-    }
-    walk(e0)
-    ((lo.keySet ++ hi.keySet).toSeq.sorted.map { i =>
-      (i, lo.getOrElse(i, Long.MinValue), hi.getOrElse(i, Long.MaxValue))
-    },
-      (tlo.keySet ++ thi.keySet).toSeq.sorted.map { i =>
-        (i, tlo.get(i), thi.get(i))
-      },
-      nullChecks.result())
+    deleteCore(spark, root, v0, m0, ps.mayHold, expr(predicateSql))
   }
 
   /** When the update key set is small, the per-file candidate test a
@@ -2829,62 +2657,37 @@ object VersionedTable {
   private def encodeStrKey(s: String): String =
     Layout.hexEnc(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
-  /** The per-file "may hold one of the keys" test for keyed DML, over
-    * MIXED long and string key columns. Sparse key sets (≤
-    * [[SparseKeyProbeLimit]]) test the actual values — two keys at the
-    * extremes of the key space touch two files, not the global-box
-    * span; larger sets fall back to `bounds`, each key column's
-    * [min, max] from the caller's [[countAndBounds]] job.
-    * String tests run against the manifest's TRUNCATED bounds (prefix
-    * min ≤ every value, increment-truncated max ≥), so candidacy can
-    * only widen, never miss; an absent bound side never prunes.
-    * `keyFrame`'s columns must be NULL-free and positionally aligned
-    * with `keyCols`.
+  /** The "may hold one of the keys" bounds test for keyed DML, over
+    * MIXED long and string key columns. A sparse key set (≤
+    * [[SparseKeyProbeLimit]] tuples) is one point probe per tuple, built
+    * once — two keys at the extremes of the key space touch two files,
+    * not the global-box span; a larger set is ONE box probe over
+    * `bounds`, each key column's [min, max] from the caller's
+    * [[countAndBounds]] job. String keys test against the manifest's
+    * TRUNCATED bounds (prefix min ≤ every value, increment-truncated
+    * max ≥), so candidacy only widens, never misses. `keyFrame`'s
+    * columns must be NULL-free and positionally aligned with `keyCols`.
     */
   private def keyedCandidateTest(m: Manifest, keyCols: Seq[String],
       keyFrame: DataFrame, total: Long, what: String,
-      bounds: Seq[(Any, Any)])
-      : (Seq[(Long, Long)], Seq[TBound]) => Boolean = {
+      bounds: Seq[(Any, Any)]): Bounds => Boolean = {
     val idx = keyCols.map(c => keyIndex(m, c, what))
-    val keyTuples: Option[Seq[Seq[Any]]] =
-      if (total <= SparseKeyProbeLimit)
-        Some(keyFrame.collect().toSeq.map(row =>
-          idx.zipWithIndex.map {
-            case (Left(_), p) => row.getLong(p)
-            case (Right(_), p) => encodeStrKey(row.getString(p))
-          }))
-      else None
-    // dense bounds, encoded only when the sparse set is too large
-    lazy val dense: Seq[(Any, Any)] = idx.zip(bounds).map {
-      case (Left(_), lohi) => lohi
-      case (Right(_), (lo, hi)) =>
-        (encodeStrKey(lo.asInstanceOf[String]),
-          encodeStrKey(hi.asInstanceOf[String]))
-    }
-    // may [lo, hi] (encoded) intersect typed bound ti? Absent bounds
-    // (legacy pseudo-shard, unprovable side) never prune.
-    def strHit(tb: Seq[TBound], ti: Int, lo: String, hi: String): Boolean = {
-      def tLo = if (tb.isEmpty) None else tb(ti)._1
-      def tHi = if (tb.isEmpty) None else tb(ti)._2
-      tLo.forall(mn => tCompare('s', hi, mn) >= 0) &&
-        tHi.forall(mx => tCompare('s', lo, mx) <= 0)
-    }
-    (boxes, tb) => keyTuples match {
-      case Some(ks) => ks.exists(t => idx.zip(t).forall {
-        case (Left(i), v) =>
-          val (mn, mx) = boxes(i)
-          val lv = v.asInstanceOf[Long]; lv >= mn && lv <= mx
-        case (Right(ti), v) =>
-          val e = v.asInstanceOf[String]; strHit(tb, ti, e, e)
-      })
-      case None => idx.zip(dense).forall {
+    def probe(lohi: Seq[(Any, Any)]): Probes = {
+      val (longs, strs) = idx.zip(lohi).partitionMap {
         case (Left(i), (lo, hi)) =>
-          val (mn, mx) = boxes(i)
-          !(hi.asInstanceOf[Long] < mn || lo.asInstanceOf[Long] > mx)
+          Left((i, lo.asInstanceOf[Long], hi.asInstanceOf[Long]))
         case (Right(ti), (lo, hi)) =>
-          strHit(tb, ti, lo.asInstanceOf[String], hi.asInstanceOf[String])
+          Right((ti, 's', Some(encodeStrKey(lo.asInstanceOf[String])),
+            Some(encodeStrKey(hi.asInstanceOf[String]))))
       }
+      Probes(boxes = longs, tranges = strs)
     }
+    val probes =
+      if (total <= SparseKeyProbeLimit)
+        keyFrame.collect().toSeq.map(row =>
+          probe(idx.indices.map(p => (row.get(p), row.get(p)))))
+      else Seq(probe(bounds))
+    b => probes.exists(_.mayHold(b))
   }
 
   /** ONE job over `frame`: its row count and each of `cols`' [min, max]
@@ -3167,10 +2970,7 @@ object VersionedTable {
     }
     val mayHoldKeys = keyedCandidateTest(m, keyCols, keyFrame, total,
       what, bounds)
-    val candShards = m.shards.filter(r =>
-      r.name.isEmpty || mayHoldKeys(r.boxes, r.tboxes))
-    val touched = candShards.flatMap(r => m.entriesOf(r))
-      .filter(e => mayHoldKeys(e.boxes, e.tboxes))
+    val (touched, candShards) = prune(m, mayHoldKeys)
     val touchedNames = touched.map(_.name).toSet
     val rewritten =
       if (touched.isEmpty) Seq.empty
@@ -3201,7 +3001,7 @@ object VersionedTable {
         m.entriesOf(r).filterNot(e => touchedNames(e.name)), m.typedCols)
     }
     rebasePublish(spark, root, v0, m, candShards.map(_.name).toSet,
-      e => mayHoldKeys(e.boxes, e.tboxes), rewritten ++ newEntries,
+      mayHoldKeys, rewritten ++ newEntries,
       replacements ++ rewrittenShard.toSeq ++ newShard.toSeq, "upsert",
       Some(merged), newEntries.map(_.name), frontier)
       .map { case (v, applied) => (v, applied, replaced) }
@@ -3254,30 +3054,12 @@ object VersionedTable {
   }
 
   /** (stats-stage candidates, bloom-stage survivors, manifest) — the
-    * ONE implementation of the multi-stage point prune.
+    * point probe is the one-value box of [[boxRead]], then the bloom.
     */
   private def pointCandidates(spark: SparkSession, root: String,
       c: String, value: Long): (Seq[String], Seq[String], Manifest) = {
-    val v = latestVersion(spark, root).getOrElse(
-      sys.error(s"no versions at $root"))
-    val m = readManifest(spark, root, v)
-    val statsKept = statsCandidates(m, c, value)
+    val (statsKept, m) = prunedEntries(spark, root, Seq((c, value, value)))
     (statsKept, bloomSurvivors(spark, root, statsKept, c, value), m)
-  }
-
-  private def statsCandidates(m: Manifest, c: String,
-      value: Long): Seq[String] = {
-    val i = m.statCols.indexOf(c)
-    if (i < 0) m.entries.map(_.name) // unmanifested column: no pruning
-    else m.shards
-      .filter(r => r.name.isEmpty || {
-        val (mn, mx) = r.boxes(i); value >= mn && value <= mx
-      })
-      .flatMap(r => m.entriesOf(r))
-      .collect {
-        case e if { val (mn, mx) = e.boxes(i); value >= mn && value <= mx } =>
-          e.name
-      }
   }
 
   /** `value`: Long (stat columns) or Array[Byte] UTF-8 (string typed

@@ -309,4 +309,59 @@ class VersionedSqlDmlSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM vt_race").head.getLong(0) ==
       VersionedTable.read(spark, root).count())
   }
+
+  test("SQL DELETE past the Long extremes deletes nothing and publishes nothing, on both front-ends") {
+    val Past = Seq("> 9223372036854775807", "< -9223372036854775808")
+    val root = freshRoot("extremes")
+    VersionedTable.append(rows(0, 100), root, Stats)
+    spark.sql(s"CREATE VERSIONED TABLE vt_ext LOCATION '$root' " +
+      "KEYS(event_id)")
+    val v0 = VersionedTable.latestVersion(spark, root).get
+    Past.foreach { cmp =>
+      val del = spark.sql(s"DELETE FROM vt_ext WHERE event_id $cmp").head
+      assert(del.getLong(1) == 0L, s"event_id $cmp matches no row")
+    }
+    assert(VersionedTable.latestVersion(spark, root).contains(v0),
+      "a delete that matches nothing must publish nothing")
+    assert(ids(root) == (0L until 100L))
+    // the DSv2 catalog front-end renders its filters back into the
+    // same dispatch
+    val w = java.nio.file.Files.createTempDirectory("graft-vtdml-ext-cat")
+      .toString
+    spark.conf.set("spark.sql.catalog.vtext",
+      "graft.pipeline.VersionedCatalog")
+    spark.conf.set("spark.sql.catalog.vtext.warehouse", w)
+    spark.sql("""CREATE TABLE vtext.t (id BIGINT, n BIGINT)
+      TBLPROPERTIES ('stats'='id')""")
+    spark.sql("INSERT INTO vtext.t SELECT id, id * 2 AS n FROM range(0, 100)")
+    val c0 = VersionedTable.latestVersion(spark, s"$w/t").get
+    Past.foreach(cmp => spark.sql(s"DELETE FROM vtext.t WHERE id $cmp"))
+    assert(VersionedTable.latestVersion(spark, s"$w/t").contains(c0),
+      "a catalog delete that matches nothing must publish nothing")
+    assert(spark.table("vtext.t").count() == 100L)
+  }
+
+  test("deleteWhere prunes IN-lists: only the file holding the values is rewritten") {
+    val root = freshRoot("in")
+    VersionedTable.append(rows(0, 400).repartitionByRange(8, $"event_id"),
+      root, Stats)
+    val before = VersionedTable.entryNames(spark, root,
+      VersionedTable.latestVersion(spark, root).get)
+    assert(before.size == 8)
+    // range-partitioned: every other file's event_id box excludes 3, 4
+    val holding = VersionedTable.read(spark, root)
+      .filter($"event_id".isin(3L, 4L))
+      .select(input_file_name()).as[String].collect()
+      .map(_.split('/').last).toSet
+    assert(holding.size == 1)
+    val (_, deleted) = VersionedTable.deleteWhere(spark, root,
+      "event_id IN (3, 4)")
+    assert(deleted == 2L)
+    assert(ids(root) == (0L until 400L).filterNot(Set(3L, 4L)))
+    val after = VersionedTable.entryNames(spark, root,
+      VersionedTable.latestVersion(spark, root).get)
+    assert((before -- holding).subsetOf(after),
+      "every file whose box excludes 3 and 4 must carry by name")
+    assert((before -- after) == holding)
+  }
 }
