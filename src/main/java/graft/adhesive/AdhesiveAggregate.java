@@ -17,6 +17,28 @@ import org.apache.spark.sql.Row;
  * {@code STATE} is held as an object by Spark's object hash aggregation,
  * which turns sort-based past 128 groups per task.
  *
+ * <p>A state arrives in {@code reduce}, {@code merge} and {@code finish}
+ * as the Java type of its declared {@code STATE}, and the callbacks return
+ * it the same way:
+ * <ul>
+ *   <li>BIGINT, INT, SMALLINT, TINYINT, FLOAT, DOUBLE, BOOLEAN — the boxed
+ *       {@code Long}, {@code Integer}, {@code Short}, {@code Byte},
+ *       {@code Float}, {@code Double}, {@code Boolean};</li>
+ *   <li>STRING — {@code String}; BINARY — {@code byte[]};</li>
+ *   <li>DECIMAL(p,s) — {@code java.math.BigDecimal};</li>
+ *   <li>DATE / TIMESTAMP — {@code java.sql.Date} /
+ *       {@code java.sql.Timestamp} ({@code java.time.LocalDate} /
+ *       {@code Instant} under {@code spark.sql.datetime.java8API.enabled},
+ *       as for arguments);</li>
+ *   <li>ARRAY&lt;T&gt; — {@code java.util.List} (an {@code ArrayList});
+ *       MAP&lt;K,V&gt; — {@code java.util.Map} (a {@code HashMap}); both
+ *       mutable, also when nested in an ARRAY or MAP, so a fold may update
+ *       its state in place and return it;</li>
+ *   <li>STRUCT&lt;...&gt; — {@link Row}, built with
+ *       {@code RowFactory.create(...)} and read with the positional
+ *       getters.</li>
+ * </ul>
+ *
  * <p>Contract:
  * <ul>
  *   <li><b>{@code zero()}</b> — the identity state. Must be non-null and a

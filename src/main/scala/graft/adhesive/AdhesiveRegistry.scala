@@ -2,9 +2,7 @@ package graft.adhesive
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, Inline}
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, OneRowRelation}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
-import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Row, SparkSession}
 
@@ -99,10 +97,32 @@ object AdhesiveRegistry {
 
   private[adhesive] def compileCacheSize: Int = compileCache.size
 
-  private def compiledCached(lang: String, source: String)(
-      doCompile: => (String, Map[String, Array[Byte]]))
-      : (String, Map[String, Array[Byte]]) =
-    compileCache.getOrCompute((lang, source))(doCompile)
+  /** The (mangled FQN, bytecode) of `source` in `lang` ("java" or
+    * "scala"), from [[compileCache]] or from a fresh compile.
+    */
+  private def compiled(lang: String, source: String): (String, Map[String, Array[Byte]]) =
+    compileCache.getOrCompute((lang, source)) {
+      val (rewritten, fqn) = SourceRewriter.rewrite(source)
+      val bytecode =
+        if (lang == "java") InMemoryJavaCompiler.compile(fqn, rewritten)
+        else InMemoryScalaCompiler.compile(fqn, rewritten)
+      (fqn, bytecode)
+    }
+
+  /** A call's arguments, checked for their count and each exactly typed
+    * ([[StrictArg]]); `kind` names the function in the count error.
+    */
+  private def checkedArgs(kind: String, name: String, argTypes: Seq[DataType],
+      exprs: Seq[Expression]): Seq[Expression] = {
+    if (exprs.length != argTypes.length) {
+      throw new AdhesiveException(
+        s"adhesive $kind '$name' takes ${argTypes.length} argument(s), " +
+          s"got ${exprs.length}")
+    }
+    exprs.zip(argTypes).zipWithIndex.map {
+      case ((e, dt), i) => StrictArg(e, dt, name, i)
+    }
+  }
 
   /** Return-type validation, hoisted BEFORE compilation/instantiation: a
     * DDL guaranteed to fail must not spend a javac/scalac run, populate
@@ -125,10 +145,7 @@ object AdhesiveRegistry {
       nonNullable: Boolean = false,
       deterministic: Boolean = false): Unit = {
     requireSupportedReturnType(returnType)
-    val (fqn, bytecode) = compiledCached("java", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryJavaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compiled("java", source)
     AdhesiveInstances.instance(fqn, bytecode) // eager DDL-time validation
     register(spark, name, fqn, bytecode, argTypes, returnType, nonNullable,
       deterministic)
@@ -147,10 +164,7 @@ object AdhesiveRegistry {
       nonNullable: Boolean = false,
       deterministic: Boolean = false): Unit = {
     requireSupportedReturnType(returnType)
-    val (fqn, bytecode) = compiledCached("scala", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryScalaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compiled("scala", source)
     AdhesiveInstances.instance(fqn, bytecode)
     register(spark, name, fqn, bytecode, argTypes, returnType, nonNullable,
       deterministic)
@@ -195,14 +209,7 @@ object AdhesiveRegistry {
     val callFn: Row => Any = new AdhesiveUdf(name, fqn, bytecode, nonNullable, jarPath)
 
     val builder = (exprs: Seq[Expression]) => {
-      if (exprs.length != argTypes.length) {
-        throw new AdhesiveException(
-          s"adhesive function '$name' takes ${argTypes.length} argument(s), " +
-            s"got ${exprs.length}")
-      }
-      val checked = exprs.zip(argTypes).zipWithIndex.map {
-        case ((e, dt), i) => StrictArg(e, dt, name, i)
-      }
+      val checked = checkedArgs("function", name, argTypes, exprs)
       // The arguments go straight into a reused argument Row (positional
       // getters — the reference's row contract).
       // udfDeterministic defaults to false — the reference's
@@ -223,16 +230,15 @@ object AdhesiveRegistry {
   // (`RegisterFunction::Scalar` is its only enum case, src/fusion.rs:78).
   // Same compile/mangle/cache/ship pipeline; the callbacks run through
   // AdhesiveAggregatorBridge, and Spark plans map-side partial
-  // aggregation. A primitive STATE runs as AdhesiveImperativeAggregate
-  // (HashAggregate); any other as a ScalaAggregator (ObjectHashAggregate,
-  // which turns sort-based past 128 groups per task).
+  // aggregation. A call folds its arguments through the same reused
+  // argument row as a scalar call, and its state and result go through
+  // the same CatalystTypeConverters: a primitive STATE runs as
+  // AdhesiveImperativeAggregate (HashAggregate), any other as
+  // AdhesiveObjectAggregate (ObjectHashAggregate, which turns sort-based
+  // past 128 groups per task).
   // ---------------------------------------------------------------------
 
-  /** State/return validation for aggregates (same type matrix as scalar
-    * returns; the aggregate side carries its values through typed encoders
-    * — [[AdhesiveAggregatorBridge.encoderFor]] — rather than
-    * CatalystTypeConverters, so both dispatch tables extend in lockstep).
-    */
+  /** State/return validation for aggregates: the scalar return types. */
   private def requireSupportedAggType(role: String, dt: DataType): Unit =
     if (!isSupportedReturnType(dt)) {
       throw new AdhesiveException(
@@ -250,10 +256,7 @@ object AdhesiveRegistry {
       deterministic: Boolean = false): Unit = {
     requireSupportedAggType("return", returnType)
     stateType.foreach(requireSupportedAggType("state", _))
-    val (fqn, bytecode) = compiledCached("java", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryJavaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compiled("java", source)
     AdhesiveInstances.aggregateInstance(fqn, bytecode) // eager validation
     registerAggregate(spark, name, fqn, bytecode, argTypes, returnType,
       stateType.getOrElse(returnType), deterministic = deterministic)
@@ -269,10 +272,7 @@ object AdhesiveRegistry {
       deterministic: Boolean = false): Unit = {
     requireSupportedAggType("return", returnType)
     stateType.foreach(requireSupportedAggType("state", _))
-    val (fqn, bytecode) = compiledCached("scala", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryScalaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compiled("scala", source)
     AdhesiveInstances.aggregateInstance(fqn, bytecode)
     registerAggregate(spark, name, fqn, bytecode, argTypes, returnType,
       stateType.getOrElse(returnType), deterministic = deterministic)
@@ -307,35 +307,13 @@ object AdhesiveRegistry {
     val bridge = new AdhesiveAggregatorBridge(name, fqn, bytecode, stateType,
       returnType, jarPath)
     val primitiveState = AdhesiveArgRow.isPrimitive(stateType)
-    // The input encoder's N-field struct schema makes the registered
-    // function N-ary: ScalaAggregator binds each call argument to one
-    // field positionally, and reduce() receives them as the packed Row —
-    // the same positional-getter contract as scalar compute().
-    val inputSchema = StructType(argTypes.zipWithIndex.map {
-      case (dt, i) => StructField(s"arg$i", dt)
-    })
     // Registered through the same expression-builder seam as the scalar
     // and table variants, so call arguments get StrictArg exactness
     // (Signature::exact, src/fusion.rs:72) instead of Spark's standard
     // UDAF coercion — `agg_fn('12.34', ...)` is a plan-time error exactly
-    // like its scalar twin. The ScalaAggregator built here is the same
-    // expression `spark.udf.register(name, functions.udaf(...))` would
-    // build (udaf.scalaAggregator passes these encoders unresolved too;
-    // the analyzer's ResolveEncodersInScalaAgg rule binds them) — only
-    // the argument checking differs.
-    lazy val inputEnc = ExpressionEncoder(inputSchema)
-    // bufferEncoder is always one of encoderFor's AgnosticEncoders
-    lazy val bufferEnc = ExpressionEncoder(bridge.bufferEncoder
-      .asInstanceOf[org.apache.spark.sql.catalyst.encoders.AgnosticEncoder[Any]])
+    // like its scalar twin.
     val builder = (exprs: Seq[Expression]) => {
-      if (exprs.length != argTypes.length) {
-        throw new AdhesiveException(
-          s"adhesive aggregate function '$name' takes ${argTypes.length} " +
-            s"argument(s), got ${exprs.length}")
-      }
-      val checked = exprs.zip(argTypes).zipWithIndex.map {
-        case ((e, dt), i) => StrictArg(e, dt, name, i)
-      }
+      val checked = checkedArgs("aggregate function", name, argTypes, exprs)
       // Return the BARE AggregateFunction (no .toAggregateExpression()):
       // the analyzer wraps it itself, which is what lets the call-site
       // DISTINCT / FILTER (WHERE ...) modifiers apply — a pre-wrapped
@@ -346,17 +324,10 @@ object AdhesiveRegistry {
       // re-planned on the assumption of repeatable results; Spark plans
       // nondeterministic aggregate functions fine — only scalar
       // expressions are restricted). Declared DETERMINISTIC opts in.
-      if (primitiveState) {
-        AdhesiveImperativeAggregate(bridge, checked, deterministic): Expression
-      } else {
-        // The ScalaAggregator path exists only for STATE types that do not
-        // fit a fixed-width buffer slot: a variable-length state in an
-        // ImperativeAggregate buffer would force SortAggregate, whereas
-        // ScalaAggregator keeps it as an object in ObjectHashAggregate.
-        ScalaAggregator[Row, Any, Any](checked.toList, bridge, inputEnc,
-          bufferEnc, nullable = true, isDeterministic = deterministic,
-          aggregatorName = Some(name)): Expression
-      }
+      // A variable-length state in a fixed-width buffer would force
+      // SortAggregate, so any other STATE is held as an object.
+      if (primitiveState) AdhesiveImperativeAggregate(bridge, checked, deterministic): Expression
+      else AdhesiveObjectAggregate(bridge, checked, deterministic): Expression
     }
     spark.asInstanceOf[ClassicSparkSession]
       .sessionState.functionRegistry
@@ -378,10 +349,7 @@ object AdhesiveRegistry {
       source: String,
       argTypes: Seq[DataType],
       outSchema: StructType): Unit = {
-    val (fqn, bytecode) = compiledCached("java", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryJavaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compiled("java", source)
     AdhesiveInstances.tableInstance(fqn, bytecode) // eager DDL validation
     registerTableFunction(spark, name, fqn, bytecode, argTypes, outSchema)
   }
@@ -392,10 +360,7 @@ object AdhesiveRegistry {
       source: String,
       argTypes: Seq[DataType],
       outSchema: StructType): Unit = {
-    val (fqn, bytecode) = compiledCached("scala", source) {
-      val (rewritten, f) = SourceRewriter.rewrite(source)
-      (f, InMemoryScalaCompiler.compile(f, rewritten))
-    }
+    val (fqn, bytecode) = compiled("scala", source)
     AdhesiveInstances.tableInstance(fqn, bytecode)
     registerTableFunction(spark, name, fqn, bytecode, argTypes, outSchema)
   }
@@ -422,14 +387,7 @@ object AdhesiveRegistry {
       jarPath: Option[String] = None): Unit = {
     val callFn: Row => Any = new AdhesiveTableUdf(name, fqn, bytecode, jarPath)
     val builder = (exprs: Seq[Expression]) => {
-      if (exprs.length != argTypes.length) {
-        throw new AdhesiveException(
-          s"adhesive table function '$name' takes ${argTypes.length} " +
-            s"argument(s), got ${exprs.length}")
-      }
-      val checked = exprs.zip(argTypes).zipWithIndex.map {
-        case ((e, dt), i) => StrictArg(e, dt, name, i)
-      }
+      val checked = checkedArgs("table function", name, argTypes, exprs)
       val udf = AdhesiveCall(callFn, ArrayType(outSchema, containsNull = false),
         checked, name,
         nullable = true, // null/empty list ⇒ no rows (Generate, not outer)

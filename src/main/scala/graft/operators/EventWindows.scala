@@ -32,12 +32,14 @@ object EventWindows {
   /** The [[drainEvents]] state-store instance count for a drain of
     * `srcBytes` input on a `cores`-core session: grows with data
     * (`ceil(bytes / StatePartitionBytes)`, floor 1 for the KB harness
-    * drains) and is CLAMPED at `max(cores × 4, 4096)` — uncapped, a
-    * 100 TB drained source would ask for millions of state-store
-    * instances, far past practical task-launch and per-batch store
-    * load/commit overhead; the cap keeps the count within a small
-    * factor of the cluster's parallelism while the floor keeps tiny
-    * drains at one store.
+    * drains) and is CLAMPED at `max(cores × 4, 4096)`. That cap is 4,096
+    * on any session under 1,024 cores and `cores × 4` above it, so on
+    * the sessions this repo runs it is a flat 4,096 stores, reached at
+    * a 4 GB source — not a small factor of the session's parallelism.
+    * Uncapped, a 100 TB drained source would ask for millions of
+    * state-store instances, far past practical task-launch and
+    * per-batch store load/commit overhead. The cap has not been
+    * measured against a smaller one.
     */
   private[operators] def statePartitions(srcBytes: Long, cores: Int): Long = {
     val raw = (srcBytes + StatePartitionBytes - 1) / StatePartitionBytes

@@ -476,7 +476,7 @@ object Layout {
     * records it per row group) — what lets a manifest serve `count(*)`
     * without touching data. One row per INPUT file: boxes are None
     * when any stat column lacks usable long statistics (empty file,
-    * all-NULL column, non-Long type) — callers decide whether that is
+    * non-Long type, absent column) — callers decide whether that is
     * an error (a non-empty data file they must not lose) or expected
     * (a zero-row rewrite output to discard).
     */
@@ -815,9 +815,17 @@ object Layout {
     } finally reader.close()
   }
 
+  /** The box of a long column that is NULL in every row of a file:
+    * min > max, so no bounded range intersects it, and a union with it
+    * leaves the other box unchanged.
+    */
+  private[pipeline] val AllNullBox: (Long, Long) = (Long.MaxValue, Long.MinValue)
+
   /** One file's (name, row count, [(min, max)] per column) from its
-    * footer; boxes are None when statistics are absent for ANY of the
-    * columns.
+    * footer. Row groups where the column is all NULL add nothing to its
+    * box; a column NULL in every row gets [[AllNullBox]]. Boxes are None
+    * when ANY of the columns is absent, not a long, or lacks statistics
+    * in some row group.
     */
   private def longStatsOf(file: String,
       conf: org.apache.hadoop.conf.Configuration,
@@ -832,15 +840,15 @@ object Layout {
         val stats = blocks.flatMap(_.getColumns.asScala)
           .filter(_.getPath.toDotString == c)
           .map(_.getStatistics)
-        if (stats.isEmpty || stats.exists(s =>
-            s == null || s.isEmpty || !s.hasNonNullValue)) None
+        if (stats.isEmpty || stats.exists(s => s == null || s.isEmpty)) None
         else {
           val longs = stats.collect {
-            case l: org.apache.parquet.column.statistics.LongStatistics =>
-              (l.getMin, l.getMax)
+            case l: org.apache.parquet.column.statistics.LongStatistics => l
           }
           if (longs.size != stats.size) None
-          else Some((longs.map(_._1).min, longs.map(_._2).max))
+          else Some(longs.filter(_.hasNonNullValue).foldLeft(AllNullBox) {
+            case ((lo, hi), l) => (lo min l.getMin, hi max l.getMax)
+          })
         }
       }
       val boxes = cols.map(minMax)

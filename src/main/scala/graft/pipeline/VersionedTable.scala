@@ -183,7 +183,8 @@ object VersionedTable {
     }
 
   /** The stats a file or a shard carries — what [[Probes.mayHold]]
-    * reads: per-stat-column long [min, max] `boxes`, typed-column
+    * reads: per-stat-column long [min, max] `boxes` (min > max when the
+    * column holds only NULLs: `Layout.AllNullBox`), typed-column
     * bounds `tboxes` (empty on tables without typed stat columns, and
     * on the legacy pseudo-shard), per-column null counts over
     * statCols ++ typedCols, and the row count.
@@ -734,8 +735,8 @@ object VersionedTable {
       ()
     }
     // FAIL LOUDLY, never silently lose rows: a NON-empty file without
-    // usable LONG statistics for every stat column (all-NULL column,
-    // non-Long column type, misspelled name) cannot be manifested —
+    // usable LONG statistics for every stat column (non-Long column
+    // type, misspelled name) cannot be manifested —
     // publishing only the survivors would make the skipped files' rows
     // invisible to every read and the next vacuum would delete them
     // permanently, with a green version id returned. TYPED bounds are
@@ -746,8 +747,8 @@ object VersionedTable {
       throw new IllegalArgumentException(
         s"append aborted: ${missing.size} of ${dataFiles.size} data files " +
           s"have no usable long statistics for stat columns " +
-          s"${statCols.mkString("[", ", ", "]")} (non-Long column type, " +
-          s"all-NULL values, or a misspelled name?): " +
+          s"${statCols.mkString("[", ", ", "]")} (non-Long column type " +
+          s"or a misspelled name?): " +
           s"${missing.take(3).mkString(", ")}. Nothing was published; " +
           "the moved files are unreferenced and will be vacuumed.")
     dataFiles.map { case (name, rows, boxes, tb, nulls) =>
@@ -1884,11 +1885,13 @@ object VersionedTable {
     /** THE bounds test: can a file or shard with these stats hold a row
       * passing every probe? A sound over-approximation: an absent typed
       * bound or an unknown (-1) null count never prunes; an empty long
-      * range (`c > Long.MaxValue`) prunes everything.
+      * range (`c > Long.MaxValue`) prunes everything, and so does an
+      * empty long box (`Layout.AllNullBox`: the column is NULL in every
+      * row), against every long range and IN-list.
       */
     def mayHold(b: Bounds): Boolean =
       boxes.forall { case (i, lo, hi) =>
-        val (mn, mx) = b.boxes(i); lo <= hi && hi >= mn && lo <= mx
+        val (mn, mx) = b.boxes(i); lo <= hi && mn <= mx && hi >= mn && lo <= mx
       } &&
       ins.forall { case (i, vs) =>
         val (mn, mx) = b.boxes(i); vs.exists(v => v >= mn && v <= mx)

@@ -10,10 +10,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The adhesive call path: scalar and table calls as one codegen'd
-  * [[AdhesiveCall]] over a reused argument row, and primitive-STATE
-  * aggregates as a hash-aggregated [[AdhesiveImperativeAggregate]]. The
-  * plan shapes are pinned, and every shape is checked against built-in
-  * twins with and without code generation.
+  * [[AdhesiveCall]] over a reused argument row, primitive-STATE
+  * aggregates as a hash-aggregated [[AdhesiveImperativeAggregate]], and
+  * any other STATE as an [[AdhesiveObjectAggregate]]. The plan shapes are
+  * pinned, and every shape is checked against built-in twins with and
+  * without code generation.
   */
 class AdhesiveCallPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -111,6 +112,66 @@ class AdhesiveCallPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         |    return new ArrayList<Long>(Arrays.asList(x.get(0) + y.get(0), x.get(1) + y.get(1)));
         |  }
         |}""".stripMargin))
+    // STRUCT state: (sum, count) of the non-NULL inputs, finished to the mean
+    spark.sql("CREATE OR REPLACE AGGREGATE FUNCTION cp_mean(BIGINT) RETURNS DOUBLE " +
+      "STATE STRUCT<s: BIGINT, n: BIGINT> " +
+      java("import org.apache.spark.sql.RowFactory;", """public class CpMean extends AdhesiveAggregate {
+        |  public Object zero() { return RowFactory.create(0L, 0L); }
+        |  public Object reduce(Object s, Row in) {
+        |    if (in.isNullAt(0)) return s;
+        |    Row r = (Row) s;
+        |    return RowFactory.create(r.getLong(0) + in.getLong(0), r.getLong(1) + 1L);
+        |  }
+        |  public Object merge(Object a, Object b) {
+        |    Row x = (Row) a, y = (Row) b;
+        |    return RowFactory.create(x.getLong(0) + y.getLong(0), x.getLong(1) + y.getLong(1));
+        |  }
+        |  public Object finish(Object s) {
+        |    Row r = (Row) s;
+        |    return r.getLong(1) == 0L ? null : (Object) ((double) r.getLong(0) / r.getLong(1));
+        |  }
+        |}""".stripMargin))
+    // nested ARRAY state [[count, sum], [max]], updated in place at both levels
+    spark.sql("CREATE OR REPLACE AGGREGATE FUNCTION cp_grid(DOUBLE) RETURNS ARRAY<ARRAY<DOUBLE>> " +
+      "STATE ARRAY<ARRAY<DOUBLE>> " +
+      java("import java.util.*;", """public class CpGrid extends AdhesiveAggregate {
+        |  public Object zero() {
+        |    List<List<Double>> g = new ArrayList<List<Double>>();
+        |    g.add(new ArrayList<Double>(Arrays.asList(0.0, 0.0)));
+        |    g.add(new ArrayList<Double>(Arrays.asList(-1.0)));
+        |    return g;
+        |  }
+        |  private static Object fold(List<List<Double>> g, double n, double sum, double max) {
+        |    g.get(0).set(0, g.get(0).get(0) + n);
+        |    g.get(0).set(1, g.get(0).get(1) + sum);
+        |    g.get(1).set(0, Math.max(g.get(1).get(0), max));
+        |    return g;
+        |  }
+        |  public Object reduce(Object s, Row in) {
+        |    if (in.isNullAt(0)) return s;
+        |    double v = in.getDouble(0);
+        |    return fold((List<List<Double>>) s, 1.0, v, v);
+        |  }
+        |  public Object merge(Object a, Object b) {
+        |    List<List<Double>> y = (List<List<Double>>) b;
+        |    return fold((List<List<Double>>) a, y.get(0).get(0), y.get(0).get(1), y.get(1).get(0));
+        |  }
+        |}""".stripMargin))
+    // MAP state, mutated in place
+    spark.sql(TestAggregates.tokenCountsDdl("cp_tok"))
+    // a NULL input poisons the group to a NULL object state
+    spark.sql("CREATE OR REPLACE AGGREGATE FUNCTION cp_dpoison(BIGINT) RETURNS DECIMAL(12,2) " +
+      "STATE DECIMAL(12,2) " +
+      java("import java.math.BigDecimal;", """public class CpDpoison extends AdhesiveAggregate {
+        |  public Object zero() { return BigDecimal.valueOf(0L, 2); }
+        |  public Object reduce(Object s, Row in) {
+        |    if (s == null || in.isNullAt(0)) return null;
+        |    return ((BigDecimal) s).add(BigDecimal.valueOf(in.getLong(0), 2));
+        |  }
+        |  public Object merge(Object a, Object b) {
+        |    return a == null || b == null ? null : (Object) ((BigDecimal) a).add((BigDecimal) b);
+        |  }
+        |}""".stripMargin))
     // hands back its own argument row, twice
     spark.sql("CREATE OR REPLACE TABLE FUNCTION cp_twice(BIGINT, STRING) " +
       "RETURNS TABLE(a BIGINT, s STRING) " +
@@ -197,6 +258,43 @@ class AdhesiveCallPathSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           spark.sql("SELECT a, s FROM cp_in UNION ALL SELECT a, s FROM cp_in"))
       }
     }
+  }
+
+  for ((mode, conf) <- Modes) {
+    test(s"object-state aggregates equal their built-in twins past the sort-based fallback ($mode)") {
+      setUp
+      withConf(conf) {
+        // MAP values cannot take part in set operations: compare the
+        // sorted entries
+        val got = spark.sql(
+          """SELECT k, cp_mean(a) AS m, cp_grid(d) AS g,
+            |       array_sort(map_entries(cp_tok(s))) AS t, cp_dpoison(a) AS p
+            |FROM cp_in GROUP BY k""".stripMargin)
+        val want = spark.sql(
+          """SELECT c.k, CAST(sum(a) AS DOUBLE) / count(a) AS m,
+            |       array(array(CAST(count(d) AS DOUBLE), coalesce(sum(d), 0D)),
+            |             array(coalesce(max(d), -1D))) AS g,
+            |       first(t.t) AS t,
+            |       CASE WHEN count_if(a IS NULL) > 0 THEN NULL
+            |            ELSE CAST(CAST(coalesce(sum(a), 0L) AS DECIMAL(20, 0)) / 100
+            |                      AS DECIMAL(12, 2)) END AS p
+            |FROM cp_in c LEFT JOIN (
+            |  SELECT k, array_sort(collect_list(named_struct('key', s, 'value', n))) AS t
+            |  FROM (SELECT k, s, count(*) AS n FROM cp_in WHERE s IS NOT NULL GROUP BY k, s)
+            |  GROUP BY k) t ON c.k = t.k
+            |GROUP BY c.k""".stripMargin)
+        sameRows(got, want)
+        assert(got.count() == 1000L)
+        val nullStates = got.where("p IS NULL").count()
+        assert(nullStates > 0L && nullStates < 1000L, s"$nullStates groups with a NULL state")
+      }
+    }
+  }
+
+  test("an object-state call's column is named after the call") {
+    setUp
+    assert(spark.sql("SELECT k, cp_vec(a), cp_mean(a) FROM cp_in GROUP BY k").columns.toSeq ==
+      Seq("k", "cp_vec(a)", "cp_mean(a)"))
   }
 
   test("the argument row: typed getters, Row's own errors, copy() keeps the values") {

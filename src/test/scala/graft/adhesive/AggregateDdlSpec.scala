@@ -275,7 +275,7 @@ class AggregateDdlSpec extends AnyFunSuite {
 
   test("DETERMINISTIC flag threads into the planned aggregate; default is volatile") {
     // scalar-path parity (round-13 ADVICE fix): the DDL's DETERMINISTIC
-    // flag must reach ScalaAggregator.isDeterministic instead of being
+    // flag must reach the aggregate's isDeterministic instead of being
     // hardcoded true — a volatile aggregate body must not be CSE'd or
     // re-planned on the assumption of repeatable results
     def plannedDeterminism(fn: String): Boolean = {

@@ -15,10 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * file), the pruned SQL read returns exactly the rows an in-memory
   * model selects — so no file holding a matching row was pruned — and
   * `deleteWhere` leaves exactly the model's survivors, or fails without
-  * publishing. It fails in two known ways: a predicate with no
-  * stats-checkable conjunct is refused, and a rewrite whose output file
-  * would hold only NULLs in `id` aborts (a file's long box cannot
-  * record an all-NULL column).
+  * publishing; the one known refusal is a predicate with no
+  * stats-checkable conjunct. A rewrite whose output file holds only
+  * NULLs in `id` publishes that file with an empty long box.
   */
 class VersionedPruningPropertySpec extends AnyFunSuite {
 
@@ -147,6 +146,34 @@ class VersionedPruningPropertySpec extends AnyFunSuite {
         s"${want.size}; kept ${index.lastKeptFiles} files")
       ok
     }, trials = 60)
+  }
+
+  test("a rewrite whose output file holds only NULLs in a long stat column publishes, and that file matches only IS NULL") {
+    val root = freshRoot("all-null")
+    build(root)
+    val v0 = VersionedTable.latestVersion(spark, root).get
+    VersionedTable.deleteWhere(spark, root,
+      "-1180 >= id AND id BETWEEN -9223372036854775808 AND -178")
+    assert(VersionedTable.latestVersion(spark, root).get == v0 + 1)
+    val left = VersionedTable.read(spark, root).select($"i").as[Int]
+      .collect().toSet
+    assert(left == model.collect {
+      case (i, id, _) if !id.exists(_ <= -1180L) => i }.toSet)
+    // the rewrite of file 0 keeps only its NULL ids: the full long range
+    // prunes that file and no other, IS NULL still reads its rows
+    val (kept, total) = VersionedTable.prunedFileCount(spark, root,
+      Seq(("id", Long.MinValue, Long.MaxValue)))
+    assert(kept == total - 1, s"kept $kept of $total files")
+    val nulls = VersionedTable.sqlRead(spark, root).filter($"id".isNull)
+      .select($"i").as[Int].collect().toSet
+    assert(nulls == model.collect { case (i, None, _) => i }.toSet)
+    // a column without long statistics still aborts the write
+    for (c <- Seq("tag", "nope")) {
+      val e = intercept[IllegalArgumentException](
+        VersionedTable.append(model.map { case (i, _, tag) => (i, tag) }
+          .toDF("i", "tag"), freshRoot(s"bad-$c"), Seq(c)))
+      assert(e.getMessage.contains("no usable long statistics"), e.getMessage)
+    }
   }
 
   test("property: deleteWhere leaves exactly the model's survivors, or fails without publishing") {
