@@ -494,7 +494,7 @@ object Layout {
       val conf = spark.sparkContext.hadoopConfiguration
       return files.asJava.parallelStream()
         .map[(String, Long, Option[Seq[(Long, Long)]])](f =>
-          longStatsOf(f, conf, cols))
+          longStatsOf(f, footerBlocks(f, conf), cols))
         .collect(java.util.stream.Collectors
           .toList[(String, Long, Option[Seq[(Long, Long)]])])
         .asScala.toSeq
@@ -510,7 +510,7 @@ object Layout {
       .map { f =>
         val conf = new org.apache.hadoop.conf.Configuration(false)
         conf.addResource(new java.io.ByteArrayInputStream(confBytes))
-        longStatsOf(f, conf, cols)
+        longStatsOf(f, footerBlocks(f, conf), cols)
       }
       .collect().toSeq
   }
@@ -577,31 +577,27 @@ object Layout {
       conf: org.apache.hadoop.conf.Configuration,
       c: String, value: Any): (String, Boolean) = {
     import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    val may =
-      try {
-        reader.getFooter.getBlocks.asScala.exists { block =>
-          block.getColumns.asScala
-            .find(_.getPath.toDotString == c) match {
-            case None => true // column absent: no proof
-            case Some(cmd) =>
-              val bloom =
-                reader.getBloomFilterDataReader(block).readBloomFilter(cmd)
-              bloom == null || {
-                val h = value match {
-                  case l: Long => bloom.hash(l)
-                  case b: Array[Byte] => bloom.hash(
-                    org.apache.parquet.io.api.Binary.fromConstantByteArray(b))
-                  case other => sys.error(
-                    s"unhashable bloom probe type: ${other.getClass}")
-                }
-                bloom.findHash(h)
+    val may = withFooterReader(f, conf) { reader =>
+      reader.getFooter.getBlocks.asScala.exists { block =>
+        block.getColumns.asScala
+          .find(_.getPath.toDotString == c) match {
+          case None => true // column absent: no proof
+          case Some(cmd) =>
+            val bloom =
+              reader.getBloomFilterDataReader(block).readBloomFilter(cmd)
+            bloom == null || {
+              val h = value match {
+                case l: Long => bloom.hash(l)
+                case b: Array[Byte] => bloom.hash(
+                  org.apache.parquet.io.api.Binary.fromConstantByteArray(b))
+                case other => sys.error(
+                  s"unhashable bloom probe type: ${other.getClass}")
               }
-          }
+              bloom.findHash(h)
+            }
         }
-      } finally reader.close()
+      }
+    }
     (new org.apache.hadoop.fs.Path(f).getName, may)
   }
 
@@ -700,119 +696,128 @@ object Layout {
       typedCols: Seq[(String, Char)])
       : (String, Long, Option[Seq[(Long, Long)]],
         Seq[(Option[String], Option[String])], Seq[Long]) = {
-    val (n, rows, boxes) = longStatsOf(f, conf, cols)
-    val tb =
-      if (typedCols.isEmpty)
-        Seq.empty[(Option[String], Option[String])]
-      else typedStatsOf(f, conf, typedCols)
-    (n, rows, boxes, tb, nullStatsOf(f, conf,
-      cols ++ typedCols.map(_._1), rows))
+    val blocks = footerBlocks(f, conf)
+    val (n, rows, boxes) = longStatsOf(f, blocks, cols)
+    (n, rows, boxes, typedStatsOf(blocks, typedCols),
+      nullStatsOf(blocks, cols ++ typedCols.map(_._1), rows))
+  }
+
+  /** Open `file` for footer and bloom reads under `conf` (the session's
+    * Hadoop conf, or a task's copy of it) and close it after `body`.
+    * The options come from `conf`: `ParquetFileReader.open(in)` alone
+    * builds a fresh Hadoop `Configuration`, which parses
+    * `core-default.xml` again on every open.
+    */
+  private def withFooterReader[T](file: String,
+      conf: org.apache.hadoop.conf.Configuration)(
+      body: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    try body(reader) finally reader.close()
+  }
+
+  /** One file's row-group metadata: its footer, read once. */
+  private def footerBlocks(file: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
+    import scala.jdk.CollectionConverters._
+    withFooterReader(file, conf)(_.getFooter.getBlocks.asScala.toSeq)
   }
 
   /** One file's per-column null counts from its footer (see
     * [[footerStatsTyped]] for the -1 / absent-column contract).
     */
-  private def nullStatsOf(file: String,
-      conf: org.apache.hadoop.conf.Configuration,
+  private def nullStatsOf(
+      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String], fileRows: Long): Seq[Long] = {
     import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      cols.map { c =>
-        val chunks = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == c)
-        if (chunks.isEmpty) fileRows // absent column: null-filled
-        else {
-          val ns = chunks.map(_.getStatistics).map(s =>
-            if (s == null || !s.isNumNullsSet) -1L else s.getNumNulls)
-          if (ns.exists(_ < 0)) -1L else ns.sum
-        }
+    cols.map { c =>
+      val chunks = blocks.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == c)
+      if (chunks.isEmpty) fileRows // absent column: null-filled
+      else {
+        val ns = chunks.map(_.getStatistics).map(s =>
+          if (s == null || !s.isNumNullsSet) -1L else s.getNumNulls)
+        if (ns.exists(_ < 0)) -1L else ns.sum
       }
-    } finally reader.close()
+    }
   }
 
   /** One file's encoded typed bounds from its footer. */
-  private def typedStatsOf(file: String,
-      conf: org.apache.hadoop.conf.Configuration,
+  private def typedStatsOf(
+      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       typedCols: Seq[(String, Char)])
       : Seq[(Option[String], Option[String])] = {
     import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      typedCols.map { case (c, kind) =>
-        val stats = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == c)
-          .map(_.getStatistics)
-        if (stats.isEmpty || stats.exists(s =>
-            s == null || s.isEmpty || !s.hasNonNullValue)) (None, None)
-        else kind match {
-          case 's' =>
-            val bs = stats.collect {
-              case b: org.apache.parquet.column.statistics.BinaryStatistics =>
-                (b.genericGetMin.getBytes, b.genericGetMax.getBytes)
+    typedCols.map { case (c, kind) =>
+      val stats = blocks.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == c)
+        .map(_.getStatistics)
+      if (stats.isEmpty || stats.exists(s =>
+          s == null || s.isEmpty || !s.hasNonNullValue)) (None, None)
+      else kind match {
+        case 's' =>
+          val bs = stats.collect {
+            case b: org.apache.parquet.column.statistics.BinaryStatistics =>
+              (b.genericGetMin.getBytes, b.genericGetMax.getBytes)
+          }
+          if (bs.size != stats.size) (None, None)
+          else {
+            val mn = bs.map(_._1).reduce((a, b) =>
+              if (bytesCompare(a, b) <= 0) a else b)
+            val mx = bs.map(_._2).reduce((a, b) =>
+              if (bytesCompare(a, b) >= 0) a else b)
+            (Some(hexEnc(truncMin(mn))), truncMax(mx).map(hexEnc))
+          }
+        case _ => // 'l' and 'd': int32/int64 physical
+          val ls = stats.collect {
+            case l: org.apache.parquet.column.statistics.LongStatistics =>
+              (l.getMin, l.getMax)
+            case i: org.apache.parquet.column.statistics.IntStatistics =>
+              (i.getMin.toLong, i.getMax.toLong)
+          }
+          // TIMESTAMP unit normalization: probe literals are MICROS
+          // (Spark's internal timestamp), but the footer stats are in
+          // whatever unit the file was written with — under
+          // outputTimestampType=TIMESTAMP_MILLIS the LongStatistics
+          // are millis, and comparing them against micro literals
+          // would wrongly prune files that hold matching rows (row
+          // loss through deleteWhere's candidate test). Read the
+          // column's logical-type unit and normalize: MILLIS scale
+          // exactly by 1000 (stored values are whole millis, so the
+          // converted bounds stay exact); NANOS or a mixed/unknown
+          // unit yields no proof. Non-timestamp 'l'/'d' columns
+          // (dates, ints, decimals) carry no timestamp annotation
+          // and pass through unscaled.
+          val chunks = blocks.flatMap(_.getColumns.asScala)
+            .filter(_.getPath.toDotString == c)
+          val factor: Option[Long] = {
+            import org.apache.parquet.schema.LogicalTypeAnnotation
+            val units = chunks.map(
+              _.getPrimitiveType.getLogicalTypeAnnotation match {
+                case t: LogicalTypeAnnotation
+                    .TimestampLogicalTypeAnnotation => Some(t.getUnit)
+                case _ => None
+              })
+            if (units.forall(_.isEmpty)) Some(1L) // not a timestamp
+            else if (units.exists(_.isEmpty)) None // mixed: no proof
+            else units.head.get match {
+              case LogicalTypeAnnotation.TimeUnit.MICROS => Some(1L)
+              case LogicalTypeAnnotation.TimeUnit.MILLIS => Some(1000L)
+              case _ => None // NANOS etc.: not expressible exactly
             }
-            if (bs.size != stats.size) (None, None)
-            else {
-              val mn = bs.map(_._1).reduce((a, b) =>
-                if (bytesCompare(a, b) <= 0) a else b)
-              val mx = bs.map(_._2).reduce((a, b) =>
-                if (bytesCompare(a, b) >= 0) a else b)
-              (Some(hexEnc(truncMin(mn))), truncMax(mx).map(hexEnc))
-            }
-          case _ => // 'l' and 'd': int32/int64 physical
-            val ls = stats.collect {
-              case l: org.apache.parquet.column.statistics.LongStatistics =>
-                (l.getMin, l.getMax)
-              case i: org.apache.parquet.column.statistics.IntStatistics =>
-                (i.getMin.toLong, i.getMax.toLong)
-            }
-            // TIMESTAMP unit normalization: probe literals are MICROS
-            // (Spark's internal timestamp), but the footer stats are in
-            // whatever unit the file was written with — under
-            // outputTimestampType=TIMESTAMP_MILLIS the LongStatistics
-            // are millis, and comparing them against micro literals
-            // would wrongly prune files that hold matching rows (row
-            // loss through deleteWhere's candidate test). Read the
-            // column's logical-type unit and normalize: MILLIS scale
-            // exactly by 1000 (stored values are whole millis, so the
-            // converted bounds stay exact); NANOS or a mixed/unknown
-            // unit yields no proof. Non-timestamp 'l'/'d' columns
-            // (dates, ints, decimals) carry no timestamp annotation
-            // and pass through unscaled.
-            val chunks = blocks.flatMap(_.getColumns.asScala)
-              .filter(_.getPath.toDotString == c)
-            val factor: Option[Long] = {
-              import org.apache.parquet.schema.LogicalTypeAnnotation
-              val units = chunks.map(
-                _.getPrimitiveType.getLogicalTypeAnnotation match {
-                  case t: LogicalTypeAnnotation
-                      .TimestampLogicalTypeAnnotation => Some(t.getUnit)
-                  case _ => None
-                })
-              if (units.forall(_.isEmpty)) Some(1L) // not a timestamp
-              else if (units.exists(_.isEmpty)) None // mixed: no proof
-              else units.head.get match {
-                case LogicalTypeAnnotation.TimeUnit.MICROS => Some(1L)
-                case LogicalTypeAnnotation.TimeUnit.MILLIS => Some(1000L)
-                case _ => None // NANOS etc.: not expressible exactly
-              }
-            }
-            (factor, ls.size == stats.size) match {
-              case (Some(f), true) =>
-                try (Some(math.multiplyExact(ls.map(_._1).min, f).toString),
-                  Some(math.multiplyExact(ls.map(_._2).max, f).toString))
-                catch { case _: ArithmeticException => (None, None) }
-              case _ => (None, None)
-            }
-        }
+          }
+          (factor, ls.size == stats.size) match {
+            case (Some(f), true) =>
+              try (Some(math.multiplyExact(ls.map(_._1).min, f).toString),
+                Some(math.multiplyExact(ls.map(_._2).max, f).toString))
+              catch { case _: ArithmeticException => (None, None) }
+            case _ => (None, None)
+          }
       }
-    } finally reader.close()
+    }
   }
 
   /** The box of a long column that is NULL in every row of a file:
@@ -828,34 +833,28 @@ object Layout {
     * in some row group.
     */
   private def longStatsOf(file: String,
-      conf: org.apache.hadoop.conf.Configuration,
+      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       cols: Seq[String]): (String, Long, Option[Seq[(Long, Long)]]) = {
     import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      def minMax(c: String): Option[(Long, Long)] = {
-        val stats = blocks.flatMap(_.getColumns.asScala)
-          .filter(_.getPath.toDotString == c)
-          .map(_.getStatistics)
-        if (stats.isEmpty || stats.exists(s => s == null || s.isEmpty)) None
-        else {
-          val longs = stats.collect {
-            case l: org.apache.parquet.column.statistics.LongStatistics => l
-          }
-          if (longs.size != stats.size) None
-          else Some(longs.filter(_.hasNonNullValue).foldLeft(AllNullBox) {
-            case ((lo, hi), l) => (lo min l.getMin, hi max l.getMax)
-          })
+    def minMax(c: String): Option[(Long, Long)] = {
+      val stats = blocks.flatMap(_.getColumns.asScala)
+        .filter(_.getPath.toDotString == c)
+        .map(_.getStatistics)
+      if (stats.isEmpty || stats.exists(s => s == null || s.isEmpty)) None
+      else {
+        val longs = stats.collect {
+          case l: org.apache.parquet.column.statistics.LongStatistics => l
         }
+        if (longs.size != stats.size) None
+        else Some(longs.filter(_.hasNonNullValue).foldLeft(AllNullBox) {
+          case ((lo, hi), l) => (lo min l.getMin, hi max l.getMax)
+        })
       }
-      val boxes = cols.map(minMax)
-      (new org.apache.hadoop.fs.Path(file).getName,
-        blocks.map(_.getRowCount).sum,
-        if (boxes.exists(_.isEmpty)) None else Some(boxes.map(_.get)))
-    } finally reader.close()
+    }
+    val boxes = cols.map(minMax)
+    (new org.apache.hadoop.fs.Path(file).getName,
+      blocks.map(_.getRowCount).sum,
+      if (boxes.exists(_.isEmpty)) None else Some(boxes.map(_.get)))
   }
 
   /** Write the footprint manifest for every top-level parquet file in

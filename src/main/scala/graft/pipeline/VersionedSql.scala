@@ -622,8 +622,9 @@ case class VersionedUpdateCommand(name: String,
         d.withColumn(c, d.schema.fields.find(_.name.equalsIgnoreCase(c))
           .map(f => e.cast(f.dataType)).getOrElse(e))
       }
-      if (updated.isEmpty) Some((v0, 0L))
-      else VersionedTable.upsertByKeyPinned(spark, reg.root, updated,
+      // no match: the upsert resolves an empty key set and returns
+      // (v0, 0) without publishing
+      VersionedTable.upsertByKeyPinned(spark, reg.root, updated,
         reg.keyCols, v0)
     }
     VersionedSql.refreshView(spark, name)

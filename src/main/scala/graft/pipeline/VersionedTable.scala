@@ -2313,10 +2313,16 @@ object VersionedTable {
     * [[KeyBloomMaxKeys]]) letting a [[pointRead]] on the key column
     * skip the marker when its probed value provably isn't deleted.
     * Candidate files resolve through the same two-level stats pruning
-    * as [[upsertByKey]] (sparse per-key refinement under
-    * [[SparseKeyProbeLimit]], the global [min,max] box above);
-    * `matched` is counted against the then-visible snapshot, so
-    * [[fastCount]] stays exact under overlapping box and key markers.
+    * as [[upsertByKey]]; `matched` is counted against the then-visible
+    * snapshot, so [[fastCount]] stays exact under overlapping box and
+    * key markers. The keys resolve once per call ([[resolveKeys]]). Up
+    * to [[SparseKeyProbeLimit]] keys, one bounded collect is the only
+    * job spent on them: files are probed per key, the matched count
+    * filters the candidates with an IN-list, and the inline keys and
+    * the marker bloom come from the collected array. Above it, one
+    * [[countAndBounds]] job sizes the distinct key frame, files are
+    * tested against its global [min,max] box, the matched count
+    * semi-joins the frame, and the sidecar and bloom read it.
     * Everything else (file scoping, the [[MaxMorDeletes]] cap with
     * auto-materialization, CDC emission, optimistic restarts) behaves
     * exactly like [[deleteRangeMor]]. Returns (version, rows
@@ -2335,19 +2341,14 @@ object VersionedTable {
       s"deleteKeysMor: the key frame must be LongType (probing a long " +
         s"stat column) or StringType (probing a string typed column); " +
         s"got $kt")
-    val kf = keys.na.drop()
-      .select(col(keys.columns.head).as("k")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ks = resolveKeys(keys.toDF(keyCol), "deleteKeysMor")
     try withRestarts("deleteKeysMor", root)(
-      morKeyDeleteOnce(spark, root, keyCol, kf))
-    finally {
-      kf.unpersist()
-      ()
-    }
+      morKeyDeleteOnce(spark, root, keyCol, ks))
+    finally ks.release()
   }
 
   private def morKeyDeleteOnce(spark: SparkSession, root: String,
-      keyCol: String, kf: DataFrame): Option[(Long, Long)] = {
+      keyCol: String, keys: KeySet): Option[(Long, Long)] = {
     val (v0, m0) = latestManifest(spark, root).getOrElse(
       sys.error(s"no versions at $root"))
     if (m0.morDeletes.size >= MaxMorDeletes) {
@@ -2358,7 +2359,7 @@ object VersionedTable {
     // the frame's type must match the key's storage class — a long
     // frame probing a string column (or vice versa) is a caller bug,
     // not a silent no-match
-    val ft = kf.schema.fields.head.dataType
+    val ft = keys.schema.fields.head.dataType
     ki match {
       case Left(_) => require(ft == org.apache.spark.sql.types.LongType,
         s"deleteKeysMor: '$keyCol' is a long stat column but the key " +
@@ -2367,42 +2368,45 @@ object VersionedTable {
         s"deleteKeysMor: '$keyCol' is a string typed column but the " +
           s"key frame is $ft")
     }
-    val (n, bounds, _) = countAndBounds(kf, Seq("k"), "deleteKeysMor")
+    val n = keys.total
     if (n == 0L) return Some((v0, 0L))
-    // sparse-key refinement, as in upsertByKey: few keys test files
-    // against the actual values, not one global box; string keys test
-    // against the typed truncated bounds
+    // string keys test against the typed truncated bounds
     val (touched, candShards) = prune(m0, keyedCandidateTest(m0,
-      Seq(keyCol), kf.select(col("k").as(keyCol)), n, "deleteKeysMor",
-      bounds))
+      Seq(keyCol), keys, "deleteKeysMor"))
     if (touched.isEmpty) return Some((v0, 0L))
     val files = touched.map(_.name).toSet
     // exact VISIBLE matched count (existing markers applied) — what
-    // keeps fastCount's subtraction exact under overlapping markers
-    val probeFrame =
-      if (n <= SparseKeyProbeLimit) broadcast(kf.select(col("k").as(keyCol)))
-      else kf.select(col("k").as(keyCol))
-    val matched = readVisible(spark, root, m0, touched.map(_.name))
-      .join(probeFrame, Seq(keyCol), "left_semi").count()
+    // keeps fastCount's subtraction exact under overlapping markers.
+    // The coalesce keeps the IN-list out of the parquet scan: pushed
+    // down, it makes the reader load every candidate row group's key
+    // bloom, on small files more bytes than the scan itself
+    val visible = readVisible(spark, root, m0, touched.map(_.name))
+    val matched = (keys match {
+      case l: LocalKeys => visible.filter(
+        coalesce(col(keyCol).isin(l.column(0): _*), lit(false)))
+      case d: DenseKeys => visible.join(d.keyFrame, Seq(keyCol), "left_semi")
+    }).count()
     if (matched == 0L) return Some((v0, 0L))
-    val (inline, inlineTyped, sidecar) = ki match {
-      case Left(_) if n <= InlineKeyCap =>
-        (kf.collect().map(_.getLong(0)).sorted.toSeq,
+    val (inline, inlineTyped, sidecar) = (ki, keys) match {
+      case (Left(_), l: LocalKeys) if n <= InlineKeyCap =>
+        (l.column(0).map(_.asInstanceOf[Long]).sorted,
           Seq.empty[String], None)
-      case Right(_) if n <= InlineKeyCap =>
+      case (Right(_), l: LocalKeys) if n <= InlineKeyCap =>
         (Seq.empty[Long],
-          kf.collect().map(r => encodeStrKey(r.getString(0))).sorted.toSeq,
+          l.column(0).map(k => encodeStrKey(k.asInstanceOf[String])).sorted,
           None)
       case _ =>
         (Seq.empty[Long], Seq.empty[String],
-          Some(writeKeySidecar(spark, root, kf)))
+          Some(writeKeySidecar(spark, root, keys.frame(spark))))
     }
     // the footer-bloom marker skip serves LONG point reads only —
     // string point probes go through the FileIndex, which never needs
     // the marker bloom
-    val bloom = ki match {
-      case Left(_) if n <= KeyBloomMaxKeys =>
-        buildKeyBloom(kf.collect().map(_.getLong(0)).toSeq)
+    val bloom = (ki, keys) match {
+      case (Left(_), l: LocalKeys) =>
+        buildKeyBloom(l.column(0).map(_.asInstanceOf[Long]))
+      case (Left(_), d: DenseKeys) if n <= KeyBloomMaxKeys =>
+        buildKeyBloom(d.keyFrame.collect().map(_.getLong(0)).toSeq)
       case _ => ""
     }
     val kind = ki match { case Left(_) => 'L'; case Right(_) => 's' }
@@ -2427,7 +2431,7 @@ object VersionedTable {
     val fs = fsFor(spark, root)
     val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
     val stage = s"$root/.stage-key-$uuid"
-    kf.select(col("k")).coalesce(1).write.mode("overwrite").parquet(stage)
+    kf.toDF("k").coalesce(1).write.mode("overwrite").parquet(stage)
     val part = fs.listStatus(new Path(stage)).toSeq
       .find(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .getOrElse(sys.error(s"key sidecar write produced no part: $stage"))
@@ -2616,13 +2620,13 @@ object VersionedTable {
     deleteCore(spark, root, v0, m0, ps.mayHold, expr(predicateSql))
   }
 
-  /** When the update key set is small, the per-file candidate test a
-    * sparse-but-wide upsert uses: the update keys are collected (at
-    * most this many tuples) and a file is a candidate only if SOME key
-    * tuple lies inside its per-column boxes — two keys at the extremes
-    * of the id space then rewrite two files, not the whole table the
-    * single global bounding box would cover. The same test prunes
-    * SHARDS via their aggregate boxes first.
+  /** The most key tuples a keyed commit collects to the driver
+    * ([[LocalKeys]]). Such a key set costs one bounded job, and a file
+    * is a candidate only if SOME key tuple lies inside its per-column
+    * boxes — two keys at the extremes of the id space then rewrite two
+    * files, not the whole table the single global bounding box would
+    * cover. The same test prunes SHARDS via their aggregate boxes
+    * first. A larger key set stays a frame ([[DenseKeys]]).
     */
   val SparseKeyProbeLimit: Long = 4096L
 
@@ -2660,20 +2664,96 @@ object VersionedTable {
   private def encodeStrKey(s: String): String =
     Layout.hexEnc(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
+  /** A keyed commit's key set, resolved once per call and shared by
+    * every attempt: the distinct, NULL-free key tuples, aligned with
+    * the commit's key columns. [[LocalKeys]] holds them on the driver
+    * when they number at most [[SparseKeyProbeLimit]]; [[DenseKeys]]
+    * holds the distinct key frame with its count and per-column
+    * [min, max] from one [[countAndBounds]] job.
+    */
+  private sealed trait KeySet {
+    def total: Long
+    def schema: org.apache.spark.sql.types.StructType
+    /** The key tuples as a frame (a local relation for [[LocalKeys]]). */
+    def frame(spark: SparkSession): DataFrame
+    def release(): Unit = ()
+  }
+
+  private final case class LocalKeys(tuples: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType) extends KeySet {
+    def total: Long = tuples.size.toLong
+    def column(p: Int): Seq[Any] = tuples.map(_.get(p))
+    def frame(spark: SparkSession): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(tuples.asJava, schema)
+    }
+  }
+
+  private final case class DenseKeys(keyFrame: DataFrame, total: Long,
+      bounds: Seq[(Any, Any)]) extends KeySet {
+    def schema: org.apache.spark.sql.types.StructType = keyFrame.schema
+    def frame(spark: SparkSession): DataFrame = keyFrame
+    override def release(): Unit = { keyFrame.unpersist(); () }
+  }
+
+  /** `frame`'s `cols` as rows, or None when it has more than
+    * [[SparseKeyProbeLimit]] rows. ONE job: each task returns its rows,
+    * or None as soon as its partition alone passes the limit, so a
+    * large frame ships no rows. (`limit(n).collect()` would scan the
+    * partitions in growing rounds, one job per round.)
+    */
+  private def boundedRows(frame: DataFrame, cols: Seq[String])
+      : Option[Array[org.apache.spark.sql.Row]] = {
+    val limit = SparseKeyProbeLimit.toInt
+    val parts = frame.select(cols.map(col): _*).rdd
+      .mapPartitions { it =>
+        val rows = it.take(limit + 1).toArray
+        Iterator.single(Option.when(rows.length <= limit)(rows))
+      }.collect()
+    Option.when(parts.forall(_.nonEmpty))(parts.flatMap(_.get))
+      .filter(_.length <= limit)
+  }
+
+  /** The key set of a delete or change batch: `keys`' columns are the
+    * key columns, NULL tuples are dropped and duplicates collapse. Up
+    * to [[SparseKeyProbeLimit]] rows, the [[boundedRows]] job is the
+    * only one. More rows run the dense tier: the distinct key frame is
+    * pinned and sized by one [[countAndBounds]] job, and collected
+    * after all when it holds at most the limit.
+    */
+  private def resolveKeys(keys: DataFrame, what: String): KeySet = {
+    val present = keys.na.drop()
+    boundedRows(present, keys.columns.toSeq) match {
+      case Some(rows) => LocalKeys(rows.toSeq.distinct, present.schema)
+      case None =>
+        val kf = present.distinct()
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val (n, bounds, _) = countAndBounds(kf, keys.columns.toSeq, what)
+          if (n > SparseKeyProbeLimit) DenseKeys(kf, n, bounds)
+          else {
+            val local = LocalKeys(kf.collect().toSeq, present.schema)
+            kf.unpersist()
+            local
+          }
+        } catch {
+          case e: Throwable => kf.unpersist(); throw e
+        }
+    }
+  }
+
   /** The "may hold one of the keys" bounds test for keyed DML, over
-    * MIXED long and string key columns. A sparse key set (≤
-    * [[SparseKeyProbeLimit]] tuples) is one point probe per tuple, built
-    * once — two keys at the extremes of the key space touch two files,
-    * not the global-box span; a larger set is ONE box probe over
-    * `bounds`, each key column's [min, max] from the caller's
-    * [[countAndBounds]] job. String keys test against the manifest's
-    * TRUNCATED bounds (prefix min ≤ every value, increment-truncated
-    * max ≥), so candidacy only widens, never misses. `keyFrame`'s
-    * columns must be NULL-free and positionally aligned with `keyCols`.
+    * MIXED long and string key columns. A [[LocalKeys]] set is one
+    * point probe per tuple, built once — two keys at the extremes of
+    * the key space touch two files, not the global-box span; a
+    * [[DenseKeys]] set is ONE box probe over each key column's
+    * [min, max]. String keys test against the manifest's TRUNCATED
+    * bounds (prefix min ≤ every value, increment-truncated max ≥), so
+    * candidacy only widens, never misses. The key set's columns are
+    * positionally aligned with `keyCols`.
     */
   private def keyedCandidateTest(m: Manifest, keyCols: Seq[String],
-      keyFrame: DataFrame, total: Long, what: String,
-      bounds: Seq[(Any, Any)]): Bounds => Boolean = {
+      keys: KeySet, what: String): Bounds => Boolean = {
     val idx = keyCols.map(c => keyIndex(m, c, what))
     def probe(lohi: Seq[(Any, Any)]): Probes = {
       val (longs, strs) = idx.zip(lohi).partitionMap {
@@ -2685,20 +2765,22 @@ object VersionedTable {
       }
       Probes(boxes = longs, tranges = strs)
     }
-    val probes =
-      if (total <= SparseKeyProbeLimit)
-        keyFrame.collect().toSeq.map(row =>
-          probe(idx.indices.map(p => (row.get(p), row.get(p)))))
-      else Seq(probe(bounds))
+    val probes = keys match {
+      case l: LocalKeys => l.tuples.map(row =>
+        probe(idx.indices.map(p => (row.get(p), row.get(p)))))
+      case d: DenseKeys => Seq(probe(d.bounds))
+    }
     b => probes.exists(_.mayHold(b))
   }
 
   /** ONE job over `frame`: its row count and each of `cols`' [min, max]
-    * (the dense bounds of [[keyedCandidateTest]]), with the caller's
-    * `extra` aggregates riding the same pass — their values start at
-    * index 1 + 2 × cols.size of the returned row. A non-empty frame
-    * must bound every column: the dense test compares the bounds as
-    * Longs, where a NULL would silently unbox to 0.
+    * (the bounds of a [[DenseKeys]] set), with the caller's `extra`
+    * aggregates riding the same pass — their values start at index
+    * 1 + 2 × cols.size of the returned row. Only the dense tier runs
+    * it; a key set within [[SparseKeyProbeLimit]] is counted on the
+    * driver. A non-empty frame must bound every column: the dense test
+    * compares the bounds as Longs, where a NULL would silently unbox
+    * to 0.
     */
   private def countAndBounds(frame: DataFrame, cols: Seq[String],
       what: String, extra: Seq[Column] = Seq.empty)
@@ -2710,42 +2792,71 @@ object VersionedTable {
     val bounds = cols.indices.map(p => (r.get(1 + 2 * p), r.get(2 + 2 * p)))
     cols.zip(bounds).foreach { case (c, (lo, hi)) =>
       require(total == 0L || (lo != null && hi != null),
-        s"$what: every one of $total rows carries a NULL key '$c' — " +
-          "a NULL key can neither match nor be matched")
+        allNullKeyMessage(what, total, c))
     }
     (total, bounds, r)
   }
 
-  /** The upsert's validation, fused into the [[countAndBounds]] job
-    * that also yields the engine's key count and dense bounds (keys
-    * are unique per update row once validated, so the updates' bounds
-    * ARE the key frame's). count(col) vs count(*) proves NO NULL keys:
-    * NULL = NULL never joins, so a NULL-key update row would neither
-    * replace nor be replaceable — it would duplicate on every repeated
-    * upsert. countDistinct over the key tuple proves KEY-UNIQUENESS:
-    * two update rows with one key would both land.
+  private def allNullKeyMessage(what: String, total: Long,
+      c: String): String =
+    s"$what: every one of $total rows carries a NULL key '$c' — " +
+      "a NULL key can neither match nor be matched"
+
+  private def nullKeyMessage(nulls: Long, c: String): String =
+    s"upsertByKey: $nulls update rows " +
+      s"carry a NULL key '$c' — NULL keys can neither replace " +
+      "nor be replaced and would duplicate on every upsert"
+
+  private def duplicateKeyMessage(dups: Long, keyCols: Seq[String]): String =
+    s"upsertByKey: $dups duplicate-key update rows " +
+      s"over ${keyCols.mkString("(", ", ", ")")} — both copies would " +
+      "land as an atomically committed corruption; de-duplicate the " +
+      "updates first"
+
+  /** The upsert's key set, validated: no NULL keys (NULL = NULL never
+    * joins, so a NULL-key update row would neither replace nor be
+    * replaceable — it would duplicate on every repeated upsert) and
+    * KEY-UNIQUENESS (two update rows with one key would both land).
+    * Keys are then unique per update row, so the updates' keys ARE the
+    * key set. Up to [[SparseKeyProbeLimit]] update rows, the checks run
+    * on the driver over the [[boundedRows]] array; an empty array is an
+    * empty key set, which the callers refuse or skip. Above it they
+    * fuse into the dense tier's [[countAndBounds]] job: count(col) vs
+    * count(*) per key column, and countDistinct over the key tuple.
+    * The checks run in the same order, with the same messages, on
+    * both tiers.
     */
   private def validatedUpsertKeys(updates: DataFrame,
-      keyCols: Seq[String]): (Long, Seq[(Any, Any)]) = {
-    val (total, bounds, r) = countAndBounds(updates, keyCols, "upsertByKey",
-      countDistinct(col(keyCols.head), keyCols.tail.map(col): _*) +:
-        keyCols.map(c => count(col(c))))
-    val at = 1 + 2 * keyCols.size
-    require(total > 0, "upsertByKey: empty updates")
-    keyCols.zipWithIndex.foreach { case (c, i) =>
-      val nonNull = r.getLong(at + 1 + i)
-      require(nonNull == total,
-        s"upsertByKey: ${total - nonNull} update rows " +
-          s"carry a NULL key '$c' — NULL keys can neither replace " +
-          "nor be replaced and would duplicate on every upsert")
-    }
-    val distinctKeys = r.getLong(at)
-    require(distinctKeys == total,
-      s"upsertByKey: ${total - distinctKeys} duplicate-key update rows " +
-        s"over ${keyCols.mkString("(", ", ", ")")} — both copies would " +
-        "land as an atomically committed corruption; de-duplicate the " +
-        "updates first")
-    (total, bounds)
+      keyCols: Seq[String]): KeySet = boundedRows(updates, keyCols) match {
+    case Some(rows) =>
+      val total = rows.length.toLong
+      keyCols.indices.foreach { p =>
+        require(total == 0L || rows.exists(!_.isNullAt(p)),
+          allNullKeyMessage("upsertByKey", total, keyCols(p)))
+      }
+      keyCols.indices.foreach { p =>
+        val nulls = rows.count(_.isNullAt(p))
+        require(nulls == 0, nullKeyMessage(nulls, keyCols(p)))
+      }
+      val tuples = rows.toSeq.distinct
+      require(tuples.size == total,
+        duplicateKeyMessage(total - tuples.size, keyCols))
+      LocalKeys(tuples, updates.select(keyCols.map(col): _*).schema)
+    case None =>
+      val (total, bounds, r) = countAndBounds(updates, keyCols,
+        "upsertByKey",
+        countDistinct(col(keyCols.head), keyCols.tail.map(col): _*) +:
+          keyCols.map(c => count(col(c))))
+      val at = 1 + 2 * keyCols.size
+      keyCols.zipWithIndex.foreach { case (c, i) =>
+        val nonNull = r.getLong(at + 1 + i)
+        require(nonNull == total, nullKeyMessage(total - nonNull, c))
+      }
+      val distinctKeys = r.getLong(at)
+      require(distinctKeys == total,
+        duplicateKeyMessage(total - distinctKeys, keyCols))
+      DenseKeys(updates.select(keyCols.map(col): _*).distinct(), total,
+        bounds)
   }
 
   /** Keyed UPSERT (the MERGE INTO shape) as ONE atomic version: rows
@@ -2775,21 +2886,21 @@ object VersionedTable {
   def upsertByKey(spark: SparkSession, root: String, updates: DataFrame,
       keyCols: Seq[String]): (Long, Long) = {
     require(keyCols.nonEmpty, "upsertByKey needs at least one key column")
-    // updates is consumed by several actions (the validation agg, then
-    // per attempt the key-frame broadcast and the aligned write) — a
-    // derived MERGE source would re-execute its whole lineage each
-    // time unpinned
+    // updates is consumed by several actions (the key collect or the
+    // validation agg, then per attempt the aligned write) — a derived
+    // MERGE source would re-execute its whole lineage each time
+    // unpinned
     val pinned = updates.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val keyStats = validatedUpsertKeys(pinned, keyCols)
-      val keyFrame = pinned.select(keyCols.map(col): _*).distinct()
+      val keys = validatedUpsertKeys(pinned, keyCols)
+      require(keys.total > 0L, "upsertByKey: empty updates")
       withRestarts("upsertByKey", root) {
         // same rule as deleteRange: COW rewrites must not resurrect
         // rows a mor-delete marker logically removed
         materializeDeletes(spark, root)
-        keyedChangesOnce(spark, root, pinned, keyFrame, keyCols, None, None,
-          "upsertByKey", Some(keyStats)).map { case (v, _, n) => (v, n) }
+        keyedChangesOnce(spark, root, pinned, keys, keyCols, None, None,
+          "upsertByKey").map { case (v, _, n) => (v, n) }
       }
     } finally {
       pinned.unpersist()
@@ -2809,8 +2920,10 @@ object VersionedTable {
     * again — returns None, and the CALLER recomputes from a fresh
     * read (retrying internally would re-commit the stale rows: the
     * lost-update bug this method exists to close). Returns
-    * Some((version, replaced)) on publish, None on conflict or when
-    * mor-delete markers exist at the base (materialize first).
+    * Some((version, replaced)) on publish, Some((baseV, 0)) without
+    * publishing when `updates` is empty (an UPDATE that matched
+    * nothing), None on conflict or when mor-delete markers exist at
+    * the base (materialize first).
     */
   private[pipeline] def upsertByKeyPinned(spark: SparkSession,
       root: String, updates: DataFrame, keyCols: Seq[String],
@@ -2818,11 +2931,10 @@ object VersionedTable {
     val pinned = updates.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val keyStats = validatedUpsertKeys(pinned, keyCols)
-      keyedChangesOnce(spark, root, pinned,
-        pinned.select(keyCols.map(col): _*).distinct(), keyCols, None,
-        Some(baseV), "upsertByKey", Some(keyStats))
-        .map { case (v, _, n) => (v, n) }
+      val keys = validatedUpsertKeys(pinned, keyCols)
+      if (keys.total == 0L) Some((baseV, 0L))
+      else keyedChangesOnce(spark, root, pinned, keys, keyCols, None,
+        Some(baseV), "upsertByKey").map { case (v, _, n) => (v, n) }
     } finally {
       pinned.unpersist()
       ()
@@ -2875,19 +2987,30 @@ object VersionedTable {
           "it first with an append declaring them as typed stat columns")
       return appendBatchDetailed(upserts, root, keyCols, sourceVersion)
     }
-    val keyFrame = deleteKeys.toDF(keyCols: _*)
-      .unionByName(upserts.select(keyCols.map(col): _*))
-      .na.drop().distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pinnedUpserts = upserts.persist(
+    withChangeKeys(upserts, deleteKeys, keyCols) { (pinnedUpserts, keys) =>
+      withRestarts("applyCdcBatch", root) {
+        materializeDeletes(spark, root)
+        keyedChangesOnce(spark, root, pinnedUpserts, keys, keyCols,
+          Some(sourceVersion), None, "applyCdcBatch")
+          .map { case (v, applied, _) => (v, applied) }
+      }
+    }
+  }
+
+  /** Pin `upserts` and resolve the batch's key set — the upsert keys
+    * plus `deleteKeys` ([[resolveKeys]]) — once for `body`, releasing
+    * both after it.
+    */
+  private def withChangeKeys[T](upserts: DataFrame, deleteKeys: DataFrame,
+      keyCols: Seq[String])(body: (DataFrame, KeySet) => T): T = {
+    val pinned = upserts.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try withRestarts("applyCdcBatch", root) {
-      materializeDeletes(spark, root)
-      keyedChangesOnce(spark, root, pinnedUpserts, keyFrame, keyCols,
-        Some(sourceVersion), None, "applyCdcBatch")
-        .map { case (v, applied, _) => (v, applied) }
+    try {
+      val keys = resolveKeys(deleteKeys.toDF(keyCols: _*)
+        .unionByName(pinned.select(keyCols.map(col): _*)), "applyCdcBatch")
+      try body(pinned, keys) finally keys.release()
     } finally {
-      keyFrame.unpersist(); pinnedUpserts.unpersist()
+      pinned.unpersist()
       ()
     }
   }
@@ -2907,39 +3030,33 @@ object VersionedTable {
     require(deleteKeys.columns.length == keyCols.length,
       s"deleteKeys must be one column per key: got " +
         s"${deleteKeys.columns.length} for ${keyCols.size} keys")
-    val keyFrame = deleteKeys.toDF(keyCols: _*)
-      .unionByName(upserts.select(keyCols.map(col): _*))
-      .na.drop().distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pinnedUpserts = upserts.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try keyedChangesOnce(spark, root, pinnedUpserts, keyFrame, keyCols,
-      None, Some(baseV), "applyCdcBatch").map(_._1)
-    finally {
-      keyFrame.unpersist(); pinnedUpserts.unpersist()
-      ()
+    withChangeKeys(upserts, deleteKeys, keyCols) { (pinnedUpserts, keys) =>
+      keyedChangesOnce(spark, root, pinnedUpserts, keys, keyCols, None,
+        Some(baseV), "applyCdcBatch").map(_._1)
     }
   }
 
   /** The KEYED-CHANGES engine — one optimistic attempt of
     * [[applyCdcBatch]], [[upsertByKey]] and SQL UPDATE/MERGE: `upserts`
     * replace current rows with the same key (new keys append) and
-    * every other key of `keyFrame` (NULL-free and distinct: the upsert
-    * keys plus any delete keys) loses its rows, all in ONE version
+    * every other key of `keys` (the upsert keys plus any delete keys,
+    * resolved once by the caller) loses its rows, all in ONE version
     * computed against `baseV` (default: the newest). With a
     * `frontier`, a base at or past it is a replay that changes
     * nothing, and a batch with neither keys nor upserts publishes only
-    * the frontier. `keyStats` is `keyFrame`'s (count, bounds) when the
-    * caller's own validation job already carried them; otherwise one
-    * [[countAndBounds]] job over the pinned key frame computes them.
-    * Returns Some((version, applied — false for a replay, rows
-    * replaced)); None on a true conflict or when mor-delete markers
-    * exist at the base (the caller materializes first).
+    * the frontier. A [[LocalKeys]] set costs no job here: files are
+    * probed per key, and the rewrite drops the keyed rows with an
+    * IN-list filter (one key column) or an anti-join against a local
+    * relation of the tuples (several). A [[DenseKeys]] set tests one
+    * global box and anti-joins the broadcast key frame. Either way a
+    * row whose key is NULL matches no key and survives. Returns
+    * Some((version, applied — false for a replay, rows replaced));
+    * None on a true conflict or when mor-delete markers exist at the
+    * base (the caller materializes first).
     */
   private def keyedChangesOnce(spark: SparkSession, root: String,
-      upserts: DataFrame, keyFrame: DataFrame, keyCols: Seq[String],
-      frontier: Option[Long], baseV: Option[Long], what: String,
-      keyStats: Option[(Long, Seq[(Any, Any)])] = None)
+      upserts: DataFrame, keys: KeySet, keyCols: Seq[String],
+      frontier: Option[Long], baseV: Option[Long], what: String)
       : Option[(Long, Boolean, Long)] = {
     val (v0, m) = baseV match {
       case Some(b) => (b, readManifest(spark, root, b))
@@ -2950,11 +3067,7 @@ object VersionedTable {
     if (m.morDeletes.nonEmpty) return None // wrapper materializes first
     val merged = mergedSchema(tableSchema(spark, root, Some(m)),
       upserts.schema)
-    val (total, bounds) = keyStats.getOrElse {
-      val (n, b, _) = countAndBounds(keyFrame, keyCols, what)
-      (n, b)
-    }
-    if (total == 0L && upserts.isEmpty) return frontier match {
+    if (keys.total == 0L && upserts.isEmpty) return frontier match {
       // no frontier, no changes: a MERGE that matched nothing —
       // publish nothing
       case None => Some((v0, true, 0L))
@@ -2971,15 +3084,20 @@ object VersionedTable {
           clusterSpec = m.clusterSpec))((lv + 1, true, 0L))
       })
     }
-    val mayHoldKeys = keyedCandidateTest(m, keyCols, keyFrame, total,
-      what, bounds)
+    val mayHoldKeys = keyedCandidateTest(m, keyCols, keys, what)
     val (touched, candShards) = prune(m, mayHoldKeys)
     val touchedNames = touched.map(_.name).toSet
     val rewritten =
       if (touched.isEmpty) Seq.empty
-      else writeFiles(readNamed(spark, root, m, touched.map(_.name))
-        .join(broadcast(keyFrame), keyCols, "left_anti"),
-        root, m.statCols, m.typedCols)
+      else {
+        val current = readNamed(spark, root, m, touched.map(_.name))
+        writeFiles(keys match {
+          case l: LocalKeys if keyCols.size == 1 => current.filter(
+            !coalesce(col(keyCols.head).isin(l.column(0): _*), lit(false)))
+          case _ => current.join(broadcast(keys.frame(spark)), keyCols,
+            "left_anti")
+        }, root, m.statCols, m.typedCols)
+      }
     val replaced = touched.map(_.rows).sum - rewritten.map(_.rows).sum
     // align the upserts to the evolved schema (older columns they lack
     // null-fill; readNamed serves everything under `merged`)
