@@ -4,6 +4,7 @@ import graft.queries.RelationalQueries.Q
 import graft.queries.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types._
 
 /** The composed training-data pipeline: near-dup removal + language filter
@@ -2215,38 +2216,42 @@ object CorpusCuration {
       val root = scratchDir("vt-cdc-stream")
       graft.pipeline.VersionedTable.append(ev, root,
         Seq("user_id", "ts_us", "event_id"))                       // v1
+      val sink = "graft_vt_cdc_stream_sink"
       val q = s.readStream
         .format(classOf[graft.streaming.VersionedCdcStreamProvider].getName)
         .option("root", root).load()
         .writeStream.format("memory")
-        .queryName("graft_vt_cdc_stream_sink")
+        .queryName(sink)
         .outputMode("append").start()
-      try {
-        q.processAllAvailable() // round 1: the initial load (v1)
-        val b = ev.agg(min($"user_id"), max($"user_id")).head
-        val (mn, mx) = (b.getLong(0), b.getLong(1))
-        val (lo, hi) =
-          (mn + (mx - mn) * 25 / 100, mn + (mx - mn) * 75 / 100)
-        graft.pipeline.VersionedTable.deleteRange(s, root,
-          Seq(("user_id", lo, hi)))                                // v2
-        val updates = ev.filter(pmod($"event_id", lit(7L)) === 0)
-          .withColumn("user_id", $"user_id" + 1000000L)
-        graft.pipeline.VersionedTable.upsertByKey(s, root, updates,
-          Seq("event_id"))                                         // v3
-        graft.pipeline.VersionedTable.compactZorder(s, root, 8)    // v4
-        q.processAllAvailable() // round 2: the DML versions
-      } finally q.stop()
-      // rebase the memory sink onto a fresh plan: MemoryPlan is not
-      // multi-instantiable, so the self-referencing exceptAll fold
-      // below cannot deduplicate its attributes otherwise
-      val sunk = s.table("graft_vt_cdc_stream_sink")
       // cached WITHIN this one evaluation: the fold's per-version
       // filters and the final aggregate reference the feed ~9 times,
       // and each uncached reference pays the memory-sink row
       // conversion again (guide §5 caching — reused and expensive).
       // localCheckpoint keeps its blocks on executors only: losing an
-      // executor fails this evaluation instead of recomputing the feed
-      val feed = s.createDataFrame(sunk.rdd, sunk.schema).localCheckpoint()
+      // executor fails this evaluation instead of recomputing the feed.
+      // The sink view and its rows are dropped once checkpointed.
+      val feed = try {
+        try {
+          q.processAllAvailable() // round 1: the initial load (v1)
+          val b = ev.agg(min($"user_id"), max($"user_id")).head
+          val (mn, mx) = (b.getLong(0), b.getLong(1))
+          val (lo, hi) =
+            (mn + (mx - mn) * 25 / 100, mn + (mx - mn) * 75 / 100)
+          graft.pipeline.VersionedTable.deleteRange(s, root,
+            Seq(("user_id", lo, hi)))                              // v2
+          val updates = ev.filter(pmod($"event_id", lit(7L)) === 0)
+            .withColumn("user_id", $"user_id" + 1000000L)
+          graft.pipeline.VersionedTable.upsertByKey(s, root, updates,
+            Seq("event_id"))                                       // v3
+          graft.pipeline.VersionedTable.compactZorder(s, root, 8)  // v4
+          q.processAllAvailable() // round 2: the DML versions
+        } finally q.stop()
+        // rebase the memory sink onto a fresh plan: MemoryPlan is not
+        // multi-instantiable, so the self-referencing exceptAll fold
+        // below cannot deduplicate its attributes otherwise
+        val sunk = s.table(sink)
+        s.createDataFrame(sunk.rdd, sunk.schema).localCheckpoint()
+      } finally s.catalog.dropTempView(sink)
       // replay the streamed feed from empty; the mirror must equal
       // read() as multisets BEFORE anything is emitted
       val data = Seq($"event_id", $"user_id", $"ts_us")
@@ -2326,18 +2331,16 @@ object CorpusCuration {
       val root = scratchDir("vt-cluster")
       // AQE's small-partition coalescing would fold a tiny test-scale
       // append into one file and hide the layout observable; the
-      // cluster shape itself is what's under test
-      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-      val prev = s.conf.get(coalesceKey)
-      try {
-        s.conf.set(coalesceKey, "false")
-        (0 until 3).foreach { k =>
-          graft.pipeline.VersionedTable.append(
-            ev.filter(pmod($"event_id", lit(3L)) === k), root,
-            Seq("user_id", "ts_us", "event_id"), Seq.empty,
-            Seq("identity(user_id)"))
-        }
-      } finally s.conf.set(coalesceKey, prev)
+      // cluster shape itself is what's under test, so the appends run
+      // on a clone of the session with coalescing off
+      val noCoalesce = DatasetBridge.cloneSession(s,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      (0 until 3).foreach { k =>
+        graft.pipeline.VersionedTable.append(DatasetBridge.ofRows(noCoalesce,
+            ev.filter(pmod($"event_id", lit(3L)) === k).queryExecution.analyzed),
+          root, Seq("user_id", "ts_us", "event_id"), Seq.empty,
+          Seq("identity(user_id)"))
+      }
       val b = ev.agg(min($"user_id"), max($"user_id")).head
       val (mn, mx) = (b.getLong(0), b.getLong(1))
       val (lo, hi) = (mn + (mx - mn) * 25 / 100, mn + (mx - mn) * 75 / 100)
@@ -2441,16 +2444,18 @@ object CorpusCuration {
     * band filter flows through the V1 scan bridge into the pruning
     * FileIndex. The oracle replays it declaratively — a catalog path
     * that wrote/read anything differently from the API path breaks
-    * the hash.
+    * the hash. The catalog is registered on a clone of the caller's
+    * session and the entry is built there, so the caller's conf never
+    * names it.
     */
   val vtCatalog: Q = Q(
     "pipe_vt_catalog",
-    (s, d) => {
-      import s.implicits._
+    (caller, d) => {
       val wh = scratchDir("vt-catalog-wh")
-      s.conf.set("spark.sql.catalog.graftvt",
-        "graft.pipeline.VersionedCatalog")
-      s.conf.set("spark.sql.catalog.graftvt.warehouse", wh)
+      val s = DatasetBridge.cloneSession(caller,
+        "spark.sql.catalog.graftvt" -> "graft.pipeline.VersionedCatalog",
+        "spark.sql.catalog.graftvt.warehouse" -> wh)
+      import s.implicits._
       Tables.events(s, d)
         .select($"event_id", $"user_id",
           expr(Tables.fldivExpr("ts", 1000L)).as("ts_us"))
@@ -2573,16 +2578,18 @@ object CorpusCuration {
     * oracle replays delete → keyed update → three-clause merge
     * declaratively; the three `VERSION AS OF` stages pin each
     * statement's exact committed state, so a wrong count, a lost
-    * update, or a mis-claimed merge row breaks the hash.
+    * update, or a mis-claimed merge row breaks the hash. Like
+    * `pipe_vt_catalog`, it registers its catalog on a clone of the
+    * caller's session and is built there.
     */
   val vtCatalogDml: Q = Q(
     "pipe_vt_catalog_dml",
-    (s, d) => {
-      import s.implicits._
+    (caller, d) => {
       val wh = scratchDir("vt-catalog-dml-wh")
-      s.conf.set("spark.sql.catalog.graftvtd",
-        "graft.pipeline.VersionedCatalog")
-      s.conf.set("spark.sql.catalog.graftvtd.warehouse", wh)
+      val s = DatasetBridge.cloneSession(caller,
+        "spark.sql.catalog.graftvtd" -> "graft.pipeline.VersionedCatalog",
+        "spark.sql.catalog.graftvtd.warehouse" -> wh)
+      import s.implicits._
       val src = Tables.events(s, d)
         .select($"event_id", $"user_id",
           expr(Tables.fldivExpr("ts", 1000L)).as("ts_us"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.queries.RelationalQueries.Q
 import graft.queries.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** Time-window aggregation over the event stream table — the batch form of
   * the Structured Streaming pipeline in [[graft.streaming]] (same grouping
@@ -779,6 +780,18 @@ object EventWindows {
     * outputs) pin max=1 and fail loudly if a testdata or trigger change
     * ever splits the drain; update-mode entries pin min=2 so the
     * re-emission path is actually exercised, not vacuously green.
+    * `rocksDbState` selects the RocksDB state-store provider, which the
+    * timer and typed-state APIs require.
+    *
+    * The stream runs on a clone of `s` ([[DatasetBridge.cloneSession]])
+    * that carries the drain's conf: the state-store count
+    * ([[statePartitions]]), the provider, and `nanosAsLong` for
+    * [[graft.streaming.EventStreamPipeline.readEvents]] and the split
+    * rewrite. `s` is never written, so a batch query planned on it
+    * mid-drain sees its own conf. The clone also gets `s`'s streaming
+    * listeners, so they see the drain's progress. The drained rows are
+    * shaped and checkpointed in `s`, and the sink view is dropped from
+    * the clone.
     */
   private def drainEvents(s: org.apache.spark.sql.SparkSession, d: String,
       sink: String, copies: Int, outputMode: String,
@@ -787,7 +800,8 @@ object EventWindows {
       splitParts: Int = 0,
       maxFilesPerTrigger: Option[Int] = None,
       minDataBatches: Int = 0,
-      maxDataBatches: Int = Int.MaxValue)
+      maxDataBatches: Int = Int.MaxValue,
+      rocksDbState: Boolean = false)
       : org.apache.spark.sql.DataFrame = {
     // the split branch rewrites the corpus and never consults `copies`:
     // an entry asking for both would get NO duplicate delivery while its
@@ -795,6 +809,13 @@ object EventWindows {
     require(copies == 1 || splitParts == 0,
       s"drainEvents: copies=$copies is silently ignored when " +
         s"splitParts=$splitParts > 0 — combine them explicitly if needed")
+    val provider =
+      if (rocksDbState) Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil
+    val cloned = DatasetBridge.cloneSession(s,
+      ("spark.sql.legacy.parquet.nanosAsLong" -> "true") +: provider: _*)
+    s.streams.listListeners().foreach(cloned.streams.addListener)
     val srcDir = java.nio.file.Files.createTempDirectory("graft-evs-src")
     // everything after dir creation sits inside the try: a pipeline
     // construction or start() failure must still clean up the copied
@@ -835,10 +856,9 @@ object EventWindows {
         // readEvents' footer probe understands) and round-robin rows;
         // move only the data parts into the source dir, as any real
         // multi-file arrival would look
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val tmp = java.nio.file.Files.createTempDirectory("graft-evs-split")
         try {
-          s.read.parquet(src.toString).repartition(splitParts)
+          cloned.read.parquet(src.toString).repartition(splitParts)
             .write.mode("overwrite").parquet(tmp.toString)
           val ps = java.nio.file.Files.list(tmp)
           val dataParts = try {
@@ -880,21 +900,17 @@ object EventWindows {
       // loadedProviders lock — profiled at 32 partitions the two join
       // micro-batch stages spent 147 s of task time blocked there
       // (every task's runtime ≈ the stage wall) vs 9.3 s at 8. A fresh
-      // checkpoint per entry makes the setting per-drain; the session
-      // value is restored before the finally's teardown.
+      // checkpoint per entry makes the setting per-drain; it is set on
+      // the clone only.
       val srcBytes = copied.map(java.nio.file.Files.size(_)).sum
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val stateParts =
-        statePartitions(srcBytes, s.sparkContext.defaultParallelism)
-      s.conf.set("spark.sql.shuffle.partitions", stateParts.toString)
-      try {
-        q = pipeline(graft.streaming.EventStreamPipeline
-            .readEvents(s, srcDir.toString, maxFilesPerTrigger))
-          .writeStream.outputMode(outputMode)
-          .format("memory").queryName(sink)
-          .start()
-        q.processAllAvailable()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      cloned.conf.set("spark.sql.shuffle.partitions", statePartitions(srcBytes,
+        s.sparkContext.defaultParallelism).toString)
+      q = pipeline(graft.streaming.EventStreamPipeline
+          .readEvents(cloned, srcDir.toString, maxFilesPerTrigger))
+        .writeStream.outputMode(outputMode)
+        .format("memory").queryName(sink)
+        .start()
+      q.processAllAvailable()
       if (minDataBatches > 0 || maxDataBatches < Int.MaxValue) {
         // the oracle's batching assumption must hold for REAL, not by
         // luck (round-13 ADVICE on ev_stream_running_distinct): a
@@ -911,12 +927,14 @@ object EventWindows {
               "entry's semantics depend on")
         }
       }
-      // materialize before the stream (and its state) is torn down
-      shape(s.table(sink)).localCheckpoint()
+      // materialize before the stream (and its state) is torn down, in
+      // the caller's session: the batch half plans under its conf
+      shape(DatasetBridge.ofRows(s, cloned.table(sink).queryExecution.analyzed))
+        .localCheckpoint()
     } finally {
       if (q != null) {
         q.stop()
-        s.catalog.dropTempView(sink)
+        cloned.catalog.dropTempView(sink)
       }
       copied.foreach(java.nio.file.Files.deleteIfExists(_))
       java.nio.file.Files.deleteIfExists(srcDir)
@@ -1305,31 +1323,20 @@ object EventWindows {
     * output is every session the watermark can prove closed — in SQL,
     * the batch sessions with `session_last_ms + gap <= floor(max
     * event-time in ms)` (0-second watermark delay), which is exactly
-    * what the oracle states. The RocksDB state store provider is
-    * required for the timer/typed-state APIs; it is set for the drain
-    * and restored after.
+    * what the oracle states. The drain runs on the RocksDB state store
+    * provider, which the timer/typed-state APIs require.
     */
   val streamSessionsTimers: Q = Q(
     "ev_stream_sessions_timers",
     (s, d) => {
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val saved = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        drainEvents(s, d, "graft_stream_sesst_sink", copies = 1,
-          outputMode = "append",
-          pipeline = ev => graft.streaming.EventStreamPipeline
-            .sessionizeTimers(ev).toDF(),
-          shape = _.select($"user_id", $"session_start_ms", $"n_events")
-            .orderBy($"user_id", $"session_start_ms"))
-      } finally {
-        saved match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
-      }
+      drainEvents(s, d, "graft_stream_sesst_sink", copies = 1,
+        outputMode = "append",
+        pipeline = ev => graft.streaming.EventStreamPipeline
+          .sessionizeTimers(ev).toDF(),
+        shape = _.select($"user_id", $"session_start_ms", $"n_events")
+          .orderBy($"user_id", $"session_start_ms"),
+        rocksDbState = true)
     },
     Some("""WITH e AS (
         SELECT user_id, event_id, epoch_ms(ts) AS ts_ms FROM events),
@@ -1367,28 +1374,18 @@ object EventWindows {
     "ev_stream_running_distinct",
     (s, d) => {
       import s.implicits._
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val saved = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        drainEvents(s, d, "graft_stream_rdist_sink", copies = 1,
-          outputMode = "append",
-          pipeline = ev => graft.streaming.EventStreamPipeline
-            .runningDistinct(ev).toDF(),
-          shape = _.select($"user_id", $"event_id", $"n_events",
-              $"n_distinct_types")
-            .orderBy($"user_id", $"event_id"),
-          // the (ts, event_id)-ordered oracle holds only when the whole
-          // corpus folds in ONE batch (cross-batch state is
-          // arrival-ordered) — enforced, not assumed
-          maxDataBatches = 1)
-      } finally {
-        saved match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
-      }
+      drainEvents(s, d, "graft_stream_rdist_sink", copies = 1,
+        outputMode = "append",
+        pipeline = ev => graft.streaming.EventStreamPipeline
+          .runningDistinct(ev).toDF(),
+        shape = _.select($"user_id", $"event_id", $"n_events",
+            $"n_distinct_types")
+          .orderBy($"user_id", $"event_id"),
+        // the (ts, event_id)-ordered oracle holds only when the whole
+        // corpus folds in ONE batch (cross-batch state is
+        // arrival-ordered) — enforced, not assumed
+        maxDataBatches = 1,
+        rocksDbState = true)
     },
     Some("""SELECT user_id, event_id,
         CAST(count(*) OVER w AS BIGINT) AS n_events,

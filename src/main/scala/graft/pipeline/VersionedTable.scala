@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** A SNAPSHOT-VERSIONED table — the Iceberg/Delta architecture in
   * miniature, and the design point the [[SnapshotDir]]-swapped guarded
@@ -684,6 +685,9 @@ object VersionedTable {
     * compact. The parquet job writes into a scratch dir; the part
     * files are then MOVED into `files/` under a fresh uuid prefix.
     * Nothing is visible to readers until some manifest names them.
+    * When a typed column is a TIMESTAMP and the session writes INT96,
+    * `df`'s plan is re-bound into a clone of the session that writes
+    * INT64 micros; every other write runs on `df`'s own session.
     */
   private def writeFiles(df: DataFrame, root: String,
       statCols: Seq[String], typed: Seq[TypedCol] = Seq.empty,
@@ -692,26 +696,31 @@ object VersionedTable {
     val fs = fsFor(spark, root)
     val uuid = java.util.UUID.randomUUID().toString.replace("-", "")
     val stage = s"$root/.stage-$uuid"
+    // Spark still DEFAULTS to INT96 timestamps, which carry NO usable
+    // parquet statistics — a timestamp typed column would silently
+    // never prune, so such a write runs on a clone that writes INT64
+    // micros (what Iceberg always writes). Readers handle both physical
+    // forms transparently, and the stat reader normalizes units, so
+    // this is a pruning enabler, never a correctness requirement.
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val tsNames = typed.map(_.name).toSet
+    val needsMicros = spark.conf.get(tsKey) == "INT96" &&
+      df.schema.fields.exists(f => tsNames(f.name) &&
+        f.dataType == org.apache.spark.sql.types.TimestampType)
+    val src =
+      if (!needsMicros) df
+      else DatasetBridge.ofRows(DatasetBridge.cloneSession(spark,
+        tsKey -> "TIMESTAMP_MICROS"), df.queryExecution.analyzed)
     // write parquet BLOOM FILTERS for every stat column (typed ones
     // too): footprints prune RANGE probes, blooms prune POINT probes
     // on the same columns — [[pointRead]] checks them footer-only, so
     // an equality lookup on an unclustered stat column skips files the
     // [min,max] box cannot rule out
-    val writer = (statCols ++ typed.map(_.name))
-      .foldLeft(shape(df).write.mode("overwrite")) {
+    (statCols ++ typed.map(_.name))
+      .foldLeft(shape(src).write.mode("overwrite")) {
         (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
       }
-    // Spark still DEFAULTS to INT96 timestamps, which carry NO usable
-    // parquet statistics — a timestamp typed column would silently
-    // never prune. Force INT64 micros for the write (what Iceberg
-    // always writes); readers handle both physical forms
-    // transparently, and the stat reader normalizes units, so this
-    // flip is a pruning enabler, never a correctness requirement.
-    val tsNames = typed.map(_.name).toSet
-    val needsMicros = df.schema.fields.exists(f => tsNames(f.name) &&
-      f.dataType == org.apache.spark.sql.types.TimestampType)
-    if (needsMicros) TsConfGuard.withMicros(spark)(writer.parquet(stage))
-    else writer.parquet(stage)
+      .parquet(stage)
     fs.mkdirs(new Path(filesDir(root)))
     val sizes = scala.collection.mutable.Map.empty[String, Long]
     val moved = fs.listStatus(new Path(stage)).toSeq
@@ -753,42 +762,6 @@ object VersionedTable {
           "the moved files are unreferenced and will be vacuumed.")
     dataFiles.map { case (name, rows, boxes, tb, nulls) =>
       Entry(name, rows, boxes.get, sizes.getOrElse(name, -1L), tb, nulls)
-    }
-  }
-
-  /** Serializes the INT96→TIMESTAMP_MICROS session-conf flip across
-    * CONCURRENT writers of one session: `outputTimestampType` has no
-    * per-write option, so the flip must touch the shared SQLConf — a
-    * naive set/restore pair interleaved across two writers could
-    * restore INT96 under a typed-timestamp write still in flight
-    * (silently disabling its declared pruning — the stats would be
-    * INT96, useless). A REFERENCE COUNT keyed by the session's conf
-    * fixes that: the first writer in flips, the last one out restores,
-    * and every typed write in between observes MICROS. Unrelated
-    * concurrent writes of the same session briefly write INT64 micros
-    * instead of INT96 — a physical-format change only, transparent to
-    * readers (and strictly richer in statistics).
-    */
-  private object TsConfGuard {
-    private val key = "spark.sql.parquet.outputTimestampType"
-    private final class State { var depth = 0; var savedInt96 = false }
-    private val states =
-      new java.util.concurrent.ConcurrentHashMap[AnyRef, State]()
-    def withMicros[T](spark: SparkSession)(body: => T): T = {
-      val st = states.computeIfAbsent(spark.sessionState.conf,
-        _ => new State)
-      st.synchronized {
-        if (st.depth == 0) {
-          st.savedInt96 = spark.conf.get(key) == "INT96"
-          if (st.savedInt96) spark.conf.set(key, "TIMESTAMP_MICROS")
-        }
-        st.depth += 1
-      }
-      try body
-      finally st.synchronized {
-        st.depth -= 1
-        if (st.depth == 0 && st.savedInt96) spark.conf.set(key, "INT96")
-      }
     }
   }
 

@@ -50,9 +50,10 @@ object EventStreamPipeline {
     * SIDE EFFECT: sets `spark.sql.legacy.parquet.nanosAsLong` on the
     * session and leaves it set — the conf must hold for the stream's
     * whole lifetime (micro-batches read files long after this call
-    * returns), so it cannot be save-and-restored. Callers sharing the
-    * session with unrelated nanos-timestamp parquet reads should use a
-    * separate session.
+    * returns), so it cannot be save-and-restored. A caller whose session
+    * must keep its own setting passes a clone
+    * ([[org.apache.spark.sql.graftbridge.DatasetBridge.cloneSession]]),
+    * as `EventWindows.drainEvents` does.
     */
   def readEvents(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {

@@ -21,6 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * limits) into a negative invariant over the whole surface: new queries
   * are linted the moment they are added to `SparkEntry.queries`, with no
   * opt-in step to forget.
+  *
+  * It also snapshots the lint session's conf around every build, and a
+  * final case asserts that no entry changed it.
   */
 class SuitePlanLintSpec extends AnyFunSuite {
 
@@ -35,14 +38,31 @@ class SuitePlanLintSpec extends AnyFunSuite {
     s
   }
 
+  /** Entries whose build changed `lintSpark.conf.getAll`, with the
+    * keys they changed: an entry needing another conf must build on a
+    * cloned session, never write its caller's.
+    */
+  private val confChanges =
+    scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
+
   for (name <- graft.SparkEntry.queries.keys.toSeq.sorted
        if !sanctioned.contains(name)) {
     test(s"$name: no unbroadcast CartesianProduct (autoBroadcast off)") {
+      val before = lintSpark.conf.getAll
       val df = graft.SparkEntry.queries(name)(lintSpark, TestSpark.sfDir)
+      val after = lintSpark.conf.getAll
+      val changed = (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k)).toSeq.sorted
+      if (changed.nonEmpty) confChanges(name) = changed
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("CartesianProduct"),
         s"$name plans a cartesian once auto-broadcast stops saving it — " +
           s"declare the broadcast side explicitly:\n${p.take(2500)}")
     }
+  }
+
+  test("no entry's build changed the session conf") {
+    assert(confChanges.isEmpty, confChanges.map { case (n, ks) =>
+      s"$n: ${ks.mkString(", ")}" }.mkString("entries changed the conf: ", "; ", ""))
   }
 }
