@@ -96,6 +96,16 @@ object Bench {
       val ts = samples(name)
       name -> (if (ts.size < 2) -1.0 else ts.max - ts.min)
     }
+    // WARM spread: the same max - min over each query's passes AFTER
+    // its first. The first pass also pays one-time costs (DDL compiles,
+    // first codegen of a plan shape), so `spread` mostly measures that;
+    // this one is the run-to-run noise of a warm JVM. Fewer than 2 warm
+    // successful passes: -1, as above
+    val warmSpreads: Seq[(String, Double)] = ordered.map { case (name, _) =>
+      val ts = passes.flatMap(_.collect { case (`name`, t) => t })
+        .drop(1).filter(_ >= 0)
+      name -> (if (ts.size < 2) -1.0 else ts.max - ts.min)
+    }
     def r3(v: Double): String = // 3 decimals keeps the JSON line short
       if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def jsonMap(rs: Seq[(String, Double)]): String =
@@ -116,7 +126,7 @@ object Bench {
     val passesJson = passes.map(jsonMap).mkString("[", ",", "]")
     java.nio.file.Files.write(
       java.nio.file.Paths.get("target/bench_full.json"),
-      s"""{"headline_total":${r3(total)},"all_total":${r3(allTotal)},"n":${results.size},"runs":$runs,"headline_runs":${runs + extraRuns},"failed":$failed,"queries":${jsonMap(results)},"spread":${jsonMap(spreads)},"passes":$passesJson,"sf":"$sfDir"}\n"""
+      s"""{"headline_total":${r3(total)},"all_total":${r3(allTotal)},"n":${results.size},"runs":$runs,"headline_runs":${runs + extraRuns},"failed":$failed,"queries":${jsonMap(results)},"spread":${jsonMap(spreads)},"warm_spread":${jsonMap(warmSpreads)},"passes":$passesJson,"sf":"$sfDir"}\n"""
         .getBytes("UTF-8"))
     System.err.println(s"[bench] full per-query map (best of $runs; " +
       s"headline best of ${runs + extraRuns}): ${jsonMap(results)}")

@@ -1121,14 +1121,13 @@ object CorpusCuration {
         AND cents <= mn2 + (mx2 - mn2) * 75 // 100
       ORDER BY event_id"""))
 
-  /** The guarded ingest-and-serve LOOP under the driver's oracle: four
-    * lease-guarded appends (the at-rest shape of streaming ingest),
-    * one guarded z-order compaction folding the pile, and a serving
-    * read — per-user rollups of the served table hash-matched against
-    * the source. This is `LayoutLiveWriterSpec`'s composition run
-    * single-threaded under the correctness gate every round: any row
-    * lost or duplicated anywhere in append → recover → compact → swap
-    * → serve breaks the hash.
+  /** The ingest-and-serve LOOP under the driver's oracle, on the
+    * versioned table: four appends (the at-rest shape of streaming
+    * ingest), one z-order compaction folding the pile, and a read —
+    * per-user rollups of the served table hash-matched against the
+    * source. Any row lost or duplicated anywhere in append → publish →
+    * compact → publish → read breaks the hash. (`VersionedLiveWriterSpec`
+    * runs the same composition concurrently.)
     */
   val guardedIngest: Q = Q(
     "pipe_guarded_ingest",
@@ -1139,35 +1138,31 @@ object CorpusCuration {
           expr(Tables.fldivExpr("ts", 1000L)).as("ts_us"))
       val root = scratchDir("guarded-ingest")
       (0 until 4).foreach { k =>
-        graft.pipeline.Layout.appendGuarded(
-          ev.filter(pmod($"event_id", lit(4L)) === k), root)
+        graft.pipeline.VersionedTable.append(
+          ev.filter(pmod($"event_id", lit(4L)) === k), root,
+          Seq("user_id", "ts_us"))
       }
-      graft.pipeline.Layout.compactZorderGuarded(s, root, "user_id",
-        "ts_us", nFiles = 8)
-      graft.pipeline.Layout.servingRead(s, root) { df =>
-        df.groupBy($"user_id")
-          .agg(count(lit(1)).as("n_events"),
-            min($"ts_us").as("first_us"), max($"ts_us").as("last_us"))
-          .orderBy($"user_id")
-      }
+      graft.pipeline.VersionedTable.compactZorder(s, root, 8)
+      graft.pipeline.VersionedTable.read(s, root)
+        .groupBy($"user_id")
+        .agg(count(lit(1)).as("n_events"),
+          min($"ts_us").as("first_us"), max($"ts_us").as("last_us"))
+        .orderBy($"user_id")
     },
     Some("""SELECT user_id, count(*) AS n_events,
         min(epoch_us(ts)) AS first_us, max(epoch_us(ts)) AS last_us
       FROM events GROUP BY user_id ORDER BY user_id"""))
 
-  /** The footprint-manifest BOX PROBE under the driver's oracle: build
-    * the guarded table (two lease-guarded appends + one z-order
-    * compaction, which persists the per-file footprint manifest from
-    * the staged files' parquet footers), then serve a selective 2-D
-    * box through [[graft.pipeline.Layout.servingReadBox]] — the
-    * planning-time FILE pruning path ([[graft.pipeline.Layout
-    * .boxPrunedPaths]]) — and hash-match per-user rollups of the
-    * surviving rows against the same box stated directly over the
-    * source table. A manifest entry with a wrong footprint, a pruned
-    * path that actually intersected the box, or any row lost in
-    * append → compact → manifest → prune → serve breaks the hash.
-    * (`LayoutManifestPruningSpec` additionally observes the path-list
-    * shrink via scan metrics; this entry pins the SEMANTICS.)
+  /** The versioned table's BOX PROBE under the driver's oracle: two
+    * appends + one z-order compaction (the manifest records each
+    * file's footprint from its parquet footer), then a selective 2-D
+    * box through [[graft.pipeline.VersionedTable.boxRead]] — the
+    * planning-time FILE pruning path — hash-matched per user against
+    * the same box stated directly over the source table. A manifest
+    * entry with a wrong footprint, a pruned file that actually
+    * intersected the box, or any row lost in append → compact →
+    * prune → read breaks the hash. (`VersionedTableSpec` additionally
+    * asserts the file-count shrink; this entry pins the SEMANTICS.)
     */
   val manifestPrune: Q = Q(
     "pipe_manifest_prune",
@@ -1178,11 +1173,11 @@ object CorpusCuration {
           expr(Tables.fldivExpr("ts", 1000L)).as("ts_us"))
       val root = scratchDir("manifest-prune")
       (0 until 2).foreach { k =>
-        graft.pipeline.Layout.appendGuarded(
-          ev.filter(pmod($"event_id", lit(2L)) === k), root)
+        graft.pipeline.VersionedTable.append(
+          ev.filter(pmod($"event_id", lit(2L)) === k), root,
+          Seq("user_id", "ts_us"))
       }
-      graft.pipeline.Layout.compactZorderGuarded(s, root, "user_id",
-        "ts_us", nFiles = 16)
+      graft.pipeline.VersionedTable.compactZorder(s, root, 16)
       val bRow = ev.agg(min($"user_id"), max($"user_id"),
           min($"ts_us"), max($"ts_us")).head.toSeq
       require(bRow.forall(_ != null),
@@ -1190,14 +1185,13 @@ object CorpusCuration {
       val b = bRow.map(_.asInstanceOf[Long])
       def lo(i: Int) = b(2 * i) + (b(2 * i + 1) - b(2 * i)) * 25 / 100
       def hi(i: Int) = b(2 * i) + (b(2 * i + 1) - b(2 * i)) * 75 / 100
-      graft.pipeline.Layout.servingReadBox(s, root,
-        "user_id", lo(0), hi(0), "ts_us", lo(1), hi(1)) { df =>
-        df.groupBy($"user_id")
-          .agg(count(lit(1)).as("n_events"),
-            sum($"event_id").as("id_sum"),
-            min($"ts_us").as("first_us"), max($"ts_us").as("last_us"))
-          .orderBy($"user_id")
-      }
+      graft.pipeline.VersionedTable.boxRead(s, root,
+          Seq(("user_id", lo(0), hi(0)), ("ts_us", lo(1), hi(1))))
+        .groupBy($"user_id")
+        .agg(count(lit(1)).as("n_events"),
+          sum($"event_id").as("id_sum"),
+          min($"ts_us").as("first_us"), max($"ts_us").as("last_us"))
+        .orderBy($"user_id")
     },
     Some("""WITH src AS (
         SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
@@ -1214,14 +1208,14 @@ object CorpusCuration {
         AND ts_us <= mn1 + (mx1 - mn1) * 75 // 100
       GROUP BY user_id ORDER BY user_id"""))
 
-  /** The 3-D layout's box probe under the driver's oracle — the
-    * (user, time, value)-style table served through ONE three-column
-    * footprint manifest ([[graft.pipeline.Layout.compactZorder3Guarded]]
-    * writes it; [[graft.pipeline.Layout.servingReadBoxes]] prunes
-    * paths against it before planning). Same proof shape as
-    * [[manifestPrune]] with the third dimension live: any wrong
-    * footprint, wrongly-pruned path, or row lost across
-    * append → 3-D compact → manifest → probe → serve breaks the hash.
+  /** The 3-D layout's box probe under the driver's oracle — a
+    * (user, time, value)-style versioned table compacted by a 3-D
+    * z-value ([[graft.pipeline.VersionedTable.compactZorder]] with
+    * three `by` columns) and probed through
+    * [[graft.pipeline.VersionedTable.boxRead]] on all three. Same proof
+    * shape as [[manifestPrune]] with the third dimension live: any
+    * wrong footprint, wrongly-pruned file, or row lost across
+    * append → 3-D compact → probe → read breaks the hash.
     */
   val manifestPrune3: Q = Q(
     "pipe_manifest_prune3",
@@ -1232,9 +1226,9 @@ object CorpusCuration {
           expr(Tables.fldivExpr("ts", 1000L)).as("ts_us"),
           expr("CAST(floor(value * 100) AS BIGINT)").as("cents"))
       val root = scratchDir("manifest-prune3")
-      graft.pipeline.Layout.appendGuarded(ev, root)
-      graft.pipeline.Layout.compactZorder3Guarded(s, root, "user_id",
-        "ts_us", "cents", nFiles = 16)
+      val dims = Seq("user_id", "ts_us", "cents")
+      graft.pipeline.VersionedTable.append(ev, root, dims)
+      graft.pipeline.VersionedTable.compactZorder(s, root, 16, by = dims)
       val bRow = ev.agg(min($"user_id"), max($"user_id"),
           min($"ts_us"), max($"ts_us"), min($"cents"), max($"cents"))
         .head.toSeq
@@ -1243,14 +1237,13 @@ object CorpusCuration {
       val b = bRow.map(_.asInstanceOf[Long])
       def lo(i: Int) = b(2 * i) + (b(2 * i + 1) - b(2 * i)) * 25 / 100
       def hi(i: Int) = b(2 * i) + (b(2 * i + 1) - b(2 * i)) * 75 / 100
-      graft.pipeline.Layout.servingReadBoxes(s, root,
-        Seq(("user_id", lo(0), hi(0)), ("ts_us", lo(1), hi(1)),
-          ("cents", lo(2), hi(2)))) { df =>
-        df.groupBy($"user_id")
-          .agg(count(lit(1)).as("n_events"),
-            sum($"event_id").as("id_sum"), sum($"cents").as("cents_sum"))
-          .orderBy($"user_id")
-      }
+      graft.pipeline.VersionedTable.boxRead(s, root,
+          Seq(("user_id", lo(0), hi(0)), ("ts_us", lo(1), hi(1)),
+            ("cents", lo(2), hi(2))))
+        .groupBy($"user_id")
+        .agg(count(lit(1)).as("n_events"),
+          sum($"event_id").as("id_sum"), sum($"cents").as("cents_sum"))
+        .orderBy($"user_id")
     },
     Some("""WITH src AS (
         SELECT event_id, user_id, epoch_us(ts) AS ts_us,

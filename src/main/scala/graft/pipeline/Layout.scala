@@ -1,17 +1,20 @@
 package graft.pipeline
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multi-dimensional data LAYOUT for scan pruning — the lakehouse
   * Z-ordering technique (Delta `OPTIMIZE ZORDER BY`, Iceberg sort
   * orders), built from plain Spark primitives: interleave the bits of
-  * two scaled sort keys into a Morton z-value, range-partition and sort
-  * the write by it, and every written file's min/max footprint becomes
-  * a small box in BOTH dimensions at once. A 2-D box predicate then
-  * prunes to ~O(√F) of F files via ordinary parquet row-group/file
-  * statistics, where a single-column sort layout prunes only its own
-  * dimension and reads EVERYTHING for a predicate on the other.
+  * two or three scaled sort keys into a Morton z-value, range-partition
+  * and sort the write by it, and every written file's min/max footprint
+  * becomes a small box in EVERY dimension at once. A 2-D box predicate
+  * then prunes to ~O(√F) of F files via ordinary parquet
+  * row-group/file statistics, where a single-column sort layout prunes
+  * only its own dimension and reads EVERYTHING for a predicate on the
+  * other.
   *
   * At the 100 TB scale this is the difference between a selective
   * (user, time-range) probe touching ~3% of files and touching all of
@@ -19,6 +22,12 @@ import org.apache.spark.sql.functions._
   * structure, just a smarter write. All arithmetic is codegen'd
   * column expressions (shift/mask/or) — no UDF, no shuffle beyond the
   * one range partition the write needs anyway.
+  *
+  * The z-shaping is written once ([[zorderBy]]); the direct writes
+  * here and [[VersionedTable.compactZorder]] all call it. This object
+  * also holds the parquet FOOTER readers the versioned table's
+  * manifest is built from (long boxes, typed bounds, null counts,
+  * blooms) — footer-only, never a data page.
   */
 object Layout {
 
@@ -122,42 +131,69 @@ object Layout {
   def scale16(c: Column, min: Long, max: Long): Column =
     scaleTo(c, min, max, 65535L)
 
-  /** Write `df` z-ordered by two long columns into `nFiles` files:
-    * one agg pass for the min/max scale bounds, then
-    * `repartitionByRange(z)` + sort-within-partitions(z) + write. Range
-    * partitioning gives each file a DISJOINT z-interval, which is what
-    * turns file min/max stats into tight 2-D boxes.
+  /** The z-order SHAPE of a write, written once for every z-ordered
+    * write in the repo: one agg pass for the min/max scale bounds of
+    * `cols`, then `repartitionByRange(z)` + sort-within-partitions(z)
+    * into `nFiles` partitions. Two columns interleave 16-bit keys
+    * ([[scale16]]/[[zvalue16]]), three interleave 21-bit keys
+    * ([[scale21]]/[[zvalue21]]). Range partitioning gives each file a
+    * DISJOINT z-interval, which is what turns file min/max stats into
+    * tight boxes in every dimension.
     */
-  def zorderWrite(df: DataFrame, colA: String, colB: String, dir: String,
-      nFiles: Int): Unit = {
-    val Array(minA, maxA, minB, maxB) =
-      df.agg(min(col(colA)), max(col(colA)), min(col(colB)), max(col(colB)))
-        .head.toSeq.map(_.asInstanceOf[Long]).toArray
-    val z = zvalue16(
-      scale16(col(colA), minA, maxA), scale16(col(colB), minB, maxB))
+  private[pipeline] def zorderBy(df: DataFrame, cols: Seq[String],
+      nFiles: Int): DataFrame = {
+    val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+    // an all-NULL column has no bounds: 0/0 scales it to the constant
+    // 0, and the other columns order the rows
+    zorderBy(df, cols, nFiles, df.agg(aggs.head, aggs.tail: _*)
+      .head.toSeq.map(b => if (b == null) 0L else b.asInstanceOf[Long]))
+  }
+
+  /** [[zorderBy]] with caller-supplied scale bounds
+    * `[min0, max0, min1, max1, ...]`, one pair per column.
+    */
+  private def zorderBy(df: DataFrame, cols: Seq[String], nFiles: Int,
+      bounds: Seq[Long]): DataFrame = {
+    require(bounds.length == 2 * cols.size,
+      s"need ${2 * cols.size} bounds, got ${bounds.length}")
+    def scaled(scale: (Column, Long, Long) => Column): Seq[Column] =
+      cols.indices.map(i =>
+        scale(col(cols(i)), bounds(2 * i), bounds(2 * i + 1)))
+    val z = cols.size match {
+      case 2 =>
+        val Seq(a, b) = scaled(scale16)
+        zvalue16(a, b)
+      case 3 =>
+        val Seq(a, b, c) = scaled(scale21)
+        zvalue21(a, b, c)
+      case n => throw new IllegalArgumentException(
+        s"z-order needs two or three columns, got $n: ${cols.mkString(", ")}")
+    }
     // the z key is passed as an EXPRESSION to both the range partitioner
     // and the sort, never materialized as a column: RangePartitioning
     // evaluates its ordering expressions to route rows without appending
     // them, so the exchange carries only the data columns. A
     // withColumn("_z")/drop form ships 8 extra bytes per row — measured
-    // +34% shuffle on a 3-long-column table (SCALE.md §"Round-14 Z-order
-    // layout");
-    // recomputing the codegen'd shift/mask ladder twice is free next to
-    // that
-    df.repartitionByRange(nFiles, z)
-      .sortWithinPartitions(z)
-      .write.mode("overwrite").parquet(dir)
+    // +34% shuffle on a 3-long-column table (SCALE.md §"Z-order
+    // layout"); recomputing the codegen'd shift/mask ladder twice is
+    // free next to that
+    df.repartitionByRange(nFiles, z).sortWithinPartitions(z)
   }
 
-  /** 3-D form of [[zorderWrite]]: one agg pass for the three scale
-    * bounds, then range-partition + sort by the 63-bit z-value.
+  /** Write `df` z-ordered by two long columns into `nFiles` files
+    * ([[zorderBy]]).
+    */
+  def zorderWrite(df: DataFrame, colA: String, colB: String, dir: String,
+      nFiles: Int): Unit =
+    zorderBy(df, Seq(colA, colB), nFiles).write.mode("overwrite").parquet(dir)
+
+  /** 3-D form of [[zorderWrite]]: range-partition + sort by the 63-bit
+    * z-value of three long columns.
     */
   def zorderWrite3(df: DataFrame, colA: String, colB: String, colC: String,
       dir: String, nFiles: Int): Unit =
-    zorderWrite3(df, colA, colB, colC, dir, nFiles,
-      df.agg(min(col(colA)), max(col(colA)), min(col(colB)), max(col(colB)),
-          min(col(colC)), max(col(colC)))
-        .head.toSeq.map(_.asInstanceOf[Long]).toArray)
+    zorderBy(df, Seq(colA, colB, colC), nFiles)
+      .write.mode("overwrite").parquet(dir)
 
   /** [[zorderWrite3]] with caller-supplied scale bounds
     * `[minA, maxA, minB, maxB, minC, maxC]` — for callers that already
@@ -166,18 +202,9 @@ object Layout {
     * bounds, not twice.
     */
   def zorderWrite3(df: DataFrame, colA: String, colB: String, colC: String,
-      dir: String, nFiles: Int, bounds: Array[Long]): Unit = {
-    require(bounds.length == 6, s"need 6 bounds, got ${bounds.length}")
-    val z = zvalue21(
-      scale21(col(colA), bounds(0), bounds(1)),
-      scale21(col(colB), bounds(2), bounds(3)),
-      scale21(col(colC), bounds(4), bounds(5)))
-    // expression-keyed exchange — see zorderWrite: the 63-bit key routes
-    // and sorts rows without ever crossing the wire
-    df.repartitionByRange(nFiles, z)
-      .sortWithinPartitions(z)
+      dir: String, nFiles: Int, bounds: Array[Long]): Unit =
+    zorderBy(df, Seq(colA, colB, colC), nFiles, bounds.toSeq)
       .write.mode("overwrite").parquet(dir)
-  }
 
   /** Single-dimension comparison layout: range-partition + sort by one
     * column — perfect pruning on that column, none on any other.
@@ -187,18 +214,16 @@ object Layout {
     df.repartitionByRange(nFiles, col(c)).sortWithinPartitions(c)
       .write.mode("overwrite").parquet(dir)
 
-  /** In-place layout COMPACTION — the maintenance operator that turns a
-    * streaming-ingested pile of small, unclustered files into a z-ordered
-    * snapshot readers can prune: read the current target, rewrite it
-    * z-ordered by (colA, colB) into `nFiles` files under `.staging`, and
-    * promote via the shared staged two-rename swap ([[SnapshotDir]] — the
-    * same crash-recovery contract as the streaming sinks: a crash at any
-    * point leaves a complete snapshot recoverable, and re-running the
-    * compaction converges). At ingest scale this runs periodically behind
-    * the [[WriterLease]] single-writer guard — the guarded composition
-    * ([[appendGuarded]]/[[compactZorderGuarded]]/[[servingRead]]) is
-    * proven live in LayoutLiveWriterSpec: concurrent appends, folds and
-    * polling reads, crash injection included.
+  /** In-place layout COMPACTION of a flat parquet directory: read it,
+    * rewrite it z-ordered by (colA, colB) into `nFiles` files under
+    * `.staging`, and promote via the shared staged two-rename swap
+    * ([[SnapshotDir]] — the same crash-recovery contract as the
+    * streaming sinks: a crash at any point leaves a complete snapshot
+    * recoverable, and re-running the compaction converges). It takes
+    * no lock: the caller must be the directory's only writer. A table
+    * with concurrent writers and readers is a [[VersionedTable]], whose
+    * [[VersionedTable.compactZorder]] publishes the rewrite as a new
+    * version instead of swapping directories.
     */
   def compactZorder(spark: SparkSession, dir: String, colA: String,
       colB: String, nFiles: Int): Unit = {
@@ -212,295 +237,40 @@ object Layout {
     // actually trip it
     // materialize the plan BEFORE the swap renames the source out from
     // under the scan: the z-write reads from `dir` and writes to
-    // `.staging`, so the one pass is the whole data movement. The read
-    // is the COMPLETE-contents listing (flat part files + _SUCCESS-gated
-    // batch subdirectories): a torn mid-commit batch dir must never be
-    // folded — its partial rows would become permanent when the
-    // checkpoint replays the full batch. NOTE for streaming tables: this
-    // folds every COMPLETE batch dir, including ones the stream's
-    // checkpoint has not committed yet — safe only while the ingest is
-    // quiesced; a compaction racing a live/restartable stream must go
-    // through StreamingZorderIngest.compactCommitted, which additionally
-    // gates on the checkpoint's commit frontier.
-    zorderWrite(readComplete(spark, dir), colA, colB, snap.stagingPath,
+    // `.staging`, so the one pass is the whole data movement
+    zorderWrite(spark.read.parquet(dir), colA, colB, snap.stagingPath,
       nFiles)
-    // footprint manifest from the staged files' FOOTERS (no data
-    // scan), written INTO staging so it promotes atomically with the
-    // snapshot it describes — servingReadBox prunes paths against it
-    writeFootprintManifest(spark, snap.stagingPath, colA, colB)
     snap.swapIn()
   }
 
-  // ——— Guarded table composition: streaming-style ingest appends +
-  // periodic compaction + serving reads over ONE directory layout.
-  // `root/_writer.lock` is the single-writer guard for EVERY mutation;
-  // the served snapshot lives at `root/data` so the lease file never
-  // rides through the compactor's directory swap (a lease INSIDE the
-  // swapped dir would be renamed out from under its own heartbeat
-  // mid-hold, breaking the liveness contract).
-
-  /** The served snapshot directory of a guarded table root. */
-  def tableDataDir(root: String): String = s"$root/data"
-
-  private def fsFor(spark: SparkSession, dir: String)
-      : org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Ingest append under the table's writer lease. The `recover()`
-    * BEFORE the write is load-bearing, not ceremony: after a compaction
-    * crashed between its two renames, the target is ABSENT and the only
-    * complete snapshot sits in `.staging` — a blind append would
-    * re-CREATE the target with just the appended rows, and
-    * [[SnapshotDir.recover]] (which only promotes into a missing
-    * target) would then never run: the entire compacted snapshot would
-    * be silently stranded. Proven by fault injection in
-    * LayoutLiveWriterSpec.
-    *
-    * The append is BATCH-ATOMIC for readers: it lands as one
-    * `a<nonce>` subdirectory whose `_SUCCESS` marker appears only
-    * after every part file is committed, and [[completeDataPaths]]
-    * admits subdirectories only with the marker. A plain
-    * `mode("append")` into the data dir would expose the batch's part
-    * files ONE BY ONE as the job commit moves them — a concurrent
-    * serving read could aggregate half an append (the torn-append
-    * anomaly; observed as a non-multiple row count before this fix,
-    * now asserted away in LayoutLiveWriterSpec's reader). A dir left
-    * WITHOUT its marker is a crashed append whose caller never got an
-    * ack — compaction deletes it ([[graft.streaming
-    * .StreamingZorderIngest.compactCommitted]] does too: appends hold
-    * this same lease, so a torn `a` dir can never be in-progress while
-    * a compactor runs).
+  /** Read every file in `files` through `one` — footer-only work, one
+    * result per file, in input order. Small file sets (at most
+    * `driverLoopLimit`: the common per-commit case, and the handful of
+    * point-lookup survivors the manifest box stage leaves) run in a
+    * DRIVER loop under the session's Hadoop conf: driver-LOCAL
+    * parallelism (ForkJoin common pool), so the footers still read
+    * concurrently, but with no task serialization, no scheduler
+    * round-trip and no result fetch — the job machinery would cost
+    * more than the footer reads (profiled r20: pipe_vt_cdc_mirror
+    * launched one such job per commit). Larger sets distribute over at
+    * most 64 tasks, shipping the conf as XML (Hadoop Configuration is
+    * not serializable as-is). An OBJECT method on purpose: the task
+    * closure reaches it through the static MODULE$ reference, so `one`
+    * is the only thing it captures.
     */
-  def appendGuarded(df: DataFrame, root: String): Unit = {
-    val spark = df.sparkSession
-    val dataDir = tableDataDir(root)
-    WriterLease.withLease(fsFor(spark, root), root, "zorderAppend") {
-      new SnapshotDir(spark, dataDir).recover()
-      val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
-      val dir = s"$dataDir/a$nonce"
-      df.write.mode("overwrite").parquet(dir)
-      ensureSuccessMarker(spark, dir)
-    }
-  }
-
-  /** The `_SUCCESS` marker is the batch-visibility gate
-    * ([[completeDataPaths]]) AND what stops compaction from dropping
-    * the dir as a dead append — but committers can be configured not
-    * to write it (`mapreduce.fileoutputcommitter.marksuccessfuljobs=
-    * false`, some object-store committers). The write job above has
-    * already succeeded when this runs, so writing the marker ourselves
-    * is exactly the committer's own semantics; without this, an ACKED
-    * append under a marker-less committer would be invisible to every
-    * reader and deleted by the next compaction.
-    */
-  private[graft] def ensureSuccessMarker(spark: SparkSession,
-      dir: String): Unit = {
-    val fs = fsFor(spark, dir)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-  }
-
-  /** [[compactZorder]] behind the same lease the ingest appends hold —
-    * the periodic maintenance job of the ingest-and-serve loop. The
-    * lease is what makes the compactor's read-list complete: no append
-    * can land between its scan of the data dir and the swap, so the
-    * rewrite is lossless by serialization, not by luck.
-    */
-  def compactZorderGuarded(spark: SparkSession, root: String, colA: String,
-      colB: String, nFiles: Int): Unit =
-    WriterLease.withLease(fsFor(spark, root), root, "compactZorder") {
-      compactZorder(spark, tableDataDir(root), colA, colB, nFiles)
-    }
-
-  /** 3-D form of [[compactZorder]]: the (user, time, quality)-style
-    * layout under the same staged-swap contract, with a THREE-column
-    * footprint manifest — one manifest serves 1-D, 2-D and 3-D box
-    * probes through [[servingReadBoxes]].
-    */
-  def compactZorder3(spark: SparkSession, dir: String, colA: String,
-      colB: String, colC: String, nFiles: Int): Unit = {
-    val snap = new SnapshotDir(spark, dir)
-    snap.recover()
-    require(snap.targetExists, s"compactZorder3: nothing to compact at $dir")
-    zorderWrite3(readComplete(spark, dir), colA, colB, colC,
-      snap.stagingPath, nFiles)
-    writeFootprintManifest(spark, snap.stagingPath, Seq(colA, colB, colC))
-    snap.swapIn()
-    ()
-  }
-
-  /** [[compactZorder3]] behind the writer lease. */
-  def compactZorder3Guarded(spark: SparkSession, root: String,
-      colA: String, colB: String, colC: String, nFiles: Int): Unit =
-    WriterLease.withLease(fsFor(spark, root), root, "compactZorder3") {
-      compactZorder3(spark, tableDataDir(root), colA, colB, colC, nFiles)
-    }
-
-  /** Serving read of a guarded table: runs `use` on the snapshot,
-    * retrying when the read trips over the swap's transient windows —
-    * the sub-millisecond gap between the two promote renames (the
-    * documented non-atomicity of [[SnapshotDir.swapIn]] on a plain
-    * filesystem), or a file listed before the swap vanishing mid-scan.
-    * A CRASHED compactor's absent-target window lasts until the next
-    * guarded writer's `recover()`, so availability during a crash is
-    * bounded by writer cadence — the retry budget exists for exactly
-    * that wait, and exhausting it rethrows rather than inventing an
-    * empty result.
-    *
-    * The retry protects only work FORCED inside `use`: a `use` that
-    * returns a lazy plan gets planning-time protection (the listing),
-    * but its later execution runs outside this guard — callers racing
-    * a live writer must collect within `use` (as LayoutLiveWriterSpec's
-    * reader does); returning a plan is sound only when no writer can
-    * run between this call and the action (pipe_guarded_ingest's
-    * single-threaded shape).
-    */
-  def servingRead[A](spark: SparkSession, root: String, retries: Int = 60,
-      backoffMs: Long = 25)(use: DataFrame => A): A = {
-    val dataDir = tableDataDir(root)
-    var attempt = 0
-    while (true) {
-      try return use(readComplete(spark, dataDir))
-      catch {
-        case e: Throwable if attempt < retries && isTransientMissing(e) =>
-          attempt += 1
-          Thread.sleep(backoffMs)
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** The COMPLETE contents of a guarded table's data dir: top-level part
-    * files (compacted flat layout) plus batch subdirectories that carry
-    * their `_SUCCESS` marker — the streaming ingest's `b<id>` dirs
-    * (graft.streaming.StreamingZorderIngest) and [[appendGuarded]]'s
-    * `a<nonce>` dirs alike. A dir WITHOUT the marker is a batch whose
-    * job commit was interrupted mid-crash: some part files landed, the
-    * rest did not — serving it would hand readers a TORN batch, and
-    * folding a torn `b` dir would make the torn subset permanent when
-    * the checkpoint later replays the full batch next to it (a torn
-    * `a` dir is simply a dead unacked append). The `_SUCCESS` gate is
-    * also what makes every append BATCH-ATOMIC for readers: a batch's
-    * part files land one by one, but the dir is admitted only once the
-    * marker — written after the last file — exists. The explicit path
-    * list replaces a blind `recursiveFileLookup`, which cannot tell
-    * complete from torn. One FS listing, O(#batches) entries.
-    */
-  private[graft] def completeDataPaths(spark: SparkSession,
-      dataDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = fsFor(spark, dataDir)
-    // a missing dir throws FileNotFoundException — the same transient
-    // signal a racing swap produces, handled by servingRead's retry
-    fs.listStatus(p).toSeq.flatMap { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("_") || name.startsWith(".")) None
-      else if (st.isFile) Some(st.getPath.toString)
-      else if (fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-        Some(st.getPath.toString)
-      else None // torn batch dir: mid-commit crash; replay will rewrite it
-    }
-  }
-
-  /** Read the complete contents (see [[completeDataPaths]]). */
-  private[graft] def readComplete(spark: SparkSession,
-      dataDir: String): DataFrame = {
-    val paths = completeDataPaths(spark, dataDir)
-    if (paths.isEmpty)
-      throw new java.io.FileNotFoundException(
-        s"no complete data at $dataDir")
-    spark.read.parquet(paths: _*)
-  }
-
-  /** A read failure is transient iff it is a missing-path/missing-file
-    * condition (planning-time PATH_NOT_FOUND, or a scan racing the swap
-    * hitting a renamed-away part file) — anywhere in the cause chain,
-    * since Spark wraps task failures in SparkException layers.
-    */
-  private def isTransientMissing(e: Throwable): Boolean = {
-    var t = e
-    while (t != null) {
-      t match {
-        case _: java.io.FileNotFoundException => return true
-        case a: org.apache.spark.sql.AnalysisException
-            if a.getErrorClass != null &&
-              (a.getErrorClass.startsWith("PATH_NOT_FOUND") ||
-                // listed paths renamed away between completeDataPaths'
-                // listing and the read's schema inference — the same
-                // swap race, one step later; a genuinely empty table
-                // never reaches inference (readComplete throws FNF on
-                // an empty list first)
-                a.getErrorClass.startsWith("UNABLE_TO_INFER_SCHEMA")) =>
-          return true
-        case _ => ()
-      }
-      t = if (t.getCause eq t) null else t.getCause
-    }
-    false
-  }
-
-  // ——— Footprint manifest: PLANNING-TIME file pruning. OSS Spark
-  // prunes parquet ROW GROUPS inside the reader, but only after
-  // listing every file and opening every footer — at 100 TB / millions
-  // of files the listing + footer reads dominate a selective probe
-  // (LayoutScanPruningSpec observes numFiles staying at the full count
-  // while rows shrink). The manifest persists each compacted file's
-  // [min,max] box for the two layout columns, computed from the
-  // parquet FOOTERS the write already produced (no data scan), and a
-  // box probe prunes PATHS against it before the scan plan exists —
-  // the same move Delta/Iceberg make with their stats manifests.
-
-  /** Manifest file name, inside the snapshot dir. Underscore-prefixed:
-    * invisible to Spark's parquet listing and to
-    * [[completeDataPaths]], and written into `.staging` BEFORE the
-    * swap so manifest and snapshot promote atomically together.
-    */
-  private[graft] val ManifestFile = "_footprints.tsv"
-
-  /** Read each file's per-column [min, max] from its parquet FOOTER —
-    * the statistics the write already persisted; no data pages are
-    * touched. Distributed over files (a footer read is one small
-    * ranged request each; at millions of files the driver must not
-    * serialize this). Returns no row for a file with no usable stats
-    * for every column (empty file, missing column) — callers must
-    * treat such files as always-scan.
-    */
-  private[pipeline] def footerFootprints(spark: SparkSession,
-      files: Seq[String],
-      cols: Seq[String]): Seq[(String, Seq[(Long, Long)])] =
-    footerStats(spark, files, cols)
-      .collect { case (n, _, Some(boxes)) => (n, boxes) }
-
-  /** [[footerFootprints]] plus each file's EXACT row count (the footer
-    * records it per row group) — what lets a manifest serve `count(*)`
-    * without touching data. One row per INPUT file: boxes are None
-    * when any stat column lacks usable long statistics (empty file,
-    * non-Long type, absent column) — callers decide whether that is
-    * an error (a non-empty data file they must not lose) or expected
-    * (a zero-row rewrite output to discard).
-    */
-  private[pipeline] def footerStats(spark: SparkSession,
-      files: Seq[String],
-      cols: Seq[String]): Seq[(String, Long, Option[Seq[(Long, Long)]])] = {
+  private def footerFanOut[T: ClassTag](spark: SparkSession,
+      files: Seq[String], driverLoopLimit: Int)(
+      one: (String, org.apache.hadoop.conf.Configuration) => T): Seq[T] = {
     if (files.isEmpty) return Seq.empty
-    if (files.size <= BloomDriverLoopLimit) {
-      // small file sets (the common per-commit case: one write lands a
-      // handful of files) read on the DRIVER, same latency argument and
-      // same threshold as [[bloomMayContain]] — per-job scheduling
-      // overhead dominates a couple of footer reads (profiled r20:
-      // pipe_vt_cdc_mirror launches one such job per commit)
+    if (files.size <= driverLoopLimit) {
       import scala.jdk.CollectionConverters._
       val conf = spark.sparkContext.hadoopConfiguration
       return files.asJava.parallelStream()
-        .map[(String, Long, Option[Seq[(Long, Long)]])](f =>
-          longStatsOf(f, footerBlocks(f, conf), cols))
-        .collect(java.util.stream.Collectors
-          .toList[(String, Long, Option[Seq[(Long, Long)]])])
+        .map[T](f => one(f, conf))
+        .collect(java.util.stream.Collectors.toList[T])
         .asScala.toSeq
     }
     val confBytes = {
-      // Hadoop Configuration is not serializable as-is; ship the XML
       val baos = new java.io.ByteArrayOutputStream()
       spark.sparkContext.hadoopConfiguration.writeXml(baos)
       baos.toByteArray
@@ -510,19 +280,19 @@ object Layout {
       .map { f =>
         val conf = new org.apache.hadoop.conf.Configuration(false)
         conf.addResource(new java.io.ByteArrayInputStream(confBytes))
-        longStatsOf(f, footerBlocks(f, conf), cols)
+        one(f, conf)
       }
       .collect().toSeq
   }
 
-  /** Below this many candidate files, [[bloomMayContain]] reads the
+  /** Below this many candidate files, [[footerFanOut]] reads the
     * footers in a DRIVER loop instead of launching a Spark job: a
     * point lookup is latency-shaped, and after the manifest box stage
     * typically leaves a handful of survivors, per-job scheduling
     * overhead (task serialization, scheduling, result fetch) dominates
-    * the footer reads themselves. Above it, the check distributes over
-    * executors exactly as before — thousands of candidates is a
-    * bandwidth problem, not a latency one.
+    * the footer reads themselves. Above it, the reads distribute over
+    * executors — thousands of candidates is a bandwidth problem, not a
+    * latency one.
     */
   private[pipeline] val BloomDriverLoopLimit: Int = 32
 
@@ -530,48 +300,20 @@ object Layout {
     * candidate's footer + bloom pages only, never data. A file is kept
     * (true) when the bloom says the value MAY be present, or when no
     * bloom exists for the column (no proof → must scan). Small
-    * candidate sets are checked on the driver ([[BloomDriverLoopLimit]]
-    * — serving-path latency); large ones distribute over files like
-    * [[footerStats]].
+    * candidate sets are checked on the driver, large ones distribute
+    * over files ([[footerFanOut]]).
     */
   private[pipeline] def bloomMayContain(spark: SparkSession,
       files: Seq[String], c: String, value: Any,
       driverLoopLimit: Int = BloomDriverLoopLimit)
-      : Seq[(String, Boolean)] = {
-    if (files.isEmpty) return Seq.empty
-    if (files.size <= driverLoopLimit) {
-      // driver-LOCAL parallelism (ForkJoin common pool): the footers
-      // still read concurrently, but no task serialization, no
-      // scheduler round-trip, no result fetch — the job machinery is
-      // the latency, not the footer I/O
-      import scala.jdk.CollectionConverters._
-      val conf = spark.sparkContext.hadoopConfiguration
-      return files.asJava.parallelStream()
-        .map[(String, Boolean)](f => bloomCheckOne(f, conf, c, value))
-        .collect(java.util.stream.Collectors.toList[(String, Boolean)])
-        .asScala.toSeq
-    }
-    val confBytes = {
-      val baos = new java.io.ByteArrayOutputStream()
-      spark.sparkContext.hadoopConfiguration.writeXml(baos)
-      baos.toByteArray
-    }
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 64)))
-      .map { f =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        conf.addResource(new java.io.ByteArrayInputStream(confBytes))
-        bloomCheckOne(f, conf, c, value)
-      }
-      .collect().toSeq
-  }
+      : Seq[(String, Boolean)] =
+    footerFanOut(spark, files, driverLoopLimit)(
+      (f, conf) => bloomCheckOne(f, conf, c, value))
 
-  /** One file's bloom verdict — the shared body of the driver-loop and
-    * distributed paths of [[bloomMayContain]].
-    */
-  /** `value`: a Long (long stat columns) or an Array[Byte] of UTF-8
-    * bytes (string typed columns — hashed as parquet Binary, the same
-    * hash the writer used for the column's bloom).
+  /** One file's bloom verdict for [[bloomMayContain]]. `value`: a Long
+    * (long stat columns) or an Array[Byte] of UTF-8 bytes (string typed
+    * columns — hashed as parquet Binary, the same hash the writer used
+    * for the column's bloom).
     */
   private def bloomCheckOne(f: String,
       conf: org.apache.hadoop.conf.Configuration,
@@ -637,59 +379,32 @@ object Layout {
       else Some(t.take(i + 1).updated(i, (t(i) + 1).toByte))
     }
 
-  /** [[footerStats]] PLUS encoded typed bounds per `typedCols` entry
-    * PLUS per-column NULL counts over `cols ++ typedCols` — all
-    * footer-only, distributed over executors, no data pages read.
-    * Typed bounds are best-effort (None
-    * disables pruning on that side); long-column stats keep the strict
-    * all-or-nothing contract [[footerStats]] documents; null counts
-    * are -1 when any row group omits them (absence never prunes), and
-    * a column entirely ABSENT from the file (written before add-only
-    * evolution introduced it) counts the file's EVERY row as null —
-    * which is what the reader serves for it.
+  /** Each file's exact row count, long-column boxes, encoded typed
+    * bounds per `typedCols` entry and per-column NULL counts over
+    * `cols ++ typedCols` — all footer-only, no data pages read; small
+    * file sets on the driver, large ones distributed
+    * ([[footerFanOut]]). Long boxes are strict all-or-nothing: None
+    * when any of `cols` is absent, not a long, or lacks statistics in
+    * some row group (see [[longStatsOf]]). Typed bounds are best-effort
+    * (None disables pruning on that side). Null counts are -1 when any
+    * row group omits them (absence never prunes), and a column
+    * entirely ABSENT from the file (written before add-only evolution
+    * introduced it) counts the file's EVERY row as null — which is
+    * what the reader serves for it.
     */
   private[pipeline] def footerStatsTyped(spark: SparkSession,
       files: Seq[String], cols: Seq[String],
       typedCols: Seq[(String, Char)])
       : Seq[(String, Long, Option[Seq[(Long, Long)]],
-        Seq[(Option[String], Option[String])], Seq[Long])] = {
-    if (files.isEmpty) return Seq.empty
-    if (files.size <= BloomDriverLoopLimit) {
-      // driver-loop tier, same rationale and threshold as
-      // [[bloomMayContain]] / [[footerStats]]: every commit calls this
-      // for the handful of files it just wrote, and the Spark-job
-      // machinery costs more than the footer reads themselves
-      import scala.jdk.CollectionConverters._
-      val conf = spark.sparkContext.hadoopConfiguration
-      return files.asJava.parallelStream()
-        .map[(String, Long, Option[Seq[(Long, Long)]],
-          Seq[(Option[String], Option[String])], Seq[Long])](f =>
-          typedStatsOne(f, conf, cols, typedCols))
-        .collect(java.util.stream.Collectors
-          .toList[(String, Long, Option[Seq[(Long, Long)]],
-            Seq[(Option[String], Option[String])], Seq[Long])])
-        .asScala.toSeq
-    }
-    val confBytes = {
-      val baos = new java.io.ByteArrayOutputStream()
-      spark.sparkContext.hadoopConfiguration.writeXml(baos)
-      baos.toByteArray
-    }
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 64)))
-      .map { f =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        conf.addResource(new java.io.ByteArrayInputStream(confBytes))
-        typedStatsOne(f, conf, cols, typedCols)
-      }
-      .collect().toSeq
-  }
+        Seq[(Option[String], Option[String])], Seq[Long])] =
+    footerFanOut(spark, files, BloomDriverLoopLimit)(
+      (f, conf) => typedStatsOne(f, conf, cols, typedCols))
 
-  /** One file's long boxes + typed bounds + null counts — the shared
-    * body of [[footerStatsTyped]]'s driver-loop and distributed tiers.
-    * An OBJECT method on purpose: the distributed tier's task closure
-    * calls it through the static MODULE$ reference (a local `def` would
-    * capture the non-serializable enclosing instance).
+  /** One file's long boxes + typed bounds + null counts for
+    * [[footerStatsTyped]]. An OBJECT method on purpose: the distributed
+    * tier's task closure calls it through the static MODULE$ reference
+    * (a local `def` would capture the non-serializable enclosing
+    * instance).
     */
   private def typedStatsOne(f: String,
       conf: org.apache.hadoop.conf.Configuration, cols: Seq[String],
@@ -857,151 +572,6 @@ object Layout {
       if (boxes.exists(_.isEmpty)) None else Some(boxes.map(_.get)))
   }
 
-  /** Write the footprint manifest for every top-level parquet file in
-    * `dir` (footer-only pass), for any number of long columns. Entries
-    * are keyed by file NAME, not path — the snapshot dir is renamed
-    * twice during the swap.
-    */
-  private[graft] def writeFootprintManifest(spark: SparkSession,
-      dir: String, cols: Seq[String]): Unit = {
-    require(cols.nonEmpty, "manifest needs at least one column")
-    val fs = fsFor(spark, dir)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.toString)
-    val rows = footerFootprints(spark, files, cols)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(dir, ManifestFile), true)
-    try {
-      val header = s"# footprints v1\t${cols.mkString("\t")}\n"
-      out.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      rows.sortBy(_._1).foreach { case (n, boxes) =>
-        val cells = boxes.flatMap { case (mn, mx) => Seq(mn, mx) }
-        out.write(s"$n\t${cells.mkString("\t")}\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-    } finally out.close()
-  }
-
-  /** 2-column convenience form (the guarded 2-D table's compactions). */
-  private[graft] def writeFootprintManifest(spark: SparkSession,
-      dir: String, colA: String, colB: String): Unit =
-    writeFootprintManifest(spark, dir, Seq(colA, colB))
-
-  /** The manifest's column list and per-file boxes, or None when no
-    * manifest exists (a table that has never compacted prunes nothing —
-    * correct, just not fast).
-    */
-  private[graft] def readFootprintManifest(spark: SparkSession,
-      dataDir: String): Option[(Seq[String], Map[String, Seq[(Long, Long)]])] = {
-    val fs = fsFor(spark, dataDir)
-    val p = new org.apache.hadoop.fs.Path(dataDir, ManifestFile)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split('\n').filter(_.nonEmpty).toSeq
-    if (lines.isEmpty) return None
-    val header = lines.head.split('\t')
-    if (header.length < 2 || header(0) != "# footprints v1") return None
-    val cols = header.tail.toSeq
-    val entries = lines.tail.map { l =>
-      val f = l.split('\t')
-      f(0) -> cols.indices.map(i =>
-        (f(1 + 2 * i).toLong, f(2 + 2 * i).toLong))
-    }.toMap
-    Some((cols, entries))
-  }
-
-  /** The box probe's path list: every complete data path, MINUS flat
-    * files whose manifested footprint does not intersect the probe box
-    * on EVERY probed column. Probes may use any SUBSET of the
-    * manifest's columns (a 3-D layout serves 1-D/2-D/3-D probes from
-    * one manifest); a probe on a column the manifest does not carry
-    * disables pruning wholesale — pruning on missing stats would drop
-    * live rows silently. Unmanifested paths — fresh append files,
-    * streaming `b<id>` batch dirs, anything written since the last
-    * compaction — are always kept: the manifest only ever REMOVES
-    * files it has proof about. Returns (kept, total) so callers can
-    * observe the shrink.
-    */
-  private[graft] def boxPrunedPaths(spark: SparkSession, dataDir: String,
-      probes: Seq[(String, Long, Long)]): (Seq[String], Int) = {
-    val all = completeDataPaths(spark, dataDir)
-    val pruner: Map[String, Seq[(Long, Long)]] =
-      readFootprintManifest(spark, dataDir) match {
-        case Some((cols, entries)) =>
-          val idx = probes.map { case (c, _, _) => cols.indexOf(c) }
-          if (idx.contains(-1)) Map.empty // probe on unmanifested column
-          else entries.view.mapValues(boxes => idx.map(boxes)).toMap
-        case None => Map.empty
-      }
-    val kept = all.filter { p =>
-      pruner.get(new org.apache.hadoop.fs.Path(p).getName) match {
-        case Some(boxes) =>
-          probes.zip(boxes).forall { case ((_, lo, hi), (mn, mx)) =>
-            !(hi < mn || lo > mx)
-          }
-        case None => true
-      }
-    }
-    (kept, all.size)
-  }
-
-  /** 2-D convenience form of [[boxPrunedPaths]]. */
-  private[graft] def boxPrunedPaths(spark: SparkSession, dataDir: String,
-      colA: String, loA: Long, hiA: Long, colB: String, loB: Long,
-      hiB: Long): (Seq[String], Int) =
-    boxPrunedPaths(spark, dataDir, Seq((colA, loA, hiA), (colB, loB, hiB)))
-
-  /** [[servingRead]] for a selective box probe over any subset of the
-    * manifested columns: prunes the PATH list against the footprint
-    * manifest before `spark.read` ever plans, then applies the box
-    * filter (so row-group pruning and the exact predicate still run on
-    * whatever survives). Same retry contract and same lazy-plan caveat
-    * as [[servingRead]]. Result is identical to the unpruned read
-    * under the same filter — the manifest only removes files whose
-    * persisted footprint cannot intersect the box
-    * (LayoutManifestPruningSpec proves equality and observes the
-    * shrink, in 2-D and 3-D).
-    */
-  def servingReadBoxes[A](spark: SparkSession, root: String,
-      probes: Seq[(String, Long, Long)], retries: Int = 60,
-      backoffMs: Long = 25)(use: DataFrame => A): A = {
-    require(probes.nonEmpty, "servingReadBoxes needs at least one probe")
-    val dataDir = tableDataDir(root)
-    var attempt = 0
-    while (true) {
-      try {
-        val (kept, _) = boxPrunedPaths(spark, dataDir, probes)
-        val df =
-          if (kept.isEmpty)
-            // every file pruned: an empty result with the right schema
-            // still needs SOME footer — fall back to the full listing
-            // filtered to nothing rather than inventing a schema
-            readComplete(spark, dataDir).limit(0)
-          else spark.read.parquet(kept: _*)
-        val filtered = probes.foldLeft(df) { case (d, (c, lo, hi)) =>
-          d.filter(col(c) >= lo && col(c) <= hi)
-        }
-        return use(filtered)
-      } catch {
-        case e: Throwable if attempt < retries && isTransientMissing(e) =>
-          attempt += 1
-          Thread.sleep(backoffMs)
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** 2-D convenience form of [[servingReadBoxes]]. */
-  def servingReadBox[A](spark: SparkSession, root: String, colA: String,
-      loA: Long, hiA: Long, colB: String, loB: Long, hiB: Long,
-      retries: Int = 60, backoffMs: Long = 25)(use: DataFrame => A): A =
-    servingReadBoxes(spark, root,
-      Seq((colA, loA, hiA), (colB, loB, hiB)), retries, backoffMs)(use)
 
   /** Per-file [min, max] footprints of two columns — the exact
     * information parquet stores per row group and scans prune with. A

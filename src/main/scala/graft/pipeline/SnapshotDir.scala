@@ -4,14 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The staging/swap/recovery state machine for a snapshot directory,
   * shared by the streaming sinks' key-wise merge and full-replace publish
-  * ([[graft.streaming.EventStreamPipeline]]) and the layout compactor
-  * ([[Layout.compactZorder]]): readers polling `targetDir` always see a
-  * complete snapshot (old or new), never a mid-overwrite hole.
+  * ([[graft.streaming.EventStreamPipeline]]) and the flat-directory
+  * layout compactor ([[Layout.compactZorder]]): readers polling
+  * `targetDir` always see a complete snapshot (old or new), never a
+  * mid-overwrite hole.
   *
   * The swap itself is not atomic on a plain filesystem — a reader racing
   * the two renames can observe the target momentarily absent (a real
-  * table format supplies that atomicity; these writers assume the
-  * single-writer/serving-reader split, enforced by [[WriterLease]]).
+  * table format supplies that atomicity: [[VersionedTable]] publishes
+  * by one manifest CAS instead; these writers assume a single writer
+  * per directory).
   * Crash safety: every rename's boolean result is checked (Hadoop
   * `rename` reports failure by returning false, not throwing); a crash
   * between the two renames leaves the only complete snapshot in

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** A SNAPSHOT-VERSIONED table — the Iceberg/Delta architecture in
-  * miniature, and the design point the [[SnapshotDir]]-swapped guarded
-  * table cannot reach: data files are IMMUTABLE and uniquely named,
+  * miniature, and the design point a [[SnapshotDir]]-swapped directory
+  * cannot reach: data files are IMMUTABLE and uniquely named,
   * each version is described by a small metadata tree, and a version
   * becomes visible through ONE atomic compare-and-swap publish of its
   * root. That single publish point buys, all at once:
@@ -16,7 +16,7 @@ import org.apache.spark.sql.graftbridge.DatasetBridge
   *    latest manifest list, then reads files that can never be renamed
   *    or deleted out from under it (until a vacuum past its retention
   *    window) — no transient-missing retry loop, no swap gap, no torn
-  *    batches. The guarded table's `servingRead` needs all three.
+  *    batches.
   *  - **Lock-free OPTIMISTIC writers.** No writer takes a lock, ever:
   *    each writes its immutable data files, then attempts to publish
   *    `manifests/v<k>` with an exclusive create-if-absent (the CAS).
@@ -1337,12 +1337,14 @@ object VersionedTable {
     }
   }
 
-  /** Rewrite the base snapshot z-ordered by the table's first two
-    * stat columns into `nFiles` files, published as a new version.
-    * Historical versions keep reading the old files until [[vacuum]]
-    * reclaims them. Compaction is ALSO the metadata compactor: the new
-    * version's list is one shard (plus any since-base carries) however
-    * many shards the base had.
+  /** Rewrite the base snapshot z-ordered into `nFiles` files,
+    * published as a new version. `by` names two or three of the
+    * table's long stat columns ([[Layout.zorderBy]]: a 2-D or 3-D
+    * z-value); empty means its first two. Historical versions keep
+    * reading the old files until [[vacuum]] reclaims them. Compaction
+    * is ALSO the metadata compactor: the new version's list is one
+    * shard (plus any since-base carries) however many shards the base
+    * had.
     *
     * CONCURRENCY: compaction commutes with appends — a lost CAS
     * rebases by carrying every SHARD added since its base snapshot
@@ -1356,23 +1358,17 @@ object VersionedTable {
     * base the conflict check degrades to "any concurrent commit
     * restarts the compaction" (shard identity does not exist yet).
     */
-  def compactZorder(spark: SparkSession, root: String, nFiles: Int): Long = {
+  def compactZorder(spark: SparkSession, root: String, nFiles: Int,
+      by: Seq[String] = Seq.empty): Long = {
     val (v0, m0) = latestManifest(spark, root).getOrElse(
       sys.error(s"nothing to compact at $root"))
-    require(m0.statCols.size >= 2,
-      "z-order compaction needs two stat columns")
-    val Seq(a, b) = m0.statCols.take(2)
-    // same expression-keyed range exchange as Layout.zorderWrite —
-    // the z key routes and sorts rows without crossing the wire;
-    // the write target is the scratch dir writeFiles moves from
-    compactRewrite(spark, root, v0, m0, d => {
-      val bounds = d.agg(min(col(a)), max(col(a)), min(col(b)),
-        max(col(b))).head.toSeq.map(_.asInstanceOf[Long])
-      val z = Layout.zvalue16(
-        Layout.scale16(col(a), bounds(0), bounds(1)),
-        Layout.scale16(col(b), bounds(2), bounds(3)))
-      d.repartitionByRange(nFiles, z).sortWithinPartitions(z)
-    })
+    val cols = if (by.isEmpty) m0.statCols.take(2) else by
+    require(cols.size >= 2 && cols.size <= 3 && cols.distinct == cols &&
+      cols.forall(m0.statCols.contains),
+      s"z-order compaction needs two or three distinct stat columns of " +
+        s"${m0.statCols.mkString("[", ", ", "]")}, got " +
+        cols.mkString("[", ", ", "]"))
+    compactRewrite(spark, root, v0, m0, Layout.zorderBy(_, cols, nFiles))
   }
 
   /** Rewrite the base snapshot range-CLUSTERED by arbitrary columns —

@@ -4,9 +4,8 @@ import graft.pipeline.VersionedTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
-/** Structured Streaming ingest into a [[VersionedTable]] — the
-  * versioned-table twin of [[StreamingZorderIngest]], with a simpler
-  * exactly-once story: each micro-batch appends THROUGH
+/** Structured Streaming ingest into a [[VersionedTable]], with a
+  * simple exactly-once story: each micro-batch appends THROUGH
   * [[VersionedTable.appendBatch]], which records the batch id as an
   * ingest frontier inside the same atomically-published manifest as
   * the data. A batch crashed after its append but before the

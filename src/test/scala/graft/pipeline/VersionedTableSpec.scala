@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[VersionedTable]] — the manifest-published snapshot architecture:
-  * immutable files + one atomic rename per version. The properties the
-  * directory-swapped guarded table cannot offer, each proven here:
+  * immutable files + one atomic rename per version. The properties a
+  * directory-swapped table cannot offer, each proven here:
   * lock-free snapshot-isolated readers (the racing reader uses NO
   * retry logic at all), time travel, crash-published-nothing, vacuum
   * with a retention window, and manifest-native stats pruning.
@@ -538,7 +538,7 @@ class VersionedTableSpec extends AnyFunSuite {
         while (!done.get() && failure.get() == null) {
           val ackedBefore = acked.get()
           if (ackedBefore > 0) {
-            // deliberately NO servingRead-style retry: immutable files +
+            // deliberately NO retry loop: immutable files +
             // atomic manifest publish mean a plain read is always sound
             val ids = VersionedTable.read(spark, root)
               .select($"event_id").collect().map(_.getLong(0))
