@@ -681,13 +681,21 @@ object VersionedTable {
   }
 
   /** Write `df`'s rows as new immutable files and return their
-    * (name, footprints) entries — the shared data path of append and
-    * compact. The parquet job writes into a scratch dir; the part
+    * (name, footprints) entries — the shared data path of every commit
+    * (append, upsert, MERGE/UPDATE, COW delete, materialize and
+    * compaction). The parquet job writes into a scratch dir; the part
     * files are then MOVED into `files/` under a fresh uuid prefix.
     * Nothing is visible to readers until some manifest names them.
     * When a typed column is a TIMESTAMP and the session writes INT96,
     * `df`'s plan is re-bound into a clone of the session that writes
     * INT64 micros; every other write runs on `df`'s own session.
+    *
+    * FILE COUNT: one file per partition of `shape(df)` after
+    * [[rightSized]] — a frame that asks for no layout is coalesced into
+    * `ceil(estimate / spark.sql.files.maxPartitionBytes)` files (at
+    * least one), so a small write lands as one file, not one runt per
+    * input partition; a frame that states a layout (`shape`, or the
+    * caller's own repartition/sort) keeps its partitioning.
     */
   private def writeFiles(df: DataFrame, root: String,
       statCols: Seq[String], typed: Seq[TypedCol] = Seq.empty,
@@ -717,7 +725,7 @@ object VersionedTable {
     // an equality lookup on an unclustered stat column skips files the
     // [min,max] box cannot rule out
     (statCols ++ typed.map(_.name))
-      .foldLeft(shape(src).write.mode("overwrite")) {
+      .foldLeft(rightSized(shape(src), statCols).write.mode("overwrite")) {
         (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
       }
       .parquet(stage)
@@ -762,6 +770,65 @@ object VersionedTable {
           "the moved files are unreferenced and will be vacuumed.")
     dataFiles.map { case (name, rows, boxes, tb, nulls) =>
       Entry(name, rows, boxes.get, sizes.getOrElse(name, -1L), tb, nulls)
+    }
+  }
+
+  /** The file-count rule of [[writeFiles]]. A frame keeps its
+    * partitioning, one file per partition, when its analyzed plan
+    * reaches through narrow `Project`/`Filter` nodes only
+    *  - an explicit `Repartition`, `RepartitionByExpression`,
+    *    `RebalancePartitions` or `Sort`: the write stated its layout (a
+    *    cluster spec, `compactZorder`'s z-ranges, `compactSmallFiles`'
+    *    range packing, or a caller's own
+    *    `repartitionByRange(8, f).drop("f")`);
+    *  - a scan of files whose footer boxes are pairwise disjoint on one
+    *    of `statCols`: a rewrite of a range-laid-out table, whose files
+    *    would prune less once merged.
+    * Any other frame is coalesced into `n = ceil(estimate /
+    * spark.sql.files.maxPartitionBytes)` partitions, at least one, so
+    * each written file is about one read split. The estimate is the
+    * optimizer's `sizeInBytes`, which runs no job. Coalescing into at
+    * least as many partitions as the frame has changes nothing, and an
+    * estimate Spark cannot make (a checkpointed or streamed relation
+    * reads as `Long.MaxValue`) leaves the frame as it is.
+    */
+  private def rightSized(df: DataFrame, statCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter,
+      LogicalPlan, Project, RebalancePartitions, Repartition,
+      RepartitionByExpression, Sort}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    @annotation.tailrec
+    def source(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => source(child)
+      case Filter(_, child) => source(child)
+      case other => other
+    }
+    val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    val n = ((df.queryExecution.optimizedPlan.stats.sizeInBytes +
+      target - 1) / target).max(1)
+    val keep = n >= Int.MaxValue || (source(df.queryExecution.analyzed) match {
+      case _: Repartition | _: RepartitionByExpression |
+           _: RebalancePartitions | _: Sort => true
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        val files = fs.location.inputFiles.toSeq
+        files.size > n && rangeDisjoint(df.sparkSession, files, statCols)
+      case _ => false
+    })
+    if (keep) df else df.coalesce(n.toInt)
+  }
+
+  /** True iff the files' footer [min, max] boxes are pairwise disjoint
+    * on at least one of `statCols` (a file NULL in every row of that
+    * column overlaps nothing).
+    */
+  private def rangeDisjoint(spark: SparkSession, files: Seq[String],
+      statCols: Seq[String]): Boolean = {
+    val boxes = Layout.footerStatsTyped(spark, files, statCols, Seq.empty)
+      .flatMap(_._3)
+    boxes.size == files.size && statCols.indices.exists { i =>
+      val sorted = boxes.map(_(i)).filter(b => b._1 <= b._2).sortBy(_._1)
+      sorted.zip(sorted.drop(1)).forall { case (a, b) => a._2 < b._1 }
     }
   }
 
@@ -964,6 +1031,12 @@ object VersionedTable {
     * `statCols` (the columns later [[boxRead]] probes can prune on).
     * Returns the published version id. The first append fixes the
     * table's stat columns; later appends must state the same list.
+    * Files written: one per `ceil(estimate /
+    * spark.sql.files.maxPartitionBytes)` (at least one) when `df`
+    * states no layout, so a small append is one file whatever `df`'s
+    * partition count; a `df` whose plan ends in a repartition or sort
+    * (under `select`/`drop`/`filter` only) keeps one file per partition
+    * (see [[writeFiles]]).
     */
   def append(df: DataFrame, root: String, statCols: Seq[String]): Long =
     appendBatch(df, root, statCols, ingestBatch = -1L)

@@ -383,7 +383,9 @@ class VersionedTableConcurrencySpec extends AnyFunSuite {
 
   test("binpack ∥ append: the pack loses the CAS, rebases, and carries the racer's shard by reference") {
     val root = freshRoot("pack-app")
-    (0 until 6).foreach(k => VersionedTable.append(rows(k, 50), root, Stats))
+    // four runts per append: the pack's inputs
+    (0 until 6).foreach(k =>
+      VersionedTable.append(rows(k, 50).repartition(4), root, Stats))
     VersionedTable.beforePublishHook.set(() => {
       VersionedTable.append(rows(10, 50), root, Stats)
       ()

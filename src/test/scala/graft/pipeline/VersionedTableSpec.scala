@@ -630,7 +630,9 @@ class VersionedTableSpec extends AnyFunSuite {
   test("shard lines record minRows; pre-minRows lines still pack via the open-the-shard fallback") {
     val root = java.nio.file.Files.createTempDirectory("graft-vt-minrows")
       .resolve("t").toString
-    (0 until 3).foreach(k => VersionedTable.append(rows(k, 50), root, Stats))
+    // four runts per append: the pack's inputs
+    (0 until 3).foreach(k =>
+      VersionedTable.append(rows(k, 50).repartition(4), root, Stats))
     val mPath = java.nio.file.Paths.get(
       s"$root/manifests/v${VersionedTable.latestVersion(spark, root).get}")
     val shardLines = java.nio.file.Files.readAllLines(mPath)
