@@ -695,7 +695,8 @@ object VersionedTable {
     * `ceil(estimate / spark.sql.files.maxPartitionBytes)` files (at
     * least one), so a small write lands as one file, not one runt per
     * input partition; a frame that states a layout (`shape`, or the
-    * caller's own repartition/sort) keeps its partitioning.
+    * caller's own repartition/sort) and a rewrite of files with
+    * disjoint stat ranges keep their partitioning.
     */
   private def writeFiles(df: DataFrame, root: String,
       statCols: Seq[String], typed: Seq[TypedCol] = Seq.empty,
@@ -1031,12 +1032,11 @@ object VersionedTable {
     * `statCols` (the columns later [[boxRead]] probes can prune on).
     * Returns the published version id. The first append fixes the
     * table's stat columns; later appends must state the same list.
-    * Files written: one per `ceil(estimate /
-    * spark.sql.files.maxPartitionBytes)` (at least one) when `df`
-    * states no layout, so a small append is one file whatever `df`'s
-    * partition count; a `df` whose plan ends in a repartition or sort
-    * (under `select`/`drop`/`filter` only) keeps one file per partition
-    * (see [[writeFiles]]).
+    * Files written: `ceil(estimate / spark.sql.files.maxPartitionBytes)`
+    * (at least one) when `df` states no layout, so a small append is
+    * one file whatever `df`'s partition count; a `df` whose plan ends in
+    * a repartition or sort (under `select`/`drop`/`filter` only) keeps
+    * one file per partition (see [[writeFiles]]).
     */
   def append(df: DataFrame, root: String, statCols: Seq[String]): Long =
     appendBatch(df, root, statCols, ingestBatch = -1L)
