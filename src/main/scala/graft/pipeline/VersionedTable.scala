@@ -790,8 +790,9 @@ object VersionedTable {
     * each written file is about one read split. The estimate is the
     * optimizer's `sizeInBytes`, which runs no job. Coalescing into at
     * least as many partitions as the frame has changes nothing, and an
-    * estimate Spark cannot make (a checkpointed or streamed relation
-    * reads as `Long.MaxValue`) leaves the frame as it is.
+    * estimate Spark cannot make (an RDD-backed relation, such as a
+    * checkpointed frame, reads as `Long.MaxValue`) leaves the frame as
+    * it is.
     */
   private def rightSized(df: DataFrame, statCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter,
